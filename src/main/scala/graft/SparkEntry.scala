@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * The flagship oracle `q_pipeline_triples` is end-to-end and non-circular:
   * DuckDB independently re-derives the triple set from the raw docs + alias
   * fixtures with pure SQL, and must match the full Spark pipeline
-  * (extraction → linking → CC canonicalization → materialize → triple view).
+  * (extraction → linking → group-min canonicalization → materialize →
+  * triple view).
   */
 object SparkEntry {
 

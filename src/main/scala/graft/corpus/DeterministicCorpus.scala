@@ -20,8 +20,8 @@ final case class AliasRow(alias: String, canonical: String, prior: Double, alias
   *   - invalid open-path candidates (short/special-char/all-caps names) that
   *     isValidConcept must drop (graph.go:225-265),
   *   - a lowercase un-aliased variant of one concept (ccBaitName) whose node
-  *     only canonicalizes through connected components (the reference's
-  *     duplicate-node fix, /root/reference/internal/common/neo4j/neo4j.go:386-451).
+  *     only merges through the normalized-name group-min (the reference's
+  *     duplicate-node fix, internal/common/neo4j/neo4j.go:386-451).
   */
 object DeterministicCorpus extends Serializable {
 
@@ -71,7 +71,7 @@ object DeterministicCorpus extends Serializable {
 
   /** Alias dictionary derived from golden node names: identity + lowercase +
     * unique acronyms; the lowercase alias of `ccBaitName` is withheld so its
-    * lowercase occurrences exercise the CC canonicalization path. */
+    * lowercase occurrences exercise the group-min canonicalization path. */
   def aliasRows(names: Seq[String], ccBaitName: String): Vector[AliasRow] = {
     val nameSet = names.toSet
     val acr = names.flatMap(n => acronym(n).map(_ -> n))

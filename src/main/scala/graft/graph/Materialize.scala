@@ -1,6 +1,5 @@
 package graft.graph
 
-import graft.canon.ConnectedComponents
 import graft.functions.BoundedCollectList.bounded_collect_list
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,21 +9,20 @@ import org.apache.spark.sql.functions._
   *
   * - node identity: stable content hash of the name (`xxhash64`), with
   *   grounded (dictionary) entities placed in a LOWER id band than open-path
-  *   candidate entities, so the connected-components keep-lowest-id rule
-  *   (the reference's FixDuplicateNodes,
-  *   /root/reference/internal/common/neo4j/neo4j.go:386-451) always elects a
-  *   grounded representative when one exists.
-  * - duplicate canonicalization: equivalence edges between names sharing a
-  *   normalized form, closed transitively — iterative DataFrame CC at scale,
-  *   driver union-find when the equivalence set is dictionary-sized.
+  *   candidate entities, so the keep-lowest-id rule (the reference's
+  *   FixDuplicateNodes, internal/common/neo4j/neo4j.go:386-451) always
+  *   elects a grounded representative when one exists.
+  * - duplicate canonicalization: one group-min per normalized name.
   * - edge materialization: MERGE-by-key semantics (S11: key (src,dst,pred))
   *   as ONE hash aggregate whose per-group state is bounded: count/sum are
   *   map-side combined, and provenance exemplars use the custom
   *   [[graft.functions.BoundedCollectList]] aggregate, so hub edges at web
   *   scale can't blow an aggregation buffer or skew a reducer with giant
-  *   arrays (the buffer is capped on the map side too).
+  *   arrays (the buffer is capped on the map side too). The aggregate also
+  *   carries both endpoint names, so the edges, nodes and triples-view
+  *   tables are all read off that one frame.
   * - cleanup: empty-predicate edges (G3) are filtered upstream; orphan nodes
-  *   (G4) dropped with a left-semi join against the materialized edges.
+  *   (G4) never arise: nodes are grouped from the edges' endpoints.
   */
 object Materialize {
 
@@ -48,69 +46,28 @@ object Materialize {
   final case class Graph(nodes: DataFrame, edges: DataFrame)
 
   /** The canonicalization map: one row per distinct raw name →
-    * (name, rep_id, rep_name). Small (dictionary-scale), localCheckpointed. */
+    * (name, rep_id, rep_name). Small (dictionary-scale), localCheckpointed.
+    *
+    * The equivalence is "same normalized name", a blocking key: every
+    * `normName` group is already closed under it, so each component is
+    * exactly its group and the representative is the group's min
+    * (node_id, name) — ONE aggregate, no transitive closure to run. */
   def canonicalize(spark: SparkSession, linked: DataFrame, aliases: DataFrame): DataFrame = {
-    val canonSet = aliases.select(col("canonical").as("gname")).distinct()
-
-    // one scan: both endpoint columns exploded together
-    val names = linked
-      .select(explode(array(col("subj"), col("obj"))).as("name")).distinct()
-    val withId = names
-      .join(broadcast(canonSet), col("name") === col("gname"), "left")
-      .withColumn("grounded", col("gname").isNotNull).drop("gname")
-      .withColumn("node_id", nodeId(col("name"), col("grounded")))
-      .localCheckpoint()
-
-    // equivalence edges: same normalized name → star to the group min id;
-    // transitive closure (e.g. future linker same-entity verdicts) via CC.
-    val grp = withId.groupBy(normName(col("name")).as("nk"))
-      .agg(min(col("node_id")).as("root"), count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-    val eqEdges = withId.withColumn("nk", normName(col("name")))
-      .join(grp, "nk")
-      .filter(col("node_id") =!= col("root"))
-      .select(col("node_id").as("src"), col("root").as("dst"))
-
-    // the iterative DataFrame CC is the scale path; a dictionary-sized
-    // equivalence set (the common case) collapses on the driver instead of
-    // paying several shuffle rounds of scheduler latency.
-    val eqLocal = eqEdges.limit(10001).collect()
-    val comp =
-      if (eqLocal.length <= 10000) {
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElse(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        eqLocal.foreach { r =>
-          val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-          if (a != b) parent(math.max(a, b)) = math.min(a, b)
-        }
-        import spark.implicits._
-        val mapping = parent.keys.map(k => (k, find(k))).toSeq.toDF("node_id", "component")
-        withId.select("node_id").join(broadcast(mapping), Seq("node_id"), "left")
-          .select(col("node_id"), coalesce(col("component"), col("node_id")).as("component"))
-      } else ConnectedComponents.assign(spark, withId.select("node_id"), eqEdges)
-
-    val canonMap = withId.join(comp, "node_id")
-    val repNames = canonMap.filter(col("node_id") === col("component"))
-      .select(col("component").as("rep_id"), col("name").as("rep_name"))
-    canonMap.join(repNames, col("component") === col("rep_id"))
-      .select(col("name"), col("rep_id"), col("rep_name"))
+    // duplicate canonicals only repeat a name's row; min and collect_set
+    // absorb them, so the alias side needs no distinct (and no shuffle)
+    val grounded = aliases.select(col("canonical").as("gname"))
+    linked
+      .select(explode(array(col("subj"), col("obj"))).as("name"))
+      .join(broadcast(grounded), col("name") === col("gname"), "left")
+      .groupBy(normName(col("name")))
+      .agg(
+        min(struct(nodeId(col("name"), col("gname").isNotNull).as("id"), col("name")))
+          .as("rep"),
+        collect_set(col("name")).as("names"))
+      .select(explode(col("names")).as("name"),
+        col("rep.id").as("rep_id"), col("rep.name").as("rep_name"))
       .localCheckpoint() // small: one row per distinct raw name
   }
-
-  /** Edge materialization: remap endpoints through the (broadcast) resolve
-    * map, then a single bounded hash aggregate per (src,dst,pred).
-    *
-    * `description` mirrors the reference's relationship Description with
-    * MERGE-on-create semantics (ON CREATE SET r.description,
-    * /root/reference/internal/common/neo4j/neo4j.go:107-151): the canonical
-    * sentence rendering "<rep subj> <pred verbatim> <rep obj>". The key
-    * fixes all three parts, so it is constant per edge and any later merge
-    * keeps it unchanged — exactly "first writer wins", batch-deterministic. */
-  def buildEdges(linked: DataFrame, resolve: DataFrame): DataFrame =
-    buildEdgesAgg(preAggregate(linked), resolve)
 
   /** Stage A of edge materialization: collapse the corpus-sized linked
     * stream to ONE row per raw (subj, pred, obj) in a single bounded hash
@@ -174,8 +131,19 @@ object Materialize {
     * merged sorted-then-capped, so the kept set is deterministic (the
     * ProvenanceCap smallest (doc_id, span_idx) entries); the collect_list
     * here buffers at most #variant-groups × ProvenanceCap structs per edge
-    * on dictionary-scale data. */
-  def buildEdgesAgg(preAgg: DataFrame, resolve: DataFrame): DataFrame = {
+    * on dictionary-scale data.
+    *
+    * `description` mirrors the reference's relationship Description with
+    * MERGE-on-create semantics (ON CREATE SET r.description,
+    * internal/common/neo4j/neo4j.go:107-151): the canonical sentence
+    * rendering "<rep subj> <pred verbatim> <rep obj>". The key fixes all
+    * three parts, so it is constant per edge and any later merge keeps it
+    * unchanged — exactly "first writer wins", batch-deterministic.
+    *
+    * The result is the edges table plus `src_name`/`dst_name` (each is
+    * constant per rep id); [[edgesTable]], [[nodesOf]] and [[triplesOf]]
+    * read the three output tables off it. */
+  def namedEdges(preAgg: DataFrame, resolve: DataFrame): DataFrame = {
     val subjMap = resolve.select(col("name").as("subj"),
       col("rep_id").as("src_id"), col("rep_name").as("src_name"))
     val objMap = resolve.select(col("name").as("obj"),
@@ -187,6 +155,8 @@ object Materialize {
         concat_ws(" ", col("src_name"), col("pred"), col("dst_name")))
       .groupBy(col("src_id"), col("dst_id"), col("pred"))
       .agg(
+        min(col("src_name")).as("src_name"),
+        min(col("dst_name")).as("dst_name"),
         sum(col("n_obs")).as("n_obs"),
         sum(col("score_sum")).as("score_sum"),
         min(col("desc")).as("description"),
@@ -195,45 +165,54 @@ object Materialize {
       .withColumn("pred_norm", normPred(col("pred")))
       .withColumn("strength", round(col("score_sum") / col("n_obs"), 6))
       .withColumn("created_at", CreatedAt)
-      .select("src_id", "dst_id", "pred", "pred_norm", "strength", "n_obs",
-        "description", "provenance", "created_at")
+      .select((EdgeColumns :+ "src_name" :+ "dst_name").map(col): _*)
   }
 
-  /** Node table from component representatives; G4 orphan drop against the
-    * MATERIALIZED edges (no recompute of the edge aggregate).
+  val EdgeColumns: Seq[String] = Seq("src_id", "dst_id", "pred", "pred_norm",
+    "strength", "n_obs", "description", "provenance", "created_at")
+
+  /** The edges table: a column projection of [[namedEdges]]. */
+  def edgesTable(named: DataFrame): DataFrame = named.select(EdgeColumns.map(col): _*)
+
+  /** The edges table straight from the pre-aggregate. */
+  def buildEdgesAgg(preAgg: DataFrame, resolve: DataFrame): DataFrame =
+    edgesTable(namedEdges(preAgg, resolve))
+
+  /** Node table: every edge endpoint once, under its rep name. Nodes are
+    * exactly the edge-touched reps, so there are no orphans to drop (G4).
     *
     * Node `description` = the lexicographically-first evidence sentence
     * among the node's incident edges (the reference's Concept.Description
     * is LLM-authored; a deterministic MERGE-on-create analog needs a stable
     * pick order, and evidence order is engine-reproducible). */
-  def buildNodes(resolve: DataFrame, edgesT: DataFrame): DataFrame = {
-    val incident = edgesT.select(col("src_id").as("node_id"), col("description"))
-      .unionAll(edgesT.select(col("dst_id").as("node_id"), col("description")))
-    val descs = incident.groupBy("node_id").agg(min("description").as("description"))
-    resolve.select(col("rep_id").as("node_id"), col("rep_name").as("name"))
-      .distinct()
-      .withColumn("canonical_name", col("name"))
-      .withColumn("created_at", CreatedAt)
-      // inner join = G4 orphan drop (descs only holds edge-touched nodes)
-      // and description attach in one pass
-      .join(descs, Seq("node_id"))
-      .select("node_id", "name", "canonical_name", "description", "created_at")
-  }
-
-  /** Legacy single-call build (tests / small corpora). */
-  def build(spark: SparkSession, linked: DataFrame, aliases: DataFrame): Graph = {
-    val resolve = canonicalize(spark, linked, aliases)
-    val edges = buildEdges(linked, resolve).localCheckpoint()
-    Graph(buildNodes(resolve, edges), edges)
-  }
+  def nodesOf(named: DataFrame): DataFrame =
+    named.select(col("src_id").as("node_id"), col("src_name").as("name"), col("description"))
+      .unionAll(named.select(col("dst_id"), col("dst_name"), col("description")))
+      .groupBy("node_id", "name")
+      .agg(min("description").as("description"))
+      .select(col("node_id"), col("name"), col("name").as("canonical_name"),
+        col("description"), CreatedAt.as("created_at"))
 
   /** The canonical triple read used for P/R comparison (F6 — mirrors
     * RETURN a.name, r.type, b.name;
-    * /root/reference/kg-builder/internal/neo4j/neo4j.go:253-283). */
-  def triplesView(g: Graph): DataFrame = {
-    val n1 = g.nodes.select(col("node_id").as("src_id"), col("name").as("subj"))
-    val n2 = g.nodes.select(col("node_id").as("dst_id"), col("name").as("obj"))
-    g.edges.join(broadcast(n1), "src_id").join(broadcast(n2), "dst_id")
-      .select(col("subj"), col("pred_norm"), col("obj")).distinct()
-  }
+    * kg-builder/internal/neo4j/neo4j.go:253-283). */
+  def triplesOf(named: DataFrame): DataFrame =
+    named.select(col("src_name").as("subj"), col("pred_norm"), col("dst_name").as("obj"))
+      .distinct()
+
+  /** `edges` with `src_name`/`dst_name` attached from an (id, name) map. */
+  private def withNames(edges: DataFrame, names: DataFrame): DataFrame =
+    edges
+      .join(broadcast(names.toDF("src_id", "src_name")), "src_id")
+      .join(broadcast(names.toDF("dst_id", "dst_name")), "dst_id")
+
+  /** [[nodesOf]] over a materialized edges table. A merged group repeats
+    * its (rep_id, rep_name) once per raw name, which only repeats edges in
+    * the join; the node group-by absorbs them, so no distinct is needed. */
+  def buildNodes(resolve: DataFrame, edgesT: DataFrame): DataFrame =
+    nodesOf(withNames(edgesT, resolve.select("rep_id", "rep_name")))
+
+  /** [[triplesOf]] over a materialized graph. */
+  def triplesView(g: Graph): DataFrame =
+    triplesOf(withNames(g.edges, g.nodes.select("node_id", "name")))
 }

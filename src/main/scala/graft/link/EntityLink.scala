@@ -40,11 +40,11 @@ object EntityLink {
 
   /** True iff some alias maps to >1 canonical — the gate between the
     * per-surface fast link (canonical + score are pure functions of the
-    * surface string) and the per-document contextual slow path. ONE tiny
-    * aggregate job over the dictionary-sized alias table. */
-  def hasAmbiguity(aliases: DataFrame): Boolean =
-    aliases.groupBy("alias").agg(countDistinct("canonical").as("n_cands"))
-      .filter(col("n_cands") > 1).limit(1).count() > 0
+    * surface string) and the per-document contextual slow path. A pure
+    * function of the dictionary's (alias, canonical) pairs, which the
+    * driver already holds for the automaton. */
+  def hasAmbiguity(pairs: Seq[(String, String)]): Boolean =
+    pairs.groupBy(_._1).exists(_._2.map(_._2).distinct.length > 1)
 
   /** Per-surface resolution of both roles over an ALREADY-AGGREGATED frame
     * (one row per distinct raw (subj, pred, obj)) — valid ONLY when

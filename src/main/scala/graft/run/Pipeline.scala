@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *   docs (bucketized ingest, repartitionByRange)
   *     → extract   (bucket-granular resume; mention detect + OpenIE kernels)
   *     → link      (broadcast alias join + candidate gate + disambiguation)
-  *     → graph     (CC canonicalization, salted edge MERGE, cleanup)
+  *     → graph     (group-min canonicalization, edge MERGE, cleanup)
   *     → snapshots (nodes / edges / triples_view Iceberg-style tables)
   *
   * Every stage leaves per-partition lineage + counters in checkpoint
@@ -86,6 +86,9 @@ object Pipeline {
     phase("ensureCorpus")(ensureCorpus(spark, c))
 
     val aliases = phase("aliases")(spark.read.parquet(aliasesPath(c)))
+    // one read of the docs for every use below: each parquet read infers its
+    // schema in a Spark job of its own
+    val docs = spark.read.parquet(docsDir(c))
     // (alias, canonical) pairs: the automaton dictionary AND the ambiguity
     // gate come from one dictionary-scale collect — the gate used to be a
     // separate Spark aggregate job in the fixed tail (r07)
@@ -114,8 +117,8 @@ object Pipeline {
     }
     val raw =
       if (c.fastExtract) {
-        val docs = spark.read.parquet(docsDir(c)).drop("bucket")
-        if (typedPath) typedRaw(docs) else Extract.rawTriplesCols(docs, dict, predGrammar)
+        val in = docs.drop("bucket")
+        if (typedPath) typedRaw(in) else Extract.rawTriplesCols(in, dict, predGrammar)
       } else {
         // resumable path: per-bucket extraction snapshots (one extra corpus
         // write+read buys partition-granular restart); the typed escape
@@ -136,15 +139,14 @@ object Pipeline {
     // per-corpus-row work drops to filter + hash-aggregate update (r07,
     // guide §8). With ambiguity the original per-row contextual link runs
     // (TF-IDF context scoring needs the document, not just the surface).
-    val unambiguous = phase("linkPlan")(
-      !aliasPairs.groupBy(_._1).exists(_._2.map(_._2).distinct.length > 1))
+    val unambiguous = phase("linkPlan")(!EntityLink.hasAmbiguity(aliasPairs))
     val pre = phase("extractLinkAgg") {
       val plan =
         if (unambiguous)
           Materialize.preAggregateBySurface(
             raw.filter(graft.extract.Validity.validPred(col("pred"))), aliases)
         else {
-          val docsText = spark.read.parquet(docsDir(c))
+          val docsText = docs
             .select(col("doc_id"), explode(col("spans")).as("s"))
             .filter(col("s.kind") === "text")
             .select(col("doc_id"), col("s.text").as("text"))
@@ -153,24 +155,21 @@ object Pipeline {
       plan.localCheckpoint()
     }
 
-    // stage 3: canonicalize + materialize on the pre-aggregate. Each table
-    // is localCheckpoint'ed once (these are dictionary-scale frames), the
-    // snapshot commit writes FROM the checkpoint, and downstream stages
-    // reuse the same checkpointed frame — identical rows to a read-back of
-    // the committed snapshot, without re-scanning what was just written
-    // (two read-back jobs per run saved; resume still reads the snapshots).
+    // stage 3: canonicalize + materialize on the pre-aggregate. The named
+    // edge aggregate is localCheckpoint'ed once (dictionary-scale); each
+    // snapshot is written straight from it — edges as a projection, nodes
+    // and the triples view as one small aggregate each — and the returned
+    // tables are the same plans over the checkpoint (no read-back).
     val resolve = phase("canonicalize")(Materialize.canonicalize(spark, pre, aliases))
-    val edgesT = phase("edgesCommit") {
-      val t = Materialize.buildEdgesAgg(pre, resolve).localCheckpoint()
-      TableIO.commitSnapshot(t, edgesDir(c), "edges"); t
+    val named = phase("edgesCommit") {
+      val t = Materialize.namedEdges(pre, resolve).localCheckpoint()
+      TableIO.commitSnapshot(Materialize.edgesTable(t), edgesDir(c), "edges"); t
     }
-    val nodesT = phase("nodesCommit") {
-      val t = Materialize.buildNodes(resolve, edgesT).localCheckpoint()
-      TableIO.commitSnapshot(t, nodesDir(c), "nodes"); t
-    }
-    val tv = Materialize.triplesView(Materialize.Graph(nodesT, edgesT))
+    val nodesT = Materialize.nodesOf(named)
+    phase("nodesCommit")(TableIO.commitSnapshot(nodesT, nodesDir(c), "nodes"))
+    val tv = Materialize.triplesOf(named)
     phase("triplesCommit")(TableIO.commitSnapshot(tv, triplesDir(c), "triples_view"))
 
-    Out(spark.read.parquet(docsDir(c)), nodesT, edgesT, tv)
+    Out(docs, nodesT, Materialize.edgesTable(named), tv)
   }
 }

@@ -79,8 +79,10 @@ class EntityLinkSpec extends SparkSuite {
     // row for row — n_obs, provenance (exact), score_sum (up to the same
     // FP summation wiggle round(…,6) already absorbs; compared at 1e-9)
     val unambiguous = aliases.filter($"alias" =!= "Mercury")
-    assert(!EntityLink.hasAmbiguity(unambiguous))
-    assert(EntityLink.hasAmbiguity(aliases))
+    def pairs(a: org.apache.spark.sql.DataFrame) =
+      a.select("alias", "canonical").as[(String, String)].collect().toSeq
+    assert(!EntityLink.hasAmbiguity(pairs(unambiguous)))
+    assert(EntityLink.hasAmbiguity(pairs(aliases)))
     val rng = new scala.util.Random(7)
     val surfaces = Seq("Machine Learning", "machine learning", "ML",
       "Artificial Intelligence", "Gradient Descent", "Xq#z", "ab")

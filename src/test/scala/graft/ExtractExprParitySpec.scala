@@ -139,6 +139,32 @@ class ExtractExprParitySpec extends SparkSuite {
     }
   }
 
+  test("off-heap base = null overload == byte[] overload (off-heap column vectors)") {
+    // the shape an off-heap ColumnVector's UTF8String hands the kernel: a
+    // null base object and an absolute address
+    import org.apache.spark.unsafe.Platform
+    val bac = ByteAhoCorasick(aliases ++ preds)
+    val sc1 = new graft.extract.MatchScratch
+    val sc2 = new graft.extract.MatchScratch
+    val texts = Check.samples(sentence, 200) ++ Seq(
+      "", "Machine Learning uses AI",
+      "中文概念 uses 中文概念. Ångström Synthesis extends Deep Learning Systems")
+    texts.foreach { t =>
+      val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val addr = Platform.allocateMemory(math.max(b.length, 1).toLong)
+      try {
+        Platform.copyMemory(b, Platform.BYTE_ARRAY_OFFSET.toLong, null, addr, b.length.toLong)
+        val k1 = bac.leftmostLongestInto(b, b.length, sc1)
+        val k2 = bac.leftmostLongestInto(null, addr, b.length, sc2)
+        assert(k2 == k1, s"count mismatch on '$t'")
+        (0 until k1).foreach { i =>
+          assert(sc2.starts(i) == sc1.starts(i) && sc2.ends(i) == sc1.ends(i) &&
+            sc2.pats(i) == sc1.pats(i), s"hit $i mismatch on '$t'")
+        }
+      } finally Platform.freeMemory(addr)
+    }
+  }
+
   test("null spans array and null span elements yield zero triples, both eval paths") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

@@ -10,7 +10,16 @@ import org.apache.spark.sql.functions._
   * build, query, mutate (snapshot-append), enrich, export, time-travel.
   *
   * All mutations go through snapshot commits: readers never observe a
-  * partial write, and every prior state stays addressable. */
+  * partial write, and every prior state stays addressable.
+  *
+  * Reads are pinned per snapshot: [[nodes]], [[edges]] and [[triples]]
+  * each keep the frame of the snapshot they last read, localCheckpointed
+  * once, and reuse it while the table's CURRENT still names that snapshot
+  * (snapshots are immutable). Freshness comes from re-reading CURRENT, one
+  * small file, on every access: a commit by any writer — this session, the
+  * enricher's thread, another session or process, `TableIO` called
+  * directly — is seen on the next read, with no invalidation step. A frame
+  * taken before a commit keeps showing its own snapshot. */
 final class KgSession(val spark: SparkSession, val workDir: String) {
 
   private def conf = Pipeline.Conf(workDir = workDir)
@@ -18,17 +27,32 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   /** Edges table directory (snapshot commits, e.g. the enricher's). */
   def edgesDir: String = Pipeline.edgesDir(conf)
 
-  def nodes: DataFrame = TableIO.readCurrent(spark, Pipeline.nodesDir(conf))
+  /** Per table dir: the snapshot id last read and its checkpointed frame. */
+  private val pins = scala.collection.mutable.Map.empty[String, (Int, DataFrame)]
+
+  /** `view` over the current snapshot of `dir`, computed once per snapshot
+    * id. Synchronized: the enricher reads from its own thread. */
+  private def pinned(dir: String)(view: DataFrame => DataFrame): DataFrame = synchronized {
+    val id = TableIO.requireCurrentId(dir)
+    pins.get(dir) match {
+      case Some((`id`, df)) => df
+      case _ =>
+        val df = view(TableIO.readSnapshot(spark, dir, id)).localCheckpoint()
+        pins(dir) = id -> df
+        df
+    }
+  }
+
+  def nodes: DataFrame = pinned(Pipeline.nodesDir(conf))(identity)
 
   /** Current edges through the read-side MERGE view: a delta chain may hold
     * several rows for one (src,dst,pred) key (repeated [[addEdge]]), and
     * compaction unions the chain verbatim — the MERGE is applied here, at
-    * read time. Identity on an already-merged table (one aggregate over a
-    * dictionary-scale frame). */
-  def edges: DataFrame =
-    KgQueries.mergedEdges(TableIO.readCurrent(spark, Pipeline.edgesDir(conf)))
+    * read time, once per snapshot. Identity on an already-merged table (one
+    * aggregate over a dictionary-scale frame). */
+  def edges: DataFrame = pinned(edgesDir)(KgQueries.mergedEdges)
 
-  def triples: DataFrame = TableIO.readCurrent(spark, Pipeline.triplesDir(conf))
+  def triples: DataFrame = pinned(Pipeline.triplesDir(conf))(identity)
 
   // ------------------------------------------------------------ query side
   def statistics(): (Long, Long) = {
@@ -48,7 +72,7 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   /** S13 manual edge creation: an O(1)-row DELTA commit (never a table
     * rewrite); MERGE semantics surface through the [[edges]] read view. */
   def addEdge(srcId: Long, dstId: Long, pred: String): Unit =
-    KgQueries.addEdgeDelta(spark, Pipeline.edgesDir(conf), srcId, dstId, pred)
+    KgQueries.addEdgeDelta(spark, edgesDir, srcId, dstId, pred)
 
   /** Node id lookup by exact name (the frontend's id-addressed API needs it). */
   def idOf(name: String): Option[Long] =
@@ -56,9 +80,9 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
       .collect().headOption.map(_.getLong(0))
 
   // ----------------------------------------------------------- time travel
-  def edgeSnapshots(): Seq[Int] = TableIO.listSnapshots(Pipeline.edgesDir(conf))
+  def edgeSnapshots(): Seq[Int] = TableIO.listSnapshots(edgesDir)
   def edgesAt(snapshot: Int): DataFrame =
-    TableIO.readSnapshot(spark, Pipeline.edgesDir(conf), snapshot)
+    TableIO.readSnapshot(spark, edgesDir, snapshot)
 }
 
 object KgSession {

@@ -1,8 +1,9 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -54,9 +55,9 @@ object TableIO {
   // ---------------------------------------------------------------- snapshot
 
   /** Commit `df` as the next FULL snapshot of table `dir`: data to
-    * snap-<n>/, per-partition row counters to _manifest/snap-<n>.json, then
-    * CURRENT is repointed (monotonically). Readers always see a complete
-    * snapshot.
+    * snap-<n>/, per-partition row counters and the read schema to
+    * _manifest/snap-<n>.json, then CURRENT is repointed (monotonically).
+    * Readers always see a complete snapshot.
     *
     * Concurrency scope: concurrent commits produce DISTINCT snapshot ids
     * and internally consistent snapshots (the id is claimed with an
@@ -112,7 +113,7 @@ object TableIO {
           // equality, order- and nullability-insensitive; the write below
           // reorders to the snapshot's column order so the chain's parquet
           // files stay column-aligned.
-          val curSchema = readCurrent(newRows.sparkSession, dir).schema
+          val curSchema = snapshotSchema(newRows.sparkSession, dir, cur)
           val curSig = curSchema.fields.map(f => f.name -> f.dataType.sql).toMap
           val newSig = newRows.schema.fields.map(f => f.name -> f.dataType.sql).toMap
           require(curSig == newSig,
@@ -156,6 +157,10 @@ object TableIO {
     node.put("stage", stage); node.put("snapshot", n)
     node.put("delta_of", deltaOf) // -1 = full snapshot
     node.put("total_rows", perFile.map(_._2).sum)
+    // the schema a parquet read of the snapshot infers (file sources read
+    // every field as nullable), so readers skip the inference job
+    node.set[JsonNode]("schema", mapper.readTree(
+      org.apache.spark.sql.graft.Bridge.asNullable(df.schema).json))
     val parts = node.putObject("partitions")
     perFile.foreach { case (f, r) => parts.put(f, r) }
     writeJsonAtomic(base.resolve("_manifest").resolve(f"snap-$n%05d.json"),
@@ -182,7 +187,8 @@ object TableIO {
     * written but never became CURRENT (e.g. left behind by a failed
     * [[repointCurrentFrom]] CAS) cannot occupy retention slots and silently
     * shrink the time-travel window below `retainLast` REAL roots. One id
-    * per line; appends are serialized by [[repointLock]]. */
+    * per line. Every write to the log, this append and [[vacuum]]'s
+    * rewrite, holds [[repointLock]]. */
   private def logRoot(base: Path, n: Int): Unit =
     Files.writeString(base.resolve("_roots"), f"snap-$n%05d%n",
       java.nio.file.StandardOpenOption.CREATE,
@@ -190,7 +196,7 @@ object TableIO {
 
   /** Ids CURRENT has ever pointed at (committed roots), ascending. Tables
     * written before the log existed have no `_roots` file → empty. */
-  private[tables] def rootLog(dir: String): Seq[Int] = {
+  private[graft] def rootLog(dir: String): Seq[Int] = {
     val p = Paths.get(dir, "_roots")
     if (!Files.exists(p)) Seq.empty
     else Files.readAllLines(p).asScala.iterator
@@ -251,16 +257,32 @@ object TableIO {
   def currentSnapshotId(dir: String): Option[Int] =
     currentSnapshot(dir).map(_.stripPrefix("snap-").toInt)
 
+  /** The manifest field `field` of snapshot `n`, if the manifest has it. */
+  private def manifestField(dir: String, n: Int, field: String): Option[JsonNode] = {
+    val p = Paths.get(dir, "_manifest", f"snap-$n%05d.json")
+    if (!Files.exists(p)) None else Option(mapper.readTree(p.toFile).get(field))
+  }
+
   /** The manifest's delta_of pointer; -1 = full snapshot (and legacy
     * manifests without the field are full snapshots). */
-  private def deltaOf(dir: String, n: Int): Int = {
-    val p = Paths.get(dir, "_manifest", f"snap-$n%05d.json")
-    if (!Files.exists(p)) -1
-    else {
-      val node = mapper.readTree(p.toFile)
-      if (node.has("delta_of")) node.get("delta_of").asInt else -1
-    }
-  }
+  private def deltaOf(dir: String, n: Int): Int =
+    manifestField(dir, n, "delta_of").fold(-1)(_.asInt)
+
+  /** The read schema snapshot `n`'s manifest records; None for a manifest
+    * written before the field existed. */
+  private def manifestSchema(dir: String, n: Int): Option[StructType] =
+    manifestField(dir, n, "schema")
+      .map(j => DataType.fromJson(j.toString).asInstanceOf[StructType])
+
+  /** The schema a read of snapshot `n` returns, from its manifest: a small
+    * file read, no Spark job (inferred only for a manifest that predates
+    * the field). */
+  private def snapshotSchema(spark: SparkSession, dir: String, n: Int): StructType =
+    manifestSchema(dir, n).getOrElse(readSnapshot(spark, dir, n).schema)
+
+  /** [[snapshotSchema]] of the current snapshot. */
+  def currentSchema(spark: SparkSession, dir: String): StructType =
+    snapshotSchema(spark, dir, requireCurrentId(dir))
 
   /** Snapshot ids making up the state at snapshot `n`, newest first: `n`,
     * then the delta chain down to (and including) its base full snapshot. */
@@ -271,16 +293,24 @@ object TableIO {
     buf.toSeq
   }
 
+  /** [[currentSnapshotId]], failing when the table has no snapshot yet. */
+  def requireCurrentId(dir: String): Int = currentSnapshotId(dir).getOrElse(
+    throw new IllegalStateException(s"no CURRENT snapshot in $dir"))
+
   def readCurrent(spark: SparkSession, dir: String): DataFrame =
-    readSnapshot(spark, dir, currentSnapshotId(dir).getOrElse(
-      throw new IllegalStateException(s"no CURRENT snapshot in $dir")))
+    readSnapshot(spark, dir, requireCurrentId(dir))
 
   /** Time travel: read the table state AT a committed snapshot — the
     * snapshot's own data plus, for a delta snapshot, its chain of parents
-    * (snapshots are immutable; CURRENT only ever advances). */
+    * (snapshots are immutable; CURRENT only ever advances). The schema
+    * comes from the snapshot's manifest, so the read runs no
+    * schema-inference job; a manifest from before the `schema` field falls
+    * back to inference. Every snapshot of a chain has the same schema
+    * ([[commitDelta]] checks it), so the head's serves the whole chain. */
   def readSnapshot(spark: SparkSession, dir: String, snapshot: Int): DataFrame =
-    spark.read.parquet(snapshotChain(dir, snapshot)
-      .map(s => Paths.get(dir, f"snap-$s%05d").toString): _*)
+    manifestSchema(dir, snapshot).fold(spark.read)(spark.read.schema)
+      .parquet(snapshotChain(dir, snapshot)
+        .map(s => Paths.get(dir, f"snap-$s%05d").toString): _*)
 
   def listSnapshots(dir: String): Seq[Int] = {
     val base = Paths.get(dir)
@@ -310,7 +340,9 @@ object TableIO {
     * [[repointCurrentFrom]] CAS cannot eat a slot and shrink the
     * time-travel window below `retainLast` real roots); tables predating
     * the log degrade to {CURRENT} as the only root. After deletion the log
-    * is compacted to the retained roots.
+    * is compacted to the retained roots plus any root a full
+    * [[commitSnapshot]] logged meanwhile (that commit does not take the
+    * appender lock; the rewrite shares the appends' lock instead).
     *
     * Safety: ids GREATER than CURRENT are never touched (a concurrent
     * committer may have claimed the dir and still be writing into it),
@@ -359,10 +391,16 @@ object TableIO {
               Paths.get(dir, "_manifest", f"snap-$n%05d.json"))
           }
           // compact the log to the retained roots (their snaps are the only
-          // reachable history left; dropped ids would never be retained again)
-          if (victims.nonEmpty && Files.exists(Paths.get(dir, "_roots")))
-            writeJsonAtomic(Paths.get(dir, "_roots"),
-              roots.map(r => f"snap-$r%05d").mkString("", "\n", "\n"))
+          // reachable history left; dropped ids would never be retained
+          // again). Under repointLock, like every append: a root a
+          // concurrent commit logged since the log was read above is newer
+          // than `cur` and is kept.
+          if (victims.nonEmpty) repointLock.synchronized {
+            val log = Paths.get(dir, "_roots")
+            if (Files.exists(log))
+              writeJsonAtomic(log, (roots ++ rootLog(dir).filter(_ > cur))
+                .map(r => f"snap-$r%05d").mkString("", "\n", "\n"))
+          }
           victims
       }
     }

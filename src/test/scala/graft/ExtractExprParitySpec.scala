@@ -52,13 +52,13 @@ class ExtractExprParitySpec extends SparkSuite {
   private type Key =
     (String, Int, String, String, String, Boolean, Boolean, String, Double)
 
-  private def viaExpr(docs: Seq[Doc]): Seq[Key] = {
-    val df = Extract.rawTriplesCols(
-      spark.createDataset(docs).toDF(), byteDict, bytePred)
-    df.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getString(2),
+  private def viaExpr(docs: Seq[Doc]): Seq[Key] =
+    keys(Extract.rawTriplesCols(spark.createDataset(docs).toDF(), byteDict, bytePred))
+
+  private def keys(triples: org.apache.spark.sql.DataFrame): Seq[Key] =
+    triples.collect().toSeq.map(r => (r.getString(0), r.getInt(1), r.getString(2),
       r.getString(3), r.getString(4), r.getBoolean(5), r.getBoolean(6),
       r.getString(7), r.getDouble(8))).sorted
-  }
 
   private def viaKernel(docs: Seq[Doc]): Seq[Key] =
     docs.flatMap(d => Extract.docTriples(d, charDict, charPred))
@@ -163,6 +163,32 @@ class ExtractExprParitySpec extends SparkSuite {
         }
       } finally Platform.freeMemory(addr)
     }
+  }
+
+  test("extract_triples over an off-heap column vector == the on-heap read") {
+    // a vectorized parquet scan with off-heap vectors hands the kernel
+    // UTF8Strings whose base object is null
+    val dir = s"${tmpDir("offheap")}/docs"
+    val docs = Check.samples(doc, 300).zipWithIndex
+      .map { case (d, i) => d.copy(doc_id = s"${d.doc_id}-$i") } :+
+      Doc("fixed", Seq(Span("media", "", "img-9", 0),
+        Span("text", "中文概念 uses Ångström Synthesis. Machine Learning extends AI.", "", 1)))
+    // plain-encoded: a dictionary-encoded string column decodes to on-heap bytes
+    spark.createDataset(docs).write.option("parquet.enable.dictionary", "false").parquet(dir)
+    def read(): (Seq[Key], String) = {
+      val df = Extract.rawTriplesCols(spark.read.parquet(dir), byteDict, bytePred)
+      (keys(df), df.queryExecution.executedPlan.toString)
+    }
+    val onHeap = read()._1
+    val key = "spark.sql.columnVector.offheap.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    val (offHeap, plan) =
+      try read() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(plan.contains("ColumnarToRow"), s"the scan must be vectorized:\n$plan")
+    assert(offHeap == onHeap)
+    assert(onHeap == viaKernel(docs))
+    assert(onHeap.exists(k => k._1 == "fixed" && k._3 == "中文概念" && k._8 == "img-9"))
   }
 
   test("null spans array and null span elements yield zero triples, both eval paths") {

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import graft.model.{Doc, Span}
 import graft.run.Pipeline
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** How many Spark jobs one `Pipeline.run(fastExtract = true)` schedules,
   * counted by a listener on a small hermetic corpus: its own alias table,
@@ -50,17 +48,8 @@ class PipelineJobsSpec extends SparkSuite {
     val golden = tmpDir("graft-jobs-golden")
     writeCorpus(work, golden)
     val conf = Pipeline.Conf(workDir = work, goldenDir = golden, fastExtract = true)
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    val out =
-      try { val o = Pipeline.run(spark, conf); org.apache.spark.TestBus.drain(sc); o }
-      finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 20, s"Pipeline.run scheduled ${jobs.get} Spark jobs")
+    val (out, jobs) = withJobCount(Pipeline.run(spark, conf))
+    assert(jobs <= 20, s"Pipeline.run scheduled $jobs Spark jobs")
 
     val view = out.triplesView.as[(String, String, String)].collect()
     assert(view.toSet == Set(

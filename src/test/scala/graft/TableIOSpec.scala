@@ -370,4 +370,81 @@ class TableIOSpec extends SparkSuite {
       assert(TableIO.snapshotChain(dir, s) == Seq(s), s"snap $s not a full rewrite"))
     assert(TableIO.snapshotChain(dir, 200) == (192 to 200).reverse)
   }
+
+  test("the manifest records the read schema: reads equal inference exactly, full and delta chain") {
+    val c = GraphFixture.commit(spark, tmpDir("manifestSchema"))
+    val dir = graft.run.Pipeline.edgesDir(c)
+    def inferred(n: Int) = spark.read.parquet(
+      TableIO.snapshotChain(dir, n).map(s => f"$dir/snap-$s%05d"): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    def same(n: Int): Unit = {
+      val got = TableIO.readSnapshot(spark, dir, n)
+      // StructType equality: names, types, nullability and metadata, nested too
+      assert(got.schema == inferred(n).schema,
+        s"snap $n\n  manifest: ${got.schema.treeString}\n  inferred: ${inferred(n).schema.treeString}")
+      assert(rows(got) == rows(inferred(n)), s"snap $n")
+    }
+    val prov = TableIO.readCurrent(spark, dir).schema("provenance").dataType
+    assert(prov.isInstanceOf[org.apache.spark.sql.types.ArrayType], prov)
+    same(0)
+    // deltas built with non-nullable columns: the schema still matches inference
+    val Array(a, b) = TableIO.readCurrent(spark, dir).select("src_id", "dst_id").head()
+      .toSeq.map(_.asInstanceOf[Long]).toArray
+    graft.graph.KgQueries.addEdgeDelta(spark, dir, a, b, "Manually Linked")
+    graft.graph.KgQueries.addEdgeDelta(spark, dir, b, a, "Manually Linked")
+    assert(TableIO.snapshotChain(dir, 2) == Seq(2, 1, 0))
+    Seq(1, 2).foreach(same)
+    assert(jobsOf(TableIO.readSnapshot(spark, dir, 2)) == 0, "no inference job")
+    assert(jobsOf(TableIO.currentSchema(spark, dir)) == 0)
+    assert(TableIO.currentSchema(spark, dir) == inferred(2).schema)
+
+    // a manifest written before the field existed: reads fall back to inference
+    val m = Paths.get(dir, "_manifest", "snap-00002.json")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(m.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("schema")
+    Files.writeString(m, node.toString)
+    same(2)
+    assert(TableIO.currentSchema(spark, dir) == inferred(2).schema)
+    assert(TableIO.readCurrent(spark, dir).count() == 7)
+  }
+
+  test("vacuum racing full-snapshot commits keeps every root committed since it started in the log") {
+    val dir = tmpDir("vacRootsRace")
+    TableIO.commitSnapshot(Seq(0).toDF("x"), dir, "t")
+    val committed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val lost = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // the grace window keeps a slower committer's in-flight snapshot out
+      // of reach, and spreads the collecting passes over the commits
+      val vacuumer = Future {
+        while (!done.get) {
+          val before = TableIO.currentSnapshotId(dir).get
+          TableIO.vacuum(dir, retainLast = 3, minAgeMs = 1000)
+          // every root recorded here was logged before it was recorded; one
+          // newer than `before` is among the 3 newest, so it must be logged
+          val recent = committed.asScala.filter(_ > before).toSet
+          lost.addAll((recent -- TableIO.rootLog(dir)).asJava)
+        }
+      }
+      val committers = (1 to 2).map { t =>
+        Future((1 to 60).foreach { i =>
+          TableIO.commitSnapshot(Seq(t * 100 + i).toDF("x"), dir, "t")
+          committed.add(TableIO.currentSnapshotId(dir).get)
+        })
+      }
+      try Await.result(Future.sequence(committers), 300.seconds)
+      finally done.set(true)
+      Await.result(vacuumer, 60.seconds)
+    } finally pool.shutdown()
+    assert(lost.isEmpty, s"committed roots missing from _roots: ${lost.asScala.toSeq.sorted}")
+    assert(TableIO.rootLog(dir).contains(TableIO.currentSnapshotId(dir).get))
+    assert(TableIO.readCurrent(spark, dir).count() == 1)
+  }
 }

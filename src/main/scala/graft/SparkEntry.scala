@@ -42,13 +42,20 @@ object SparkEntry {
         }
       }))
 
+  /** A dead-looking owner's scratch dir is kept until it has been
+    * untouched this long: a pid from another pid namespace (a second
+    * container on the same fixture dir) reads as dead while it is alive. */
+  private val ScratchGraceMs = 60L * 60 * 1000
+
   /** Delete sibling `addedge_table_pid<N>` scratch dirs whose owning pid is
-    * dead (ProcessHandle.of is empty) — never this process's own dir, never
-    * a live process's. Malformed suffixes are left alone. */
+    * dead (ProcessHandle.of is empty) and whose mtime is older than
+    * [[ScratchGraceMs]] — never this process's own dir, never a live
+    * process's. Malformed suffixes are left alone. */
   private[graft] def sweepDeadScratch(root: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     if (!Files.isDirectory(root)) return
     val self = ProcessHandle.current().pid()
+    val staleBefore = System.currentTimeMillis() - ScratchGraceMs
     val st = Files.list(root)
     try st.filter(p =>
         p.getFileName.toString.startsWith("addedge_table_pid"))
@@ -56,7 +63,8 @@ object SparkEntry {
         val pidStr = p.getFileName.toString.stripPrefix("addedge_table_pid")
         val dead = pidStr.forall(_.isDigit) && pidStr.nonEmpty && {
           val pid = pidStr.toLong
-          pid != self && !ProcessHandle.of(pid).isPresent
+          pid != self && !ProcessHandle.of(pid).isPresent &&
+            Files.getLastModifiedTime(p).toMillis < staleBefore
         }
         if (dead)
           Files.walk(p).sorted(java.util.Comparator.reverseOrder())

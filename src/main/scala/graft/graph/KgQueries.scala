@@ -157,62 +157,48 @@ object KgQueries {
         concat(col("a"), lit(" co-occurs with "), col("b")).as("description"))
   }
 
-  /** G1/O6: seed-BFS reachability as an iterative DataFrame loop — the
-    * reference's frontier-queue graph expansion
-    * (/root/reference/kg-builder/internal/graph/graph.go:56-130) without
-    * driver-side state: `frontier ← (frontier ⋈ edges) anti-join visited`,
-    * bounded by maxHops and maxNodes (the reference's MAX_NODES cap; winner
-    * selection by (hops, name) keeps the cap deterministic).
+  /** G1/O6: seed-BFS reachability — the reference's frontier-queue graph
+    * expansion (/root/reference/kg-builder/internal/graph/graph.go:56-130).
+    * As there, the frontier and the visited ids are held in process memory,
+    * here the driver's: they are bounded by the node table, which is
+    * dictionary-sized, and by maxNodes (the reference's MAX_NODES cap).
+    * Spark scans the edges once per hop: one job for the seed, one per hop,
+    * one for the result.
     * Follows out-edges, as the builder's expansion does.
-    * Returns (node_id, name, hops). */
+    * Returns (node_id, name, hops), ordered by (hops, name). */
   def reachableFrom(nodes: DataFrame, edges: DataFrame, seedName: String,
       maxHops: Int, maxNodes: Int = Int.MaxValue): DataFrame = {
-    val adj = edges.select(col("src_id"), col("dst_id")).distinct()
-      .localCheckpoint()
     val named = nodes.select(col("node_id"), col("name"))
-    var visited = named.filter(col("name") === seedName)
-      .select(col("node_id"), lit(0).as("hops"))
-      .localCheckpoint()
-    var visitedCount = visited.count()
-    var frontier = visited
+    val visited = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
+    named.filter(col("name") === seedName).collect().foreach(r => visited(r.getLong(0)) = 0)
+    var frontier = visited.keys.toSeq
     var hop = 0
     // the maxNodes budget binds INSIDE the loop, per hop — the reference
-    // caps the frontier during expansion (graph.go:66-70), so on a dense
-    // graph the intermediate frontier never outgrows the node cap; winners
-    // per hop are deterministic by (hops, name, node_id). The frontier
-    // itself carries only ids: an edge endpoint missing from the nodes
-    // table is still traversed THROUGH (it is only absent from the final
-    // named output) — its name joins null and sorts last among a hop's
-    // cap winners. Deliberate semantics: the budget counts DISCOVERED ids
-    // (dangling ones included), i.e. it bounds frontier/visited memory
-    // like the reference's id-holding frontier channel — so under a
-    // binding cap on a referentially-drifted graph the NAMED output may
-    // hold fewer than maxNodes rows. (The q_bfs oracle compares the
+    // caps the frontier during expansion (graph.go:66-70); a hop's winners
+    // are its candidates' smallest by (name NULLS LAST, node_id), names in
+    // Spark's UTF-8 order. An edge endpoint missing from the nodes table is
+    // still traversed THROUGH (it is only absent from the named output); it
+    // has no name, so it sorts last. Deliberate semantics: the budget counts
+    // DISCOVERED ids (dangling ones included), i.e. it bounds frontier and
+    // visited memory like the reference's id-holding frontier channel — so
+    // under a binding cap on a referentially-drifted graph the NAMED output
+    // may hold fewer than maxNodes rows. (The q_bfs oracle compares the
     // non-binding-cap configuration.)
-    while (hop < maxHops && visitedCount < maxNodes && !frontier.isEmpty) {
+    while (hop < maxHops && visited.size < maxNodes && frontier.nonEmpty) {
       hop += 1
-      val candidates = frontier.join(adj, frontier("node_id") === adj("src_id"))
-        .select(col("dst_id").as("node_id"), lit(hop).as("hops"))
-        .distinct()
-        .join(visited.select("node_id"), Seq("node_id"), "left_anti")
-        .localCheckpoint()
-      val nCand = candidates.count()
-      val budget = maxNodes.toLong - visitedCount
-      val next =
-        if (nCand > budget)
-          candidates.join(named, Seq("node_id"), "left")
-            .orderBy(col("hops").asc, col("name").asc_nulls_last,
-              col("node_id").asc)
-            .limit(budget.toInt).select("node_id", "hops").localCheckpoint()
-        else candidates
-      visitedCount += math.min(nCand, budget)
-      visited = visited.unionByName(next).localCheckpoint()
-      frontier = next
+      val candidates = edges.filter(col("src_id").isin(frontier: _*)).select("dst_id")
+        .collect().map(_.getLong(0)).distinct.filterNot(visited.contains).toSeq
+      val budget = maxNodes - visited.size
+      frontier = if (candidates.size <= budget) candidates else {
+        val byName = named.filter(col("node_id").isin(candidates: _*) && col("name").isNotNull)
+          .orderBy("name", "node_id").limit(budget).collect().map(_.getLong(0)).toSeq
+        byName ++ (candidates.toSet -- byName).toSeq.sorted.take(budget - byName.size)
+      }
+      frontier.foreach(visited(_) = hop)
     }
-    visited
-      .join(named, Seq("node_id"))
-      .orderBy(col("hops").asc, col("name").asc).limit(maxNodes)
-      .select("node_id", "name", "hops")
+    named.filter(col("node_id").isin(visited.keys.toSeq: _*))
+      .withColumn("hops", element_at(typedLit(visited.toMap), col("node_id")))
+      .orderBy(col("hops").asc, col("name").asc).limit(math.min(visited.size, maxNodes))
   }
 
   /** Marker prefix on manually-added edge descriptions; [[mergedEdges]]

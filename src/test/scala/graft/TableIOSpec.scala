@@ -447,4 +447,17 @@ class TableIOSpec extends SparkSuite {
     assert(TableIO.rootLog(dir).contains(TableIO.currentSnapshotId(dir).get))
     assert(TableIO.readCurrent(spark, dir).count() == 1)
   }
+
+  test("a delta chain reads with no job up to 32 snapshots and one file-listing job past it") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32 paths)
+    // the chain's files are listed in a Spark job; maxChain (64) is left
+    // as it is, one listing job being cheaper than compacting twice as often
+    val dir = tmpDir("longChain")
+    TableIO.commitSnapshot(Seq((0L, "base")).toDF("id", "src"), dir, "t")
+    (1 until 40).foreach(i => TableIO.commitDelta(Seq((i.toLong, "d")).toDF("id", "src"), dir, "t"))
+    assert(TableIO.snapshotChain(dir, 31).size == 32 && TableIO.snapshotChain(dir, 39).size == 40)
+    assert(jobsOf(TableIO.readSnapshot(spark, dir, 31)) == 0)
+    assert(jobsOf(TableIO.readSnapshot(spark, dir, 39)) <= 1)
+    assert(TableIO.readSnapshot(spark, dir, 39).count() == 40)
+  }
 }

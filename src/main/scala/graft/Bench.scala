@@ -24,21 +24,7 @@ object Bench {
   private def session(cores: Int): SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      // the pre-aggregate holds a few thousand distinct keys per partition;
-      // the 128-key default would flip ObjectHashAggregate into sort-based
-      // fallback and SORT the corpus-sized stream (buffers stay bounded —
-      // ProvenanceCap exemplars per key — so a big hash map is safe)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession(s"local[$cores]", cores * 2)
   }
 
   final case class RunResult(wall: Double, triples: Long, cpuS: Double,
@@ -50,7 +36,6 @@ object Bench {
     * inflation (cache/bandwidth contention) from stalls (GC, scheduling). */
   private def timedRun(cores: Int, docsDir: String, workRoot: String): RunResult = {
     val spark = session(cores)
-    spark.sparkContext.setLogLevel("WARN")
     val cpuNs = new java.util.concurrent.atomic.AtomicLong()
     val runMs = new java.util.concurrent.atomic.AtomicLong()
     val gcMs = new java.util.concurrent.atomic.AtomicLong()
@@ -68,7 +53,7 @@ object Bench {
     val conf = Pipeline.Conf(workDir = work, fastExtract = true,
       docsDirOverride = Some(docsDir))
     val t0 = System.nanoTime()
-    Pipeline.run(spark, conf)
+    val phases = Pipeline.run(spark, conf).phases
     val wall = (System.nanoTime() - t0) / 1e9
     // linked triple instances materialized = the unit of triples/sec
     // (sum over the tiny edges table)
@@ -76,10 +61,6 @@ object Bench {
       .agg(org.apache.spark.sql.functions.sum("n_obs")).collect()(0).getLong(0)
     spark.stop()
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val phases = {
-      import scala.jdk.CollectionConverters._
-      Pipeline.phaseTimings.asScala.toMap
-    }
     System.err.println(f"DIAG cores=$cores wall=$wall%.1f cpu_s=${cpuNs.get / 1e9}%.1f " +
       f"run_s=${runMs.get / 1e3}%.1f gc_s=${gcMs.get / 1e3}%.1f phases=" +
       phases.toSeq.sortBy(-_._2).map { case (k, v) => f"$k=$v%.2f" }.mkString(","))
@@ -334,7 +315,6 @@ object Bench {
 
     // corpora built once (excluded from timing)
     val spark = session(32)
-    spark.sparkContext.setLogLevel("WARN")
     if (!Files.exists(Paths.get(docsDir, "_DONE")))
       Pipeline.ensureCorpus(spark,
         Pipeline.Conf(workDir = s"$root/corpus-$nDocs", nDocs = nDocs, nBuckets = 128))

@@ -1,5 +1,6 @@
 package graft.run
 
+import graft.GraftSession
 import graft.graph.KgQueries
 import graft.tables.TableIO
 import org.apache.spark.sql.SparkSession
@@ -40,19 +41,8 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val opts = Config.resolve(args)
-    val spark = SparkSession.getActiveSession.getOrElse(
-      SparkSession.builder()
-        .master(opts.getOrElse("master", "local[8]"))
-        .appName("graft-kg")
-        .config("spark.sql.shuffle.partitions", opts.getOrElse("shufflePartitions", "8"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        // see Bench.session: keep the bounded pre-aggregate in hash mode
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSession.getActiveSession.getOrElse(GraftSession(
+      opts.getOrElse("master", "local[8]"), opts.getOrElse("shufflePartitions", "8").toInt))
     val c = confFrom(opts)
     val (vacuumRetain, maxChain, vacuumGraceMs) = gcKnobs(opts)
 

@@ -7,6 +7,7 @@ import graft.link.EntityLink
 import graft.tables.TableIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Stage orchestration — the Spark-native equivalent of the reference's
   * builder main loop (/root/reference/cmd/kg-builder/main.go:21 →
@@ -43,8 +44,9 @@ object Pipeline {
       fastExtract: Boolean = false,
       docsDirOverride: Option[String] = None)
 
+  /** @param phases wall seconds of each named phase of this run, in order */
   final case class Out(docs: DataFrame, nodes: DataFrame, edges: DataFrame,
-      triplesView: DataFrame)
+      triplesView: DataFrame, phases: Map[String, Double])
 
   def docsDir(c: Conf): String = c.docsDirOverride.getOrElse(s"${c.workDir}/docs")
   def aliasesPath(c: Conf): String =
@@ -66,68 +68,49 @@ object Pipeline {
     }
   }
 
-  /** Wall time of each named phase from the most recent `run` in this JVM —
-    * the bench reads it to report a per-phase scaling table. */
-  val phaseTimings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-
-  private def phase[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    phaseTimings.put(name, sec)
-    if (sys.env.contains("GRAFT_PHASE_TIMING"))
-      System.err.println(f"[phase] $name $sec%.2fs")
-    r
+  /** Wall seconds of each named phase of one run, in run order. */
+  final class Phases {
+    private var done = ListMap.empty[String, Double]
+    def apply[T](name: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      done = done.updated(name, (System.nanoTime() - t0) / 1e9)
+      r
+    }
+    def toMap: Map[String, Double] = done
   }
 
-  def run(spark: SparkSession, c: Conf): Out = {
+  /** The run's one corpus-scale frame over `docs` and `aliases`, not yet
+    * executed: extraction, the `validPred` gate and the pre-aggregate that
+    * `run` checkpoints. The dictionary-scale work it needs (alias collect,
+    * automata, ambiguity gate and, on the resumable path, the per-bucket
+    * extraction snapshots) runs here, timed into `phase`. */
+  def corpusPlan(spark: SparkSession, c: Conf, docs: DataFrame, aliases: DataFrame,
+      phase: Phases = new Phases): DataFrame = {
     import spark.implicits._
-    phaseTimings.clear()
-    phase("ensureCorpus")(ensureCorpus(spark, c))
-
-    val aliases = phase("aliases")(spark.read.parquet(aliasesPath(c)))
-    // one read of the docs for every use below: each parquet read infers its
-    // schema in a Spark job of its own
-    val docs = spark.read.parquet(docsDir(c))
     // (alias, canonical) pairs: the automaton dictionary AND the ambiguity
     // gate come from one dictionary-scale collect — the gate used to be a
     // separate Spark aggregate job in the fixed tail (r07)
     val aliasPairs = phase("aliasCollect")(
       aliases.select("alias", "canonical").as[(String, String)].collect())
-    val aliasList = aliasPairs.map(_._1)
     // byte-level automata, broadcast once per executor; see
     // ExtractTriplesExpr for why the columnar kernel is the throughput path
     val (dict, predGrammar) = phase("dicts")((
-      spark.sparkContext.broadcast(ByteAhoCorasick(aliasList)),
+      spark.sparkContext.broadcast(ByteAhoCorasick(aliasPairs.map(_._1))),
       spark.sparkContext.broadcast(
         ByteAhoCorasick(Golden.triples(c.goldenDir).map(_.pred).distinct))))
 
     // stage 1: extraction kernel plan (no materialization of its own —
     // fused into the pre-aggregate job below)
-    // A/B safety valve: GRAFT_EXTRACT_TYPED=1 falls back to the typed
-    // object-mode kernel (reference implementation) — used to measure the
-    // columnar expression's gain in one weather window, and as an escape
-    // hatch if a corpus ever trips an expression-path defect in production
-    val typedPath = sys.env.get("GRAFT_EXTRACT_TYPED").exists(_ != "0")
-    def typedRaw(in: DataFrame): DataFrame = {
-      import spark.implicits._
-      val bc = Extract.broadcastDict(spark, aliasList)
-      val pc = Extract.broadcastDict(spark, Golden.triples(c.goldenDir).map(_.pred).distinct)
-      Extract.rawTriples(in.as[graft.model.Doc], bc, pc).toDF()
-    }
     val raw =
-      if (c.fastExtract) {
-        val in = docs.drop("bucket")
-        if (typedPath) typedRaw(in) else Extract.rawTriplesCols(in, dict, predGrammar)
-      } else {
+      if (c.fastExtract) Extract.rawTriplesCols(docs.drop("bucket"), dict, predGrammar)
+      else {
         // resumable path: per-bucket extraction snapshots (one extra corpus
-        // write+read buys partition-granular restart); the typed escape
-        // hatch applies here too (it used to silently no-op on this path)
+        // write+read buys partition-granular restart)
         phase("extractBucketed")(
           TableIO.runBucketed(spark, "extract", docsDir(c), extractDir(c),
             c.nBuckets, c.concurrency) { in =>
-            if (typedPath) typedRaw(in.drop("bucket"))
-            else Extract.rawTriplesCols(in.drop("bucket"), dict, predGrammar)
+            Extract.rawTriplesCols(in.drop("bucket"), dict, predGrammar)
           })
       }
 
@@ -139,21 +122,28 @@ object Pipeline {
     // per-corpus-row work drops to filter + hash-aggregate update (r07,
     // guide §8). With ambiguity the original per-row contextual link runs
     // (TF-IDF context scoring needs the document, not just the surface).
-    val unambiguous = phase("linkPlan")(!EntityLink.hasAmbiguity(aliasPairs))
-    val pre = phase("extractLinkAgg") {
-      val plan =
-        if (unambiguous)
-          Materialize.preAggregateBySurface(
-            raw.filter(graft.extract.Validity.validPred(col("pred"))), aliases)
-        else {
-          val docsText = docs
-            .select(col("doc_id"), explode(col("spans")).as("s"))
-            .filter(col("s.kind") === "text")
-            .select(col("doc_id"), col("s.text").as("text"))
-          Materialize.preAggregate(EntityLink.link(spark, raw, aliases, docsText))
-        }
-      plan.localCheckpoint()
+    if (phase("linkPlan")(!EntityLink.hasAmbiguity(aliasPairs)))
+      Materialize.preAggregateBySurface(
+        raw.filter(graft.extract.Validity.validPred(col("pred"))), aliases)
+    else {
+      val docsText = docs
+        .select(col("doc_id"), explode(col("spans")).as("s"))
+        .filter(col("s.kind") === "text")
+        .select(col("doc_id"), col("s.text").as("text"))
+      Materialize.preAggregate(EntityLink.link(spark, raw, aliases, docsText))
     }
+  }
+
+  def run(spark: SparkSession, c: Conf): Out = {
+    val phase = new Phases
+    phase("ensureCorpus")(ensureCorpus(spark, c))
+
+    val aliases = phase("aliases")(spark.read.parquet(aliasesPath(c)))
+    // one read of the docs for every use below: each parquet read infers its
+    // schema in a Spark job of its own
+    val docs = spark.read.parquet(docsDir(c))
+    val plan = corpusPlan(spark, c, docs, aliases, phase)
+    val pre = phase("extractLinkAgg")(plan.localCheckpoint())
 
     // stage 3: canonicalize + materialize on the pre-aggregate. The named
     // edge aggregate is localCheckpoint'ed once (dictionary-scale); each
@@ -170,6 +160,6 @@ object Pipeline {
     val tv = Materialize.triplesOf(named)
     phase("triplesCommit")(TableIO.commitSnapshot(tv, triplesDir(c), "triples_view"))
 
-    Out(docs, nodesT, Materialize.edgesTable(named), tv)
+    Out(docs, nodesT, Materialize.edgesTable(named), tv, phase.toMap)
   }
 }

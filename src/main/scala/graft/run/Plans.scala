@@ -1,70 +1,48 @@
 package graft.run
 
-import graft.{Fixtures, SparkEntry}
+import graft.{Fixtures, GraftSession, SparkEntry}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps `explain(formatted)` of the load-bearing plans into PLANS.md —
-  * the pushdown/broadcast/codegen evidence, kept reviewable in the repo. */
+/** Plan evidence dumper: writes `explain("formatted")` of the run's
+  * corpus-scale frame ([[Pipeline.corpusPlan]], as `pipeline_fused`) and of
+  * every declared driver query to `<outDir>/<name>_<tag>.txt`. Run with tag
+  * "before" and "after" around a change to a query's path and diff the two.
+  *
+  * Usage: sbt "runMain graft.run.Plans <sfDir> <outDir> <tag> [name...]"
+  * (e.g. outDir `plans/r07`, tag `after`); names restrict the dump.
+  */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = Smoke.session(8)
-    spark.sparkContext.setLogLevel("WARN")
-    val sf = "/root/testdata/sf0.001"
+    require(args.length >= 3, "usage: Plans <sfDir> <outDir> <tag> [name...]")
+    val Array(sf, outDir, tag) = args.take(3)
+    val only = args.drop(3).toSet
+    val spark = GraftSession("local[8]", 8)
     Fixtures.ensure(spark, sf)
+    val out = java.nio.file.Paths.get(outDir)
+    java.nio.file.Files.createDirectories(out)
 
-    def fmt(df: DataFrame): String =
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-
-    // the load-bearing plan: the ONE corpus-scale job — scan → extract →
-    // broadcast-link → bounded pre-aggregate (what Pipeline.run executes as
-    // its extractLinkAgg phase)
-    val fused = {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val conf = Pipeline.Conf(workDir = "/tmp/plans-kg", nDocs = 220, nBuckets = 4)
+    def fused: DataFrame = {
+      val work = java.nio.file.Files.createTempDirectory("graft-plans").toString
+      val conf = Pipeline.Conf(workDir = work, nDocs = 220, nBuckets = 4, fastExtract = true)
       Pipeline.ensureCorpus(spark, conf)
-      val aliases = spark.read.parquet(Pipeline.aliasesPath(conf))
-      val dict = spark.sparkContext.broadcast(graft.extract.ByteAhoCorasick(
-        aliases.select("alias").as[String].collect()))
-      val pg = spark.sparkContext.broadcast(graft.extract.ByteAhoCorasick(
-        graft.corpus.Golden.triples(graft.corpus.Golden.defaultDir).map(_.pred).distinct))
-      val docs = spark.read.parquet(Pipeline.docsDir(conf)).drop("bucket")
-      val raw = graft.extract.Extract.rawTriplesCols(docs, dict, pg)
-      // production branch (unambiguous dictionary): surface-aggregated link
-      // — the corpus-scale job is filter + ONE hash aggregate; alias joins
-      // and the validName gate run on the dictionary-scale aggregate (r07)
-      graft.graph.Materialize.preAggregateBySurface(
-        raw.filter(graft.extract.Validity.validPred(col("pred"))), aliases)
+      Pipeline.corpusPlan(spark, conf, spark.read.parquet(Pipeline.docsDir(conf)),
+        spark.read.parquet(Pipeline.aliasesPath(conf)))
     }
-
-    val entries = Seq(
-      "fused extract→link→pre-aggregate (the ONE corpus-scale job)" -> fused,
-      "q_pipeline_triples (full pipeline output read)" -> SparkEntry.queries("q_pipeline_triples")(spark, sf),
-      "q_ann_ivf (broadcast centroid assignment + probed-cell scoring)" -> SparkEntry.queries("q_ann_ivf")(spark, sf),
-      "q_ivf_train (map-only assignment + single VectorSum aggregate — no posexplode)" -> SparkEntry.queries("q_ivf_train")(spark, sf),
-      "q_degree (union + hash aggregate + broadcast join)" -> SparkEntry.queries("q_degree")(spark, sf),
-      "q_enrich_pairs (co-occurrence + anti join + top-k)" -> SparkEntry.queries("q_enrich_pairs")(spark, sf),
-      "q_ann_topk (codegen'd dot products, WindowGroupLimit)" -> SparkEntry.queries("q_ann_topk")(spark, sf),
-      "q_exact_dedup (map-side combined hash aggregate)" -> SparkEntry.queries("q_exact_dedup")(spark, sf),
-      "q_media_decode (map-only JDK-codec decode kernel over binary payloads)" -> SparkEntry.queries("q_media_decode")(spark, sf),
-      "q_quality (pure column expressions over parquet scan)" -> SparkEntry.queries("q_quality")(spark, sf))
-
-    val md = new StringBuilder
-    md.append("# PLANS — formatted physical plans of load-bearing operators\n\n")
-    md.append("Generated by `runMain graft.run.Plans` on the sf0.001 fixtures.\n")
-    md.append("Things to look for: `PushedFilters`/`ReadSchema` on scans,\n")
-    md.append("`BroadcastHashJoin` on dictionary sides, `WholeStageCodegen`\n")
-    md.append("spans, `WindowGroupLimit` top-k pushdown, partial+final\n")
-    md.append("`HashAggregate`/`ObjectHashAggregate` pairs.\n\n")
-    entries.foreach { case (name, df) =>
-      md.append(s"## $name\n\n```\n")
-      md.append(fmt(df).take(8000))
-      md.append("\n```\n\n")
+    val all: Seq[(String, () => DataFrame)] =
+      ("pipeline_fused" -> (() => fused)) +:
+        SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, f) => n -> (() => f(spark, sf)) }
+    all.foreach { case (name, mk) =>
+      if (only.isEmpty || only.contains(name)) {
+        try {
+          val txt = mk().queryExecution.explainString(ExplainMode.fromString("formatted"))
+          java.nio.file.Files.writeString(out.resolve(s"${name}_$tag.txt"), txt)
+          println(s"wrote $name ($tag)")
+        } catch {
+          case e: Throwable => println(s"FAILED $name: ${e.getMessage}")
+        }
+      }
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/PLANS.md"), md.toString)
-    println(s"PLANS.md written (${entries.size} plans)")
     spark.stop()
   }
 }

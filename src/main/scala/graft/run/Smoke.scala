@@ -1,23 +1,12 @@
 package graft.run
 
+import graft.GraftSession
 import graft.corpus.Golden
-import org.apache.spark.sql.SparkSession
 
 /** Dev smoke: full pipeline on a small corpus, print P/R vs golden. */
 object Smoke {
-  def session(cores: Int = 8): SparkSession = SparkSession.builder()
-    .master(s"local[$cores]")
-    .appName("graft-smoke")
-    .config("spark.sql.shuffle.partitions", cores.toString)
-    .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[8]", 8)
     import spark.implicits._
     val work = "/root/repo/target/smoke"
     if (!args.contains("keep"))

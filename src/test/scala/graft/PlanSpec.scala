@@ -105,6 +105,25 @@ class PlanSpec extends SparkSuite {
     assert(rows.length == 1 && rows(0).getAs[Long]("n_obs") == 2L)
   }
 
+  test("Pipeline.corpusPlan over a hermetic corpus has the r07 shape: one corpus shuffle, on subj") {
+    val c = CorpusFixture.write(spark)
+    val p = plan(graft.run.Pipeline.corpusPlan(spark, c,
+      spark.read.parquet(graft.run.Pipeline.docsDir(c)),
+      spark.read.parquet(graft.run.Pipeline.aliasesPath(c))))
+    assert(!p.contains("SortMergeJoin") && !p.contains("hashpartitioning(doc_id"), p.take(6000))
+    // top-down below the alias joins sits the corpus-fed subtree: scan →
+    // extract → validPred filter → ONE aggregate (partial + final around the
+    // only corpus exchange), with no validName RLIKE on corpus rows
+    val belowJoins = p.substring(p.lastIndexOf("BroadcastHashJoin"))
+    assert(countOccurrences(belowJoins, "ObjectHashAggregate(") == 2, belowJoins.take(6000))
+    assert(countOccurrences(belowJoins, "Exchange hashpartitioning(") == 1, belowJoins.take(6000))
+    assert(!belowJoins.contains("RLIKE"), belowJoins.take(6000))
+    val shape = Seq("ObjectHashAggregate(", "Exchange hashpartitioning(subj", "ObjectHashAggregate(",
+      "Filter", "Generate explode(extract_triples", "FileScan parquet [doc_id")
+    val at = shape.scanLeft(0)((from, op) => belowJoins.indexOf(op, from)).tail
+    assert(at.forall(_ >= 0), shape.zip(at).toString + "\n" + belowJoins.take(6000))
+  }
+
   test("bounded_collect_list keeps exactly the K order-smallest across partitions (heap path)") {
     import graft.functions.BoundedCollectList.bounded_collect_list
     val rng = new scala.util.Random(7)

@@ -43,11 +43,19 @@ object KgQueries {
 
   /** A3: low-connectivity top-k (ORDER BY connectivity ASC LIMIT k). */
   def lowConnectivity(nodes: DataFrame, edges: DataFrame, k: Int = 10): DataFrame =
-    degree(nodes, edges).orderBy(col("degree").asc, col("name").asc).limit(k)
+    lowConnectivityOf(degree(nodes, edges), k)
+
+  /** A3 over a [[degree]] frame. */
+  def lowConnectivityOf(degree: DataFrame, k: Int): DataFrame =
+    degree.orderBy(col("degree").asc, col("name").asc).limit(k)
 
   /** A4: most-connected top-k (stats dashboard top-5). */
   def mostConnected(nodes: DataFrame, edges: DataFrame, k: Int = 5): DataFrame =
-    degree(nodes, edges).orderBy(col("degree").desc, col("name").asc).limit(k)
+    mostConnectedOf(degree(nodes, edges), k)
+
+  /** A4 over a [[degree]] frame. */
+  def mostConnectedOf(degree: DataFrame, k: Int): DataFrame =
+    degree.orderBy(col("degree").desc, col("name").asc).limit(k)
 
   /** A6: relationship-type histogram. */
   def predHistogram(edges: DataFrame): DataFrame =
@@ -265,8 +273,13 @@ object KgQueries {
   }
 
   /** G8: graph snapshot export (nodes + links, id-addressed). */
-  def graphSnapshot(nodes: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {
-    val d = degree(nodes, edges).select(col("node_id"), col("degree"))
+  def graphSnapshot(nodes: DataFrame, edges: DataFrame): (DataFrame, DataFrame) =
+    graphSnapshotOf(nodes, edges, degree(nodes, edges))
+
+  /** G8 with the [[degree]] frame of `nodes` and `edges` given. */
+  def graphSnapshotOf(nodes: DataFrame, edges: DataFrame,
+      degree: DataFrame): (DataFrame, DataFrame) = {
+    val d = degree.select(col("node_id"), col("degree"))
     val ns = nodes.join(d, Seq("node_id"), "left")
       .select(col("node_id").as("id"), col("name"),
         lit("Concept").as("type"), coalesce(col("degree"), lit(0L)).as("size"))

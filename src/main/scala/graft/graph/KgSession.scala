@@ -2,7 +2,7 @@ package graft.graph
 
 import graft.run.Pipeline
 import graft.tables.TableIO
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The single user-facing handle over a materialized knowledge graph — what
@@ -19,52 +19,153 @@ import org.apache.spark.sql.functions._
   * small file, on every access: a commit by any writer — this session, the
   * enricher's thread, another session or process, `TableIO` called
   * directly — is seen on the next read, with no invalidation step. A frame
-  * taken before a commit keeps showing its own snapshot. */
+  * taken before a commit keeps showing its own snapshot.
+  *
+  * A new snapshot is folded into the pin, not re-read: when CURRENT's
+  * [[TableIO.snapshotChain]] still contains the pinned id, the new pin is
+  * `view(pinned ∪ the deltas newer than it)`. Otherwise (the first read, a
+  * compaction, a new full snapshot) the whole chain is read. The fold is
+  * exact whenever `view(chain) == view(view(prefix) ∪ rest)`: identity
+  * meets it, and so does [[KgQueries.mergedEdges]], whose every aggregate
+  * is associative and idempotent — `n_obs` is a sum, `strength` a max,
+  * `description`, `created_at` and `pred_norm` are mins, and `provenance`
+  * keeps the K smallest, which are also the K smallest of (the K smallest
+  * of A) ∪ B.
+  *
+  * The pin's own job also gathers, with `Dataset.observe`, the view's row
+  * count (so [[statistics]] runs no job) and the rows read, which must equal
+  * the manifests' counts. The session pins a degree frame per (nodes id,
+  * edges id) and carries it across a fold: a new (src_id, dst_id, pred) key
+  * adds one edge and +1 degree at each endpoint, a repeated key adds
+  * nothing. With n_new = n' − n from the observed counts, the degree is
+  * unchanged when n_new = 0 and gets every endpoint increment of the delta
+  * when n_new equals the delta's distinct key count (observed on the delta
+  * branch of the same job; enricher ticks are always this case, their keys
+  * are anti-joined against the edges); any other delta recomputes it. */
 final class KgSession(val spark: SparkSession, val workDir: String) {
+  import KgSession._
 
   private def conf = Pipeline.Conf(workDir = workDir)
 
   /** Edges table directory (snapshot commits, e.g. the enricher's). */
   def edgesDir: String = Pipeline.edgesDir(conf)
 
-  /** Per table dir: the snapshot id last read and its checkpointed frame. */
-  private val pins = scala.collection.mutable.Map.empty[String, (Int, DataFrame)]
+  /** One table's pinned snapshot: its id, its view localCheckpointed, the
+    * view's row count and partition count. `degreeFrom = Some((base, incr))`
+    * says the degree at this edges snapshot is the degree at edges snapshot
+    * `base` plus `incr` per node id; None = unknown, recompute. */
+  private final case class Pin(id: Int, df: DataFrame, rows: Long, parts: Int,
+      degreeFrom: Option[(Int, Map[Long, Long])] = None)
 
-  /** `view` over the current snapshot of `dir`, computed once per snapshot
-    * id. Synchronized: the enricher reads from its own thread. */
-  private def pinned(dir: String)(view: DataFrame => DataFrame): DataFrame = synchronized {
+  private val pins = scala.collection.mutable.Map.empty[String, Pin]
+
+  /** (nodes id, edges id, checkpointed degree frame) of the last degree
+    * computed. */
+  private var degreePin: Option[(Int, Int, DataFrame)] = None
+
+  /** `view` over the current snapshot of `dir`, folded from the previous
+    * pin when the chain allows it. Synchronized: the enricher reads from its
+    * own thread. */
+  private def pinned(dir: String)(view: DataFrame => DataFrame): Pin = synchronized {
     val id = TableIO.requireCurrentId(dir)
     pins.get(dir) match {
-      case Some((`id`, df)) => df
-      case _ =>
-        val df = view(TableIO.readSnapshot(spark, dir, id)).localCheckpoint()
-        pins(dir) = id -> df
-        df
+      case Some(p) if p.id == id => p
+      case prev =>
+        val chain = TableIO.snapshotChain(dir, id)
+        val pin = prev.filter(p => chain.contains(p.id)) match {
+          case Some(p) => fold(dir, p, chain.takeWhile(_ != p.id), view)
+          case None => checkpointed(dir, chain, None, view, keyed = false)._1
+        }
+        pins(dir) = pin
+        pin
     }
   }
 
-  def nodes: DataFrame = pinned(Pipeline.nodesDir(conf))(identity)
+  /** The pin `p` with the snapshots `newer` folded in; carries the degree
+    * increments forward when the observed counts allow. */
+  private def fold(dir: String, p: Pin, newer: Seq[Int],
+      view: DataFrame => DataFrame): Pin = {
+    val keyed = p.degreeFrom.isDefined &&
+      TableIO.snapshotRows(dir, newer).exists(_ <= CarryCap)
+    val (pin, keys) = checkpointed(dir, newer, Some(p), view, keyed)
+    val added = pin.rows - p.rows
+    val degreeFrom = p.degreeFrom.flatMap { case (base, incr) =>
+      if (added == 0) Some((base, incr))
+      else keys.filter(_.size == added).map { ks =>
+        val ends = ks.flatMap(k => Seq(0, 1).filterNot(k.isNullAt).map(k.getLong))
+        (base, ends.foldLeft(incr)((m, n) => m.updated(n, m.getOrElse(n, 0L) + 1L)))
+      }.filter(_._2.size <= CarryCap)
+    }
+    pin.copy(degreeFrom = degreeFrom)
+  }
 
-  /** Current edges through the read-side MERGE view: a delta chain may hold
-    * several rows for one (src,dst,pred) key (repeated [[addEdge]]), and
-    * compaction unions the chain verbatim — the MERGE is applied here, at
-    * read time, once per snapshot. Identity on an already-merged table (one
-    * aggregate over a dictionary-scale frame). */
-  def edges: DataFrame = pinned(edgesDir)(KgQueries.mergedEdges)
+  /** The pin of `view(base ∪ snapshots ids)`, localCheckpointed in one job
+    * that also observes the view's rows, the rows read (checked against the
+    * manifests) and, when `keyed`, the distinct (src_id, dst_id, pred) keys
+    * read. The union keeps the base's partition count: a base that fits one
+    * partition (as the adaptive shuffle sized it) is merged in the read's
+    * own stage, with no shuffle. */
+  private def checkpointed(dir: String, ids: Seq[Int], base: Option[Pin],
+      view: DataFrame => DataFrame, keyed: Boolean): (Pin, Option[Seq[Row]]) = {
+    val (read, out) = (Observation(), Observation())
+    val in = TableIO.readSnapshots(spark, dir, ids).observe(read, count(lit(1)).as("rows"),
+      (if (keyed) Seq(collect_set(struct("src_id", "dst_id", "pred")).as("keys")) else Nil): _*)
+    val df = view(base.fold(in)(b => b.df.unionByName(in).coalesce(math.max(1, b.parts))))
+      .observe(out, count(lit(1)).as("rows")).localCheckpoint()
+    val r = metrics(read)
+    val got = r.getAs[Long]("rows")
+    TableIO.snapshotRows(dir, ids).filter(_ != got).foreach { want =>
+      throw new IllegalStateException(
+        s"$dir: snapshots ${ids.mkString(",")} read $got rows, their manifests record $want")
+    }
+    val pin = Pin(ids.head, df, metrics(out).getAs[Long]("rows"),
+      df.queryExecution.toRdd.getNumPartitions)
+    (pin, Option.when(keyed)(r.getAs[scala.collection.Seq[Row]]("keys").toSeq))
+  }
 
-  def triples: DataFrame = pinned(Pipeline.triplesDir(conf))(identity)
+  private def nodesPin: Pin = pinned(Pipeline.nodesDir(conf))(identity)
+
+  /** Read through the MERGE view: a delta chain may hold several rows for
+    * one (src,dst,pred) key (repeated [[addEdge]]), and compaction unions the
+    * chain verbatim. Identity on an already-merged table. */
+  private def edgesPin: Pin = pinned(edgesDir)(KgQueries.mergedEdges)
+
+  def nodes: DataFrame = nodesPin.df
+
+  /** Current edges, one row per (src_id, dst_id, pred) key. */
+  def edges: DataFrame = edgesPin.df
+
+  def triples: DataFrame = pinned(Pipeline.triplesDir(conf))(identity).df
+
+  /** (node_id, name, degree) of the current snapshots: the pinned degree
+    * frame plus the edges pin's carried increments, or recomputed and
+    * pinned when they cannot be carried. */
+  private def degreeFrame: DataFrame = synchronized {
+    val (n, e) = (nodesPin, edgesPin)
+    val carried = for {
+      (nodesId, edgesId, d) <- degreePin if nodesId == n.id
+      (base, incr) <- e.degreeFrom if base == edgesId
+    } yield if (incr.isEmpty) d else d.withColumn("degree", col("degree") +
+      coalesce(element_at(typedLit(incr), col("node_id")), lit(0L)))
+    carried.getOrElse {
+      val d = KgQueries.degree(n.df, e.df).localCheckpoint()
+      degreePin = Some((n.id, e.id, d))
+      pins(edgesDir) = e.copy(degreeFrom = Some((e.id, Map.empty)))
+      d
+    }
+  }
 
   // ------------------------------------------------------------ query side
-  def statistics(): (Long, Long) = {
-    val r = KgQueries.statistics(nodes, edges).collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
+  /** (node count, relationship count), observed when the pins were taken. */
+  def statistics(): (Long, Long) = (nodesPin.rows, edgesPin.rows)
   def search(q: String, limit: Int = 10): Seq[String] =
     KgQueries.search(nodes, q, limit).collect().map(_.getString(0)).toSeq
   def conceptNames(): DataFrame = KgQueries.conceptNames(nodes)
-  def degree(): DataFrame = KgQueries.degree(nodes, edges)
-  def mostConnected(k: Int = 5): DataFrame = KgQueries.mostConnected(nodes, edges, k)
-  def graphSnapshot(): (DataFrame, DataFrame) = KgQueries.graphSnapshot(nodes, edges)
+  def degree(): DataFrame = degreeFrame
+  def mostConnected(k: Int = 5): DataFrame = KgQueries.mostConnectedOf(degreeFrame, k)
+  def lowConnectivity(k: Int = 10): DataFrame = KgQueries.lowConnectivityOf(degreeFrame, k)
+  def graphSnapshot(): (DataFrame, DataFrame) =
+    KgQueries.graphSnapshotOf(nodes, edges, degreeFrame)
   def reachableFrom(seed: String, maxHops: Int, maxNodes: Int = Int.MaxValue): DataFrame =
     KgQueries.reachableFrom(nodes, edges, seed, maxHops, maxNodes)
 
@@ -86,6 +187,15 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
 }
 
 object KgSession {
+  /** Largest delta, in rows, whose keys a fold gathers on the driver, and
+    * largest carried increment map; past either the degree is recomputed. */
+  private val CarryCap = 4096
+
+  /** An observation's metrics. They arrive on the listener bus just after
+    * the job; the bound only keeps a lost event from hanging the read. */
+  private def metrics(o: Observation): Row =
+    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
+
   /** Build (or resume) the graph from the configured corpus, then open. */
   def build(spark: SparkSession, c: Pipeline.Conf): KgSession = {
     Pipeline.run(spark, c)

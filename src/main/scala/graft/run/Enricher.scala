@@ -42,11 +42,11 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
     if (remaining <= 0) return 0L
     val edges = kg.edges
     // G5 reseeding analog: focus this tick's mining on the currently
-    // worst-connected nodes (recomputed per tick, as the reference reseeds)
+    // worst-connected nodes (re-ranked per tick, as the reference reseeds,
+    // over the session's pinned degree)
     val focus =
       if (conf.focusBottomK > 0)
-        Some(KgQueries.lowConnectivity(kg.nodes, edges, conf.focusBottomK)
-          .select("node_id"))
+        Some(kg.lowConnectivity(conf.focusBottomK).select("node_id"))
       else None
     val newE = KgQueries.enrichOnceFromCo(kg.nodes, edges, coTable,
         math.min(conf.batch.toLong, remaining).toInt, focus)

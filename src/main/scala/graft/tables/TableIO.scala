@@ -308,9 +308,21 @@ object TableIO {
     * back to inference. Every snapshot of a chain has the same schema
     * ([[commitDelta]] checks it), so the head's serves the whole chain. */
   def readSnapshot(spark: SparkSession, dir: String, snapshot: Int): DataFrame =
-    manifestSchema(dir, snapshot).fold(spark.read)(spark.read.schema)
-      .parquet(snapshotChain(dir, snapshot)
-        .map(s => Paths.get(dir, f"snap-$s%05d").toString): _*)
+    readSnapshots(spark, dir, snapshotChain(dir, snapshot))
+
+  /** The rows of snapshots `ids` themselves, not of their parents, newest
+    * first as [[snapshotChain]] lists them: a reader that already holds a
+    * chain's prefix reads only the deltas after it. The schema is `ids.head`'s
+    * manifest's. */
+  def readSnapshots(spark: SparkSession, dir: String, ids: Seq[Int]): DataFrame =
+    manifestSchema(dir, ids.head).fold(spark.read)(spark.read.schema)
+      .parquet(ids.map(s => Paths.get(dir, f"snap-$s%05d").toString): _*)
+
+  /** The rows snapshots `ids` hold by their manifests (their own data, not
+    * their chains'); None when a manifest lacks the count. */
+  def snapshotRows(dir: String, ids: Seq[Int]): Option[Long] =
+    ids.foldLeft(Option(0L))((acc, n) =>
+      acc.zip(manifestField(dir, n, "total_rows")).map { case (a, r) => a + r.asLong })
 
   def listSnapshots(dir: String): Seq[Int] = {
     val base = Paths.get(dir)

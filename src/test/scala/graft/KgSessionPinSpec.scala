@@ -1,18 +1,28 @@
 package graft
 
 import graft.graph.{KgQueries, KgSession}
-import graft.run.Pipeline
+import graft.run.{Enricher, Pipeline}
 import graft.tables.TableIO
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 /** `KgSession` keeps one checkpointed frame per table snapshot. These tests
   * check that every writer's commit is seen on the next read, that a frame
-  * taken earlier keeps its snapshot, and that reads of an unchanged
-  * snapshot and `addEdge` run no schema or re-read jobs. */
+  * taken earlier keeps its snapshot, that reads of an unchanged snapshot
+  * and `addEdge` run no schema or re-read jobs, that a delta is folded into
+  * the pin rather than re-read, and that a fold over missing or broken
+  * files fails. */
 class KgSessionPinSpec extends SparkSuite {
+  import spark.implicits._
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+
+  private def deleteTree(p: Path): Unit =
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
 
   test("pinned reads see every writer's commit; earlier frames keep their snapshot") {
     val c = GraphFixture.commit(spark, tmpDir("kgpin"))
@@ -72,6 +82,46 @@ class KgSessionPinSpec extends SparkSuite {
     val first = jobsOf(kg.statistics())
     val second = jobsOf(kg.statistics())
     assert(second < first, s"second statistics() ran $second jobs, the first $first")
+    assert(first <= 2, s"statistics() after addEdge: the fold only, ran $first jobs")
+    assert(second == 0, s"statistics() of pinned snapshots ran $second jobs")
     assert(kg.statistics() == (5L, 6L))
+
+    // the degree is carried across a fold: the fold, then top-k
+    kg.mostConnected(5).collect()
+    val Seq(ml, rl) = Seq("Machine Learning", "Reinforcement Learning").map(n => kg.idOf(n).get)
+    kg.addEdge(ml, rl, "Manually Linked")
+    val (top, topJobs) = withJobCount(kg.mostConnected(5).collect().toSeq)
+    assert(topJobs <= 3, s"mostConnected(5) after addEdge ran $topJobs jobs")
+    val edgesDir = Pipeline.edgesDir(c)
+    assert(top == KgQueries.mostConnected(kg.nodes,
+      KgQueries.mergedEdges(TableIO.readCurrent(spark, edgesDir)), 5).collect().toSeq)
+
+    // a tick followed by statistics() folds: it reads only the tick's
+    // delta, so it runs with the chain's base snapshot data gone
+    val mentions = Seq(("d1", "Gradient Descent"), ("d1", "Reinforcement Learning"))
+      .toDF("doc_id", "canonical")
+    val enricher = new Enricher(kg, mentions, Enricher.Conf(minDocs = 1, batch = 1))
+    assert(enricher.runOnce() == 1L)
+    val head = TableIO.requireCurrentId(edgesDir)
+    deleteTree(Paths.get(edgesDir, f"snap-${TableIO.snapshotChain(edgesDir, head).last}%05d"))
+    val (stats, statJobs) = withJobCount(kg.statistics())
+    assert(stats == (5L, 8L))
+    assert(statJobs <= 2, s"statistics() after a tick ran $statJobs jobs")
+  }
+
+  test("a fold whose delta file is gone or broken throws; it does not wait") {
+    def readAfter(what: String)(break: Path => Unit): Unit = {
+      val c = GraphFixture.commit(spark, tmpDir("kgbroken"))
+      val edgesDir = Pipeline.edgesDir(c)
+      val kg = KgSession.open(spark, c.workDir)
+      kg.edges
+      kg.addEdge(kg.idOf("Deep Learning").get, kg.idOf("Gradient Descent").get, "Manually Linked")
+      val snap = Paths.get(edgesDir, f"snap-${TableIO.requireCurrentId(edgesDir)}%05d")
+      break(Files.list(snap).iterator().asScala.find(_.toString.endsWith(".parquet")).get)
+      val read = Future(scala.util.Try(kg.edges))(ExecutionContext.global)
+      assert(Await.result(read, Duration(60, "s")).isFailure, s"kg.edges with $what returned a frame")
+    }
+    readAfter("the delta's parquet file deleted")(Files.delete)
+    readAfter("the delta's parquet file overwritten")(Files.write(_, "not parquet".getBytes))
   }
 }

@@ -311,16 +311,15 @@ object Bench {
       }
     }
     val docsDir = s"$root/corpus-$nDocs/docs"
-    val warmDocs = s"$root/corpus-warm/docs"
 
     // corpora built once (excluded from timing)
     val spark = session(32)
     if (!Files.exists(Paths.get(docsDir, "_DONE")))
       Pipeline.ensureCorpus(spark,
         Pipeline.Conf(workDir = s"$root/corpus-$nDocs", nDocs = nDocs, nBuckets = 128))
-    if (!Files.exists(Paths.get(warmDocs, "_DONE")))
-      Pipeline.ensureCorpus(spark,
-        Pipeline.Conf(workDir = s"$root/corpus-warm", nDocs = 20000L, nBuckets = 32))
+    val warmConf = Pipeline.Conf(workDir = s"$root/corpus-warm", nDocs = 20000L, nBuckets = 32)
+    val warmDocs = Pipeline.docsDir(warmConf)
+    Pipeline.ensureCorpus(spark, warmConf)
     // workload-matched probe inputs: a warm-corpus slice + the same automata
     // the pipeline broadcasts, held in plain driver memory
     val probeDocs = {
@@ -329,10 +328,9 @@ object Bench {
     }
     val acProbe = graft.extract.AhoCorasick({
       import spark.implicits._
-      spark.read.parquet(s"$warmDocs/../aliases").select("alias").as[String].collect().toSeq
+      spark.read.parquet(Pipeline.aliasesPath(warmConf)).select("alias").as[String].collect().toSeq
     })
-    val pcProbe = graft.extract.AhoCorasick(
-      graft.corpus.Golden.triples(graft.corpus.Golden.defaultDir).map(_.pred).distinct)
+    val pcProbe = graft.extract.AhoCorasick(graft.corpus.Vocabulary.grammar(warmConf.goldenDir))
     spark.stop()
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     // Parallelism pair standing in for N and 4N executors. Default 1,4
@@ -600,9 +598,11 @@ object Bench {
     val md =
       f"""# BENCH — measured
          |
-         |Same corpus ($nDocs docs, deterministic seed 42), same staged
-         |pipeline (fastExtract mode), two parallelism levels standing in for
-         |N and 4N executors (no real cluster in this sandbox); each
+         |Same corpus ($nDocs docs, deterministic seed 42, built from the
+         |engine's built-in vocabulary; r01–r07 ran on a corpus built from the
+         |reference's golden export, so their figures are not comparable),
+         |same staged pipeline (fastExtract mode), two parallelism levels
+         |standing in for N and 4N executors (no real cluster in this sandbox); each
          |measurement in a fresh JVM with an untimed JIT-warmup pipeline.
          |local[$loLvl]/local[$hiLvl]: the sandbox host throttles SUSTAINED
          |high-thread-count load unpredictably once its burst budget drains

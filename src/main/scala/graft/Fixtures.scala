@@ -1,6 +1,5 @@
 package graft
 
-import graft.corpus.{DeterministicCorpus, Golden}
 import graft.extract.Extract
 import graft.model.Doc
 import graft.run.Pipeline
@@ -73,7 +72,9 @@ object Fixtures {
     // identical; the oracle re-derivation is what proves it)
     // v15 (r07): zero-copy in-place span scan (copy-on-emit slices) — same
     // rationale: fixtures must be built by the kernel that ships
-    val ready = Paths.get(r, s"_READY_v15_jdk$jdkTag")
+    // v16: the default corpus comes from the built-in vocabulary instead of
+    // the reference export — different names, triples and docs
+    val ready = Paths.get(r, s"_READY_v16_jdk$jdkTag")
     if (Files.exists(ready)) return r
     import spark.implicits._
 

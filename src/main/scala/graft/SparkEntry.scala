@@ -123,7 +123,7 @@ object SparkEntry {
     "q_stats" -> ((s, d) =>
       KgQueries.statistics(Fixtures.nodesFlat(s, d), Fixtures.edgesFlat(s, d))),
     // --- X2/J4 evidence: doc-level co-occurrence (per-doc entity cap of 8
-    //     binds on ~270 fixture docs, which carry up to 11 entities) ---
+    //     binds on 15 sf0.01 fixture docs, which carry up to 9 entities) ---
     "q_cooccurrence" -> ((s, d) =>
       KgQueries.cooccurrence(mentionsCanon(s, d), maxPerDoc = 8)
         .filter(col("n_docs") >= 3).orderBy("a", "b")),
@@ -179,9 +179,9 @@ object SparkEntry {
       KgQueries.reachableFrom(Fixtures.nodesFlat(s, d), Fixtures.edgesFlat(s, d),
         "Artificial Intelligence", maxHops = 2, maxNodes = 1000)),
     // --- O6 with the maxNodes budget BINDING mid-traversal: at sf0.01 the
-    //     seed reaches 1 + 7 + 15 nodes at hops 0/1/2, so maxNodes=15 takes
+    //     seed reaches 1 + 7 + 32 nodes at hops 0/1/2, so maxNodes=15 takes
     //     all of hop 1 and forces the per-hop (hops, name, node_id) winner
-    //     selection to pick 7 of hop 2's 15 candidates — the oracle replays
+    //     selection to pick 7 of hop 2's 32 candidates — the oracle replays
     //     the in-loop budget hop by hop ---
     "q_bfs_capped" -> ((s, d) =>
       KgQueries.reachableFrom(Fixtures.nodesFlat(s, d), Fixtures.edgesFlat(s, d),
@@ -622,7 +622,7 @@ object SparkEntry {
     // when they exceed the remaining budget the winners are the budget-many
     // smallest by (name NULLS LAST, node_id) — exactly reachableFrom's
     // mid-loop cap. maxNodes=15: seed 1 + hop1 7 (under budget 14, all in)
-    // + hop2 top-7-of-15 (budget 15-1-7)
+    // + hop2 top-7-of-32 (budget 15-1-7)
     "q_bfs_capped" ->
       s"""WITH adj AS (SELECT DISTINCT src_id, dst_id FROM ${p("edges_flat")}),
          |nd AS (SELECT node_id, name FROM ${p("nodes_flat")}),

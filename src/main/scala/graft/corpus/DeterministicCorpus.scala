@@ -6,12 +6,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 final case class AliasRow(alias: String, canonical: String, prior: Double, alias_regex: String)
 
 /** Deterministic synthetic corpus of interleaved text+media documents encoding
-  * the reference's golden triples (FIXTURES.md §1). Pure function of
-  * (seed, docIdx, sorted golden triples) — generated DISTRIBUTED via
+  * a [[Vocabulary]]'s triples (FIXTURES.md §1): by default the engine's
+  * built-in one, for the parity tests the reference's golden export. Pure
+  * function of (seed, docIdx, sorted triples) — generated DISTRIBUTED via
   * `spark.range(nDocs).map(genDoc)` so the same generator scales from the
   * 200-doc test corpus to the multi-M-doc bench corpus without a driver loop.
   *
-  * Each golden triple (s,p,o) renders as a text span "<s> <p-verbatim> <o>."
+  * Each triple (s,p,o) renders as a text span "<s> <p-verbatim> <o>."
   * (predicate verbatim so pred normalization round-trips exactly); docs
   * interleave media spans and four kinds of deterministic bait:
   *   - filler sentences with no mentions,
@@ -69,7 +70,7 @@ object DeterministicCorpus extends Serializable {
     s"(^|[^A-Za-z0-9])$esc($$|[^A-Za-z0-9])"
   }
 
-  /** Alias dictionary derived from golden node names: identity + lowercase +
+  /** Alias dictionary derived from the vocabulary's node names: identity + lowercase +
     * unique acronyms; the lowercase alias of `ccBaitName` is withheld so its
     * lowercase occurrences exercise the group-min canonicalization path. */
   def aliasRows(names: Seq[String], ccBaitName: String): Vector[AliasRow] = {
@@ -179,21 +180,18 @@ object DeterministicCorpus extends Serializable {
 
   /** Distributed corpus generation: Dataset[Doc] of nDocs documents. */
   def docs(spark: SparkSession, nDocs: Long, seed: Long = 42L,
-           goldenDir: String = Golden.defaultDir): Dataset[Doc] = {
+           vocab: Vocabulary = Vocabulary.builtIn): Dataset[Doc] = {
     import spark.implicits._
-    val ts = Golden.triples(goldenDir)
-    val names = Golden.nodeNames(goldenDir)
-    val ccBait = pickCcBaitName(names)
-    val acronyms = aliasRows(names, ccBait).filter(_.prior == 0.6)
+    val ccBait = pickCcBaitName(vocab.names)
+    val acronyms = aliasRows(vocab.names, ccBait).filter(_.prior == 0.6)
       .map(r => r.canonical -> r.alias).toMap
-    val tsB = spark.sparkContext.broadcast(ts)
+    val tsB = spark.sparkContext.broadcast(vocab.triples)
     spark.range(0, nDocs)
       .map(i => genDoc(i, seed, tsB.value, acronyms, ccBait))
   }
 
-  def aliases(spark: SparkSession, goldenDir: String = Golden.defaultDir): Dataset[AliasRow] = {
+  def aliases(spark: SparkSession, vocab: Vocabulary = Vocabulary.builtIn): Dataset[AliasRow] = {
     import spark.implicits._
-    val names = Golden.nodeNames(goldenDir)
-    spark.createDataset(aliasRows(names, pickCcBaitName(names)))
+    spark.createDataset(aliasRows(vocab.names, pickCcBaitName(vocab.names)))
   }
 }

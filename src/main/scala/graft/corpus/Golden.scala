@@ -5,24 +5,33 @@ import scala.jdk.CollectionConverters._
 
 final case class GoldenTriple(subj: String, pred: String, obj: String)
 
-/** Loader for the reference's exported golden graph
-  * (/root/reference/data/Edge_Details.json, Node_Details.json — a real run
-  * with seed "Artificial Intelligence"; see data/Data_Samples.md:1-6).
-  * 76 nodes, 195 distinct (subj, pred, obj) triples, 138 raw predicates.
+/** Loader for a graph in the reference's export shape: `Edge_Details.json`
+  * (rows of n/r/m) and `Node_Details.json` (rows of n).
+  *
+  * [[defaultDir]] holds the reference's own export (a real run with seed
+  * "Artificial Intelligence"; see data/Data_Samples.md:1-6): 76 nodes, 195
+  * distinct (subj, pred, obj) triples, 138 raw predicates. It is the
+  * golden-parity oracle only; the engine's default corpus comes from
+  * [[Vocabulary.builtIn]]. A missing file fails with "reference export not
+  * found at <dir>".
   *
   * Files are UTF-8 with a BOM; Jackson's byte bootstrapper strips it.
   */
 object Golden {
   val defaultDir = "/root/reference/data"
 
-  private def readJson(path: String): JsonNode =
-    new ObjectMapper().readTree(new java.io.File(path))
+  private def readJson(dir: String, file: String): JsonNode = {
+    val f = new java.io.File(dir, file)
+    if (!f.isFile)
+      throw new java.io.FileNotFoundException(s"reference export not found at $dir (no $file)")
+    new ObjectMapper().readTree(f)
+  }
 
   /** Distinct (subj, pred, obj) from rows of Edge_Details.json that carry an
     * `r` object — mirrors the reference's canonical triple read
     * (RETURN a.name, r.type, b.name — kg-builder/internal/neo4j/neo4j.go:253-283). */
-  def triples(dir: String = defaultDir): Vector[GoldenTriple] = {
-    val root = readJson(s"$dir/Edge_Details.json")
+  def triples(dir: String): Vector[GoldenTriple] = {
+    val root = readJson(dir, "Edge_Details.json")
     root.elements().asScala.flatMap { row =>
       val r = row.get("r")
       if (r == null || r.isNull) None
@@ -35,8 +44,8 @@ object Golden {
     }.toVector.distinct.sortBy(t => (t.subj, t.pred, t.obj))
   }
 
-  def nodeNames(dir: String = defaultDir): Vector[String] = {
-    val root = readJson(s"$dir/Node_Details.json")
+  def nodeNames(dir: String): Vector[String] = {
+    val root = readJson(dir, "Node_Details.json")
     root.elements().asScala
       .map(_.get("n").get("properties").get("name").asText())
       .toVector.distinct.sorted
@@ -48,7 +57,4 @@ object Golden {
     * the golden predicates are case-inconsistent (`Application` vs
     * `application`). All 195 golden triples stay distinct under it. */
   def normPred(p: String): String = p.trim.toLowerCase.replace(' ', '_')
-
-  def normalizedTriples(dir: String = defaultDir): Set[(String, String, String)] =
-    triples(dir).map(t => (t.subj, normPred(t.pred), t.obj)).toSet
 }

@@ -1,6 +1,6 @@
 package graft.run
 
-import graft.corpus.{DeterministicCorpus, Golden}
+import graft.corpus.{DeterministicCorpus, Vocabulary}
 import graft.extract.{ByteAhoCorasick, Extract}
 import graft.graph.Materialize
 import graft.link.EntityLink
@@ -33,6 +33,11 @@ object Pipeline {
     *   stage-granular snapshot commit + per-partition lineage counters — the
     *   throughput configuration for large corpora where the per-bucket job
     *   latency would dominate.
+    * @param goldenDir where the corpus vocabulary and the predicate grammar
+    *   come from: `Vocabulary.BuiltIn` (the default) for the vocabulary
+    *   shipped in the jar, or a directory in the reference export's JSON
+    *   shape (`Edge_Details.json`, `Node_Details.json`). With a prebuilt
+    *   corpus only the grammar is read, from `Edge_Details.json`.
     * @param docsDirOverride share one pre-built corpus across runs. */
   final case class Conf(
       workDir: String,
@@ -40,7 +45,7 @@ object Pipeline {
       seed: Long = 42L,
       nBuckets: Int = 8,
       concurrency: Int = 4,
-      goldenDir: String = Golden.defaultDir,
+      goldenDir: String = Vocabulary.BuiltIn,
       fastExtract: Boolean = false,
       docsDirOverride: Option[String] = None)
 
@@ -60,9 +65,10 @@ object Pipeline {
   def ensureCorpus(spark: SparkSession, c: Conf): Unit = {
     val marker = java.nio.file.Paths.get(docsDir(c), "_DONE")
     if (!java.nio.file.Files.exists(marker)) {
-      val docs = DeterministicCorpus.docs(spark, c.nDocs, c.seed, c.goldenDir)
+      val vocab = Vocabulary.at(c.goldenDir)
+      val docs = DeterministicCorpus.docs(spark, c.nDocs, c.seed, vocab)
       TableIO.bucketize(docs.toDF(), "doc_id", c.nBuckets, docsDir(c))
-      DeterministicCorpus.aliases(spark, c.goldenDir).toDF()
+      DeterministicCorpus.aliases(spark, vocab).toDF()
         .coalesce(1).write.mode("overwrite").parquet(aliasesPath(c))
       java.nio.file.Files.writeString(marker, "ok")
     }
@@ -98,7 +104,7 @@ object Pipeline {
     val (dict, predGrammar) = phase("dicts")((
       spark.sparkContext.broadcast(ByteAhoCorasick(aliasPairs.map(_._1))),
       spark.sparkContext.broadcast(
-        ByteAhoCorasick(Golden.triples(c.goldenDir).map(_.pred).distinct))))
+        ByteAhoCorasick(Vocabulary.grammar(c.goldenDir)))))
 
     // stage 1: extraction kernel plan (no materialization of its own —
     // fused into the pre-aggregate job below)

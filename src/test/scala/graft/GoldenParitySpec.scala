@@ -1,25 +1,33 @@
 package graft
 
-import graft.corpus.{DeterministicCorpus, Golden}
+import graft.corpus.{DeterministicCorpus, Golden, Vocabulary}
 import graft.model.Doc
 import graft.run.Pipeline
 import org.apache.spark.sql.functions._
 
 /** The correctness gate from BASELINE.json: full pipeline on the
   * deterministic corpus must reproduce the reference's golden triples at
-  * P ≥ 0.95 ∧ R ≥ 0.95, preserve span sequences, and be deterministic. */
+  * P ≥ 0.95 ∧ R ≥ 0.95, preserve span sequences, and be deterministic.
+  *
+  * Every run here is built from the reference's export at
+  * `Golden.defaultDir`, not the engine's built-in vocabulary: the export is
+  * the oracle. Where it is absent these tests fail with "reference export
+  * not found at <dir>". */
 class GoldenParitySpec extends SparkSuite {
   import spark.implicits._
 
-  private lazy val out1 = Pipeline.run(spark,
-    Pipeline.Conf(workDir = tmpDir("parity1"), nDocs = 220, nBuckets = 4, concurrency = 2))
+  private def conf(work: String, fastExtract: Boolean = false) =
+    Pipeline.Conf(workDir = tmpDir(work), nDocs = 220, nBuckets = 4, concurrency = 2,
+      goldenDir = Golden.defaultDir, fastExtract = fastExtract)
+
+  private lazy val out1 = Pipeline.run(spark, conf("parity1"))
 
   private def triples(o: Pipeline.Out): Set[(String, String, String)] =
     o.triplesView.as[(String, String, String)].collect().toSet
 
   test("golden triple parity: P >= 0.95 and R >= 0.95") {
     val emitted = triples(out1)
-    val golden = Golden.normalizedTriples()
+    val golden = Vocabulary.at(Golden.defaultDir).normalizedTriples
     val tp = (emitted & golden).size.toDouble
     val p = tp / math.max(1, emitted.size)
     val r = tp / golden.size
@@ -31,8 +39,7 @@ class GoldenParitySpec extends SparkSuite {
   test("fastExtract (the bench configuration) emits the identical triple set") {
     // the fused single-job path and the bucketed resumable path must be the
     // same engine: identical triples, nodes, and edge MERGE keys
-    val fast = Pipeline.run(spark, Pipeline.Conf(workDir = tmpDir("parityFast"),
-      nDocs = 220, nBuckets = 4, concurrency = 2, fastExtract = true))
+    val fast = Pipeline.run(spark, conf("parityFast", fastExtract = true))
     assert(triples(fast) == triples(out1))
     assert(fast.nodes.select("canonical_name").as[String].collect().toSet ==
       out1.nodes.select("canonical_name").as[String].collect().toSet)
@@ -43,13 +50,14 @@ class GoldenParitySpec extends SparkSuite {
 
   test("node parity: canonical node set equals the 76 golden names") {
     val names = out1.nodes.select("canonical_name").as[String].collect().toSet
-    assert(names == Golden.nodeNames().toSet)
+    assert(names == Golden.nodeNames(Golden.defaultDir).toSet)
   }
 
   test("span invariant: materialized docs preserve (kind, text, media_ref, order)") {
     val readBack = out1.docs.drop("bucket").as[Doc].collect()
       .map(d => d.doc_id -> d.spans.map(s => (s.kind, s.text, s.media_ref)).toList).toMap
-    val fresh = DeterministicCorpus.docs(spark, 220).collect()
+    val fresh = DeterministicCorpus.docs(spark, 220,
+        vocab = Vocabulary.at(Golden.defaultDir)).collect()
       .map(d => d.doc_id -> d.spans.map(s => (s.kind, s.text, s.media_ref)).toList).toMap
     assert(readBack.keySet == fresh.keySet)
     assert(readBack == fresh)
@@ -76,8 +84,7 @@ class GoldenParitySpec extends SparkSuite {
   }
 
   test("determinism: independent run yields identical sorted triple set") {
-    val out2 = Pipeline.run(spark,
-      Pipeline.Conf(workDir = tmpDir("parity2"), nDocs = 220, nBuckets = 4, concurrency = 2))
+    val out2 = Pipeline.run(spark, conf("parity2"))
     assert(triples(out2) == triples(out1))
     assert(out2.nodes.select("node_id", "name").as[(Long, String)].collect().sortBy(_._1).toSeq ==
       out1.nodes.select("node_id", "name").as[(Long, String)].collect().sortBy(_._1).toSeq)

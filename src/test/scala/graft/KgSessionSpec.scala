@@ -5,14 +5,16 @@ import graft.run.Pipeline
 
 class KgSessionSpec extends SparkSuite {
 
+  // the default corpus: the built-in vocabulary's 78 names and 167 triples,
+  // all distinct under normPred, so one node per name and one edge per triple
   private lazy val kg = KgSession.build(spark,
     Pipeline.Conf(workDir = tmpDir("kgsession"), nDocs = 220, nBuckets = 4, concurrency = 2))
 
   test("build → statistics, search, degree, reachability") {
     val (n, e) = kg.statistics()
-    assert(n == 76 && e == 195)
+    assert(n == 78 && e == 167)
     assert(kg.search("Neural") == Seq("Convolutional Neural Networks", "Neural Networks"))
-    assert(kg.degree().count() == 76)
+    assert(kg.degree().count() == 78)
     val reach = kg.reachableFrom("Artificial Intelligence", maxHops = 10)
     assert(reach.count() >= 20) // AI reaches a large component
   }
@@ -23,12 +25,12 @@ class KgSessionSpec extends SparkSuite {
     kg.addEdge(a, b, "Manually Linked")
     val after = kg.edgeSnapshots()
     assert(after.size == before.size + 1)
-    assert(kg.edges.count() == 196)
+    assert(kg.edges.count() == 168)
     // time travel: previous snapshot unchanged
-    assert(kg.edgesAt(before.max).count() == 195)
+    assert(kg.edgesAt(before.max).count() == 167)
     // idempotent MERGE: same edge again → same row count, n_obs bumped
     kg.addEdge(a, b, "Manually Linked")
-    assert(kg.edges.count() == 196)
+    assert(kg.edges.count() == 168)
     import org.apache.spark.sql.functions._
     assert(kg.edges.filter(col("src_id") === a && col("dst_id") === b)
       .select("n_obs").collect()(0).getLong(0) == 2L)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.corpus.{DeterministicCorpus, Golden}
+import graft.corpus.{DeterministicCorpus, Vocabulary}
 import graft.extract.Extract
 import graft.model.Doc
 import graft.streaming.StreamIngest
@@ -8,11 +8,12 @@ import graft.streaming.StreamIngest
 class StreamIngestSpec extends SparkSuite {
   import spark.implicits._
 
+  // the vocabulary DeterministicCorpus.docs builds its docs from by default
+  private val vocab = Vocabulary.builtIn
   private lazy val dict = Extract.broadcastDict(spark,
-    DeterministicCorpus.aliasRows(Golden.nodeNames(),
-      DeterministicCorpus.pickCcBaitName(Golden.nodeNames())).map(_.alias))
-  private lazy val preds = Extract.broadcastDict(spark,
-    Golden.triples().map(_.pred).distinct)
+    DeterministicCorpus.aliasRows(vocab.names,
+      DeterministicCorpus.pickCcBaitName(vocab.names)).map(_.alias))
+  private lazy val preds = Extract.broadcastDict(spark, vocab.preds)
 
   private def writeSlice(dir: String, from: Long, until: Long): Unit =
     DeterministicCorpus.docs(spark, until).filter(d => d.doc_id >= f"doc-$from%09d")

@@ -391,7 +391,7 @@ object Bench {
       else scala.jdk.CollectionConverters.IteratorHasAsScala(
         Files.readAllLines(histPath).iterator).asScala.toSeq
     val histFloor: Map[Int, Double] =
-      BenchSelect.historicalFloors(histLines, nDocs, loLvl, hiLvl)
+      BenchSelect.historicalFloors(histLines, BenchSelect.Corpus, nDocs, loLvl, hiLvl)
     if (histFloor.nonEmpty)
       System.err.println(s"FLOORS historical per-level clean CPU: " +
         histFloor.toSeq.sorted.map { case (l, c) => f"local[$l]=$c%.0f" }.mkString(" "))
@@ -559,7 +559,8 @@ object Bench {
     // legacy rows used t4/t16 keys regardless of the pair, so the parser
     // accepts both spellings. sched≥2 rows also carry the selected runs'
     // executor CPU per level — the per-level floor anchor for later
-    // invocations.
+    // invocations. "corpus" names the corpus measured; rows without it ran
+    // on the export-derived one, and rows pool only within one corpus.
     // probe_eff: best short bare-thread kernel ratio seen this invocation
     // (the box's burst-timescale ceiling for this workload). probe_decay:
     // the LAST sustained pre-probe reading — min window throughput over the
@@ -568,7 +569,7 @@ object Bench {
     // dirty row with low probe_decay was measured inside a sustained-
     // throttle phase; dirty with probe_decay ≈ 1 means the burst budget
     // drained MID-run — attributed weather instead of unknown weather.
-    val histLine = f"""{"t_n":$tN%.3f,"t_4n":$t4N%.3f,"eff":$eff%.3f,"host":$hostEff%.3f,"kernel":$kernelEff%.3f,"n":$nN,"n_docs":$nDocs,"lvl":"$loLvl,$hiLvl","clean_pair":$cleanPair,"cpu_n":${bestN.cpuS}%.1f,"cpu_4n":${best4N.cpuS}%.1f,"probe_eff":$kernelEff%.3f,"probe_decay":$lastDecay%.3f,"preprobe_skips":$skips,"sched":$CurrentSched}"""
+    val histLine = f"""{"t_n":$tN%.3f,"t_4n":$t4N%.3f,"eff":$eff%.3f,"host":$hostEff%.3f,"kernel":$kernelEff%.3f,"n":$nN,"n_docs":$nDocs,"lvl":"$loLvl,$hiLvl","clean_pair":$cleanPair,"cpu_n":${bestN.cpuS}%.1f,"cpu_4n":${best4N.cpuS}%.1f,"probe_eff":$kernelEff%.3f,"probe_decay":$lastDecay%.3f,"preprobe_skips":$skips,"sched":$CurrentSched,"corpus":"${BenchSelect.Corpus}"}"""
     Files.writeString(histPath, histLine + "\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     // Clean observations (BenchSelect.cleanPairs: clean-pair rows, in-band
@@ -579,7 +580,7 @@ object Bench {
     // of {0.861, 0.854, 0.907} reports 0.861). The max is still reported
     // alongside, labeled as such. No clean observation yet → the current
     // run stands in only if ITS pair is clean and in-band.
-    val cleanRows = BenchSelect.cleanPairs(histLines, nDocs, loLvl, hiLvl)
+    val cleanRows = BenchSelect.cleanPairs(histLines, BenchSelect.Corpus, nDocs, loLvl, hiLvl)
     val cleanEffs = cleanRows.map(_._2).sorted
     val bestEff =
       BenchSelect.median(cleanEffs).getOrElse(
@@ -699,12 +700,13 @@ object Bench {
          || --- | --- | --- | --- |
          |${
            val pairs = histLines.flatMap(l =>
-             if (BenchSelect.jsonField(l, "n_docs").contains(nDocs.toDouble))
+             if (BenchSelect.corpusOf(l) == BenchSelect.Corpus &&
+                 BenchSelect.jsonField(l, "n_docs").contains(nDocs.toDouble))
                """"lvl":"([0-9]+),([0-9]+)"""".r.findFirstMatchIn(l)
                  .map(m => (m.group(1).toInt, m.group(2).toInt))
              else None).distinct.sorted
            pairs.map { case (lo, hi) =>
-             val effs = BenchSelect.cleanPairs(histLines, nDocs, lo, hi).map(_._2)
+             val effs = BenchSelect.cleanPairs(histLines, BenchSelect.Corpus, nDocs, lo, hi).map(_._2)
              val med = BenchSelect.median(effs).map(e => f"$e%.3f").getOrElse("—")
              val mx = if (effs.nonEmpty) f"${effs.max}%.3f" else "—"
              s"| $lo→$hi | ${effs.size} | $med | $mx |"

@@ -35,6 +35,20 @@ object BenchSelect {
   private[graft] def jsonField(l: String, k: String): Option[Double] =
     s""""$k":([0-9.]+)""".r.findFirstMatchIn(l).map(_.group(1).toDouble)
 
+  /** The corpus [[Bench]] builds, stamped into its ledger rows: the one
+    * generated from the built-in vocabulary. */
+  val Corpus = "vocab"
+
+  /** The corpus of ledger rows without a "corpus" field: every row before
+    * the field was measured on the corpus built from the reference's
+    * export. */
+  val ExportCorpus = "export"
+
+  /** The corpus a ledger row was measured on. Clean cost and efficiency
+    * depend on the corpus, so rows pool only with the same corpus's. */
+  private[graft] def corpusOf(l: String): String =
+    """"corpus":"([^"]*)"""".r.findFirstMatchIn(l).fold(ExportCorpus)(_.group(1))
+
   /** Historical per-level clean-CPU floors: for each requested level, the
     * min CPU observed AT THAT LEVEL across sched≥[[CurrentSched]]
     * clean-pair ledger rows of the SAME corpus size — from ANY level
@@ -48,12 +62,12 @@ object BenchSelect {
     * described.) Floors from a different corpus never apply (clean cost
     * scales with data); evidence from clean_pair:false rows is discarded
     * wholesale since the ledger does not record which side was dirty. */
-  def historicalFloors(lines: Seq[String], nDocs: Long,
+  def historicalFloors(lines: Seq[String], corpus: String, nDocs: Long,
       loLvl: Int, hiLvl: Int): Map[Int, Double] = {
     val rows = lines.filter { l =>
       // delimiter-aware corpus match: raw substring containment would let
       // "n_docs":250000000 satisfy a 25000000 query (decimal prefix)
-      jsonField(l, "n_docs").contains(nDocs.toDouble) &&
+      corpusOf(l) == corpus && jsonField(l, "n_docs").contains(nDocs.toDouble) &&
         l.contains(""""clean_pair":true""") &&
         jsonField(l, "sched").exists(_ >= CurrentSched)
     }
@@ -93,9 +107,9 @@ object BenchSelect {
     * rows were admitted under the since-discredited 2.2× ceiling (the
     * 4,16 eff-0.470 row) and are excluded until re-measured under
     * sched≥[[CurrentSched]]. */
-  def cleanPairs(lines: Seq[String], nDocs: Long,
+  def cleanPairs(lines: Seq[String], corpus: String, nDocs: Long,
       loLvl: Int, hiLvl: Int): Seq[(Double, Double)] =
-    lines.flatMap { l =>
+    lines.filter(corpusOf(_) == corpus).flatMap { l =>
       val m = """"(?:t16|t_4n)":([0-9.]+).*?"eff":([0-9.]+).*"n_docs":([0-9]+)""".r
         .findFirstMatchIn(l)
       val lvl = """"lvl":"([0-9,]+)"""".r.findFirstMatchIn(l)

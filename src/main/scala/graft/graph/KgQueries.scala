@@ -135,28 +135,42 @@ object KgQueries {
     enrichOnceFromCo(nodes, edges,
       cooccurrence(mentionsCanon).filter(col("n_docs") >= minDocs), maxNew, focus)
 
-  /** Enrichment tick over a PRECOMPUTED co-occurrence table — the corpus
-    * aggregate is a fixed input, so a ticker computes it once and re-runs
-    * only the (tiny) id-mapping + anti-join + top-k per tick. */
+  /** Enrichment tick over a PRECOMPUTED co-occurrence table: exactly
+    * [[pickNew]] over [[coPairs]]. A ticker computes the corpus aggregate
+    * once and pins its [[coPairs]] per nodes snapshot, so a tick runs only
+    * [[pickNew]]. */
   def enrichOnceFromCo(nodes: DataFrame, edges: DataFrame, co: DataFrame,
-      maxNew: Int, focus: Option[DataFrame] = None): DataFrame = {
+      maxNew: Int, focus: Option[DataFrame] = None): DataFrame =
+    pickNew(coPairs(nodes, co), edges, maxNew, focus)
+
+  /** The co-occurrence pairs (a, b, n_docs) mapped to node ids: a_id, b_id,
+    * the undirected key (k1, k2) = (least, greatest) of the ids, and the
+    * hash-ordered tie-break `pick`. Depends on the nodes only, not on the
+    * edges. */
+  def coPairs(nodes: DataFrame, co: DataFrame): DataFrame = {
     val ids = nodes.select(col("name"), col("node_id"))
-    val withIds0 = co
-      .join(ids.withColumnRenamed("name", "a").withColumnRenamed("node_id", "a_id"), Seq("a"))
-      .join(ids.withColumnRenamed("name", "b").withColumnRenamed("node_id", "b_id"), Seq("b"))
-    val withIds = focus match {
-      case Some(f) => withIds0.join(broadcast(f.select(col("node_id"))),
-        col("a_id") === col("node_id") || col("b_id") === col("node_id"), "left_semi")
-      case None => withIds0
-    }
+    co.join(ids.select(col("name").as("a"), col("node_id").as("a_id")), Seq("a"))
+      .join(ids.select(col("name").as("b"), col("node_id").as("b_id")), Seq("b"))
+      .select(col("a"), col("b"), col("n_docs"), col("a_id"), col("b_id"),
+        least(col("a_id"), col("b_id")).as("k1"),
+        greatest(col("a_id"), col("b_id")).as("k2"),
+        md5(concat_ws("|", col("a"), col("b"))).as("pick"))
+  }
+
+  /** The top `maxNew` of [[coPairs]] `pairs` by (n_docs desc, pick) that
+    * are not adjacent in `edges` in either direction, as CoOccursWith edge
+    * rows.
+    * @param focus G5 low-connectivity reseeding, as in [[enrichOnce]] */
+  def pickNew(pairs: DataFrame, edges: DataFrame, maxNew: Int,
+      focus: Option[DataFrame]): DataFrame = {
+    val focused = focus.fold(pairs)(f => pairs.join(broadcast(f.select(col("node_id"))),
+      col("a_id") === col("node_id") || col("b_id") === col("node_id"), "left_semi"))
+    // an anti-join drops a pair on any match, so repeated keys (one per
+    // pred, one per direction) need no distinct
     val existing = edges.select(
       least(col("src_id"), col("dst_id")).as("k1"),
-      greatest(col("src_id"), col("dst_id")).as("k2")).distinct()
-    withIds
-      .withColumn("k1", least(col("a_id"), col("b_id")))
-      .withColumn("k2", greatest(col("a_id"), col("b_id")))
-      .join(existing, Seq("k1", "k2"), "left_anti")
-      .withColumn("pick", md5(concat_ws("|", col("a"), col("b"))))
+      greatest(col("src_id"), col("dst_id")).as("k2"))
+    focused.join(existing, Seq("k1", "k2"), "left_anti")
       .orderBy(col("n_docs").desc, col("pick").asc).limit(maxNew)
       .select(col("a_id").as("src_id"), col("b_id").as("dst_id"),
         lit("CoOccursWith").as("pred"), lit("cooccurswith").as("pred_norm"),
@@ -221,13 +235,15 @@ object KgQueries {
       provType: org.apache.spark.sql.types.DataType,
       srcId: Long, dstId: Long, pred: String): DataFrame = {
     import spark.implicits._
+    // one projection: each withColumn would be its own analysis pass
     Seq((srcId, dstId, pred)).toDF("src_id", "dst_id", "pred")
-      .withColumn("pred_norm", Materialize.normPred(col("pred")))
-      .withColumn("strength", lit(1.0))
-      .withColumn("n_obs", lit(1L))
-      .withColumn("description", lit(s"$ManualDescriptionPrefix$pred"))
-      .withColumn("provenance", array().cast(provType))
-      .withColumn("created_at", Materialize.CreatedAt)
+      .select(col("src_id"), col("dst_id"), col("pred"),
+        Materialize.normPred(col("pred")).as("pred_norm"),
+        lit(1.0).as("strength"),
+        lit(1L).as("n_obs"),
+        lit(s"$ManualDescriptionPrefix$pred").as("description"),
+        array().cast(provType).as("provenance"),
+        Materialize.CreatedAt.as("created_at"))
   }
 
   /** Read-side MERGE over a (possibly delta-chained) union of edge rows: one

@@ -112,13 +112,13 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
       (if (keyed) Seq(collect_set(struct("src_id", "dst_id", "pred")).as("keys")) else Nil): _*)
     val df = view(base.fold(in)(b => b.df.unionByName(in).coalesce(math.max(1, b.parts))))
       .observe(out, count(lit(1)).as("rows")).localCheckpoint()
-    val r = metrics(read)
+    val r = TableIO.observed(read)
     val got = r.getAs[Long]("rows")
     TableIO.snapshotRows(dir, ids).filter(_ != got).foreach { want =>
       throw new IllegalStateException(
         s"$dir: snapshots ${ids.mkString(",")} read $got rows, their manifests record $want")
     }
-    val pin = Pin(ids.head, df, metrics(out).getAs[Long]("rows"),
+    val pin = Pin(ids.head, df, TableIO.observed(out).getAs[Long]("rows"),
       df.queryExecution.toRdd.getNumPartitions)
     (pin, Option.when(keyed)(r.getAs[scala.collection.Seq[Row]]("keys").toSeq))
   }
@@ -190,11 +190,6 @@ object KgSession {
   /** Largest delta, in rows, whose keys a fold gathers on the driver, and
     * largest carried increment map; past either the degree is recomputed. */
   private val CarryCap = 4096
-
-  /** An observation's metrics. They arrive on the listener bus just after
-    * the job; the bound only keeps a lost event from hanging the read. */
-  private def metrics(o: Observation): Row =
-    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
 
   /** Build (or resume) the graph from the configured corpus, then open. */
   def build(spark: SparkSession, c: Pipeline.Conf): KgSession = {

@@ -18,6 +18,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   * edges, so the anti-join naturally walks down the candidate ranking. The runner
   * stops itself when `maxRelationships` edges have been added or the candidate
   * pool is drained (a tick adds nothing).
+  *
+  * The co-occurrence pairs are mapped to node ids once per nodes snapshot
+  * and pinned; a tick anti-joins them against the session's pinned edges,
+  * collects its ≤ `batch` picks and commits them from the driver.
   */
 final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Conf) {
 
@@ -26,17 +30,32 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
   @volatile private var worker: Thread = _
 
   /** The corpus-scale co-occurrence aggregate is a fixed input — computed
-    * once for the enricher's lifetime; each tick re-runs only the tiny
-    * id-mapping + anti-join against the current edges. */
+    * once for the enricher's lifetime. */
   private lazy val coTable = KgQueries.cooccurrence(mentionsCanon)
     .filter(col("n_docs") >= conf.minDocs)
     .localCheckpoint()
+
+  /** (nodes frame, its [[KgQueries.coPairs]] over [[coTable]],
+    * localCheckpointed). The pairs depend on the nodes only, and `kg.nodes`
+    * returns the same frame until a nodes commit, so a tick re-maps the
+    * pairs to node ids only after one. */
+  private var pairsPin: Option[(DataFrame, DataFrame)] = None
+
+  private def pairs(nodes: DataFrame): DataFrame = pairsPin match {
+    case Some((n, p)) if n eq nodes => p
+    case _ =>
+      val p = KgQueries.coPairs(nodes, coTable).localCheckpoint()
+      pairsPin = Some((nodes, p))
+      p
+  }
 
   def isRunning: Boolean = runningFlag.get()
   def added: Long = addedCount.get()
 
   /** One enrichment pass (the reference's RunOnce/processBatch): append up
-    * to min(batch, remaining) new edges; returns how many were added. */
+    * to min(batch, remaining) new edges; returns how many were added. Three
+    * Spark jobs when the session's pins are current: the broadcast of the
+    * edge keys, the collect of the picks, and the commit's write. */
   def runOnce(): Long = synchronized {
     val remaining = conf.maxRelationships - addedCount.get()
     if (remaining <= 0) return 0L
@@ -48,19 +67,19 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
       if (conf.focusBottomK > 0)
         Some(kg.lowConnectivity(conf.focusBottomK).select("node_id"))
       else None
-    val newE = KgQueries.enrichOnceFromCo(kg.nodes, edges, coTable,
+    val picks = KgQueries.pickNew(pairs(kg.nodes), edges,
         math.min(conf.batch.toLong, remaining).toInt, focus)
-      .withColumnRenamed("n_docs", "n_obs")
-      .withColumn("provenance",
-        typedLit(Seq.empty[(String, Int, String)])
-          .cast(edges.schema("provenance").dataType))
-      .withColumn("created_at", Materialize.CreatedAt)
-      .select(edges.columns.map(col): _*)
-      .localCheckpoint() // evaluate once: counted AND committed
-    val n = newE.count()
-    if (n > 0) {
+      .select(col("src_id"), col("dst_id"), col("pred"), col("pred_norm"),
+        col("strength"), col("n_docs").as("n_obs"), col("description"),
+        array().cast(edges.schema("provenance").dataType).as("provenance"),
+        Materialize.CreatedAt.as("created_at"))
+    val rows = picks.collect()
+    if (rows.nonEmpty) {
       // delta-append: each tick writes O(batch) rows, not O(edges) — the
-      // reader unions the delta chain; TableIO compacts when it grows long
+      // reader unions the delta chain; TableIO compacts when it grows long.
+      // The rows are on the driver already; one partition = one file.
+      val newE = picks.sparkSession
+        .createDataFrame(java.util.Arrays.asList(rows: _*), picks.schema).coalesce(1)
       TableIO.commitDelta(newE, kg.edgesDir, "edges", conf.maxChain)
       // snapshot GC: without it a long-running ticker accretes one snap
       // dir per tick forever (compaction repoints but never deletes);
@@ -68,9 +87,9 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
       // TableIO.vacuum's reader caveat)
       if (conf.vacuumRetain > 0)
         TableIO.vacuum(kg.edgesDir, conf.vacuumRetain, conf.vacuumGraceMs)
-      addedCount.addAndGet(n)
+      addedCount.addAndGet(rows.length)
     }
-    n
+    rows.length
   }
 
   /** Start the ticker; no-op if already running. */

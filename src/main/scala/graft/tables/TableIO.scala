@@ -1,7 +1,7 @@
 package graft.tables
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -122,14 +122,36 @@ object TableIO {
           val aligned = newRows.select(curSchema.fieldNames.map(col(_)): _*)
           val chain = snapshotChain(dir, cur)
           val n =
-            if (chain.length >= maxChain)
-              writeSnap(readCurrent(newRows.sparkSession, dir).unionByName(aligned),
-                base, stage, deltaOf = -1)
+            if (chain.length >= maxChain) compact(newRows.sparkSession, dir, chain, aligned, stage)
             else writeSnap(aligned, base, stage, deltaOf = cur)
           repointCurrentFrom(base, cur, n)
       }
     }
   }
+
+  /** Writes the rows of `chain` ∪ `rows` as a new FULL snapshot and returns
+    * its id. The write's job also counts the rows the chain reads; when they
+    * fall short of its manifests (a part file deleted, which reads as no
+    * rows) it throws before anything repoints CURRENT, so the loss does not
+    * become the table's new base. The written snapshot is left unreferenced. */
+  private def compact(spark: SparkSession, dir: String, chain: Seq[Int],
+      rows: DataFrame, stage: String): Int = {
+    val read = Observation()
+    val n = writeSnap(readSnapshots(spark, dir, chain).observe(read, count(lit(1)).as("rows"))
+      .unionByName(rows), Paths.get(dir), stage, deltaOf = -1)
+    val got = observed(read).getAs[Long]("rows")
+    snapshotRows(dir, chain).filter(_ != got).foreach { want =>
+      throw new IllegalStateException(
+        s"commitDelta($dir): compacting snapshots ${chain.mkString(",")} read $got rows, " +
+          f"their manifests record $want; snap-$n%05d left unreferenced")
+    }
+    n
+  }
+
+  /** An observation's metrics. They arrive on the listener bus just after
+    * the job; the bound only keeps a lost event from hanging the caller. */
+  private[graft] def observed(o: Observation): Row =
+    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
 
   /** One lock object per table dir: serializes the read-chain-head →
     * write-delta → repoint sequence for in-JVM delta appenders. */
@@ -220,16 +242,19 @@ object TableIO {
       logRoot(base, n)
     }
 
+  /** Hadoop conf for footer reads: built once, as parsing its default
+    * resources costs more than reading a small file's footer. */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
   /** (fileName, rowCount) per parquet file in a directory, via footers. */
   def parquetFileRows(dir: Path): Array[(String, Long)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new org.apache.hadoop.conf.Configuration()
     Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map { p =>
         val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), conf))
+          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), footerConf))
         try p.getFileName.toString -> r.getRecordCount finally r.close()
       }.toArray.sortBy(_._1)
   }

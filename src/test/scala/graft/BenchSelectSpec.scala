@@ -25,19 +25,43 @@ class BenchSelectSpec extends AnyFunSuite {
     """{"t_n":348.580,"t_4n":87.922,"eff":0.991,"host":1.0,"kernel":1.0,"n":62504577,"n_docs":25000000,"lvl":"1,4","clean_pair":true,"cpu_n":335.4,"cpu_4n":320.3,"sched":2}"""
   )
 
+  // the rows above carry no "corpus" field: all ran on the export's corpus
+  private val Export = BenchSelect.ExportCorpus
+
+  test("cleanPairs and historicalFloors pool only one corpus's rows; no field = the export's") {
+    val vocab = Seq(
+      """{"t_n":129.551,"t_4n":36.122,"eff":0.897,"n":62504577,"n_docs":25000000,"lvl":"2,8","clean_pair":true,"cpu_n":123.5,"cpu_4n":127.5,"sched":2,"corpus":"vocab"}""",
+      """{"t_n":135.511,"t_4n":42.089,"eff":0.805,"n":62504577,"n_docs":25000000,"lvl":"2,8","clean_pair":true,"cpu_n":128.4,"cpu_4n":146.3,"sched":2,"corpus":"vocab"}""")
+    val mixed = ledger ++ vocab
+    assert(BenchSelect.cleanPairs(mixed, BenchSelect.Corpus, 25000000L, 2, 8).map(_._2) ==
+      Seq(0.897, 0.805))
+    assert(BenchSelect.historicalFloors(mixed, BenchSelect.Corpus, 25000000L, 2, 8) ==
+      Map(2 -> 123.5, 8 -> 127.5))
+    // the export's figures are the same with the vocabulary's rows present
+    assert(BenchSelect.cleanPairs(mixed, Export, 25000000L, 2, 8) ==
+      BenchSelect.cleanPairs(ledger, Export, 25000000L, 2, 8))
+    assert(BenchSelect.historicalFloors(mixed, Export, 25000000L, 2, 8) ==
+      Map(2 -> 360.0, 8 -> 470.0))
+    // and a row stamped with the export's name counts as one of its rows
+    val stamped = ledger.last.stripSuffix("}") + ""","corpus":"export"}"""
+    assert(BenchSelect.historicalFloors(Seq(stamped), Export, 25000000L, 1, 4) ==
+      Map(1 -> 335.4, 4 -> 320.3))
+    assert(BenchSelect.cleanPairs(vocab, Export, 25000000L, 2, 8).isEmpty)
+  }
+
   test("cleanPairs: clean 2,8 rows kept; non-clean and off-corpus rows dropped") {
-    val pairs = BenchSelect.cleanPairs(ledger, 25000000L, 2, 8)
+    val pairs = BenchSelect.cleanPairs(ledger, Export, 25000000L, 2, 8)
     assert(pairs.map(_._2).sorted == Seq(0.854, 0.861, 0.885, 0.907))
     // the 0.565 / 0.433 rows are clean_pair:false; the 10M row is another corpus
   }
 
   test("cleanPairs: legacy >8-thread-pair rows are excluded until re-measured under sched>=2") {
     // the 4,16 eff-0.470 row was admitted under the discredited 2.2× ceiling
-    assert(BenchSelect.cleanPairs(ledger, 25000000L, 4, 16).isEmpty)
+    assert(BenchSelect.cleanPairs(ledger, Export, 25000000L, 4, 16).isEmpty)
     // a sched-2 re-measurement at the same pair WOULD count
     val remeasured = ledger :+
       """{"t_n":80.0,"t_4n":23.0,"eff":0.870,"n":62504577,"n_docs":25000000,"lvl":"4,16","clean_pair":true,"cpu_n":350.0,"cpu_4n":600.0,"sched":2}"""
-    assert(BenchSelect.cleanPairs(remeasured, 25000000L, 4, 16).map(_._2) == Seq(0.870))
+    assert(BenchSelect.cleanPairs(remeasured, Export, 25000000L, 4, 16).map(_._2) == Seq(0.870))
   }
 
   test("median of clean pairs is the reported figure (robust to a flattered max)") {
@@ -49,18 +73,18 @@ class BenchSelectSpec extends AnyFunSuite {
   }
 
   test("historicalFloors: per-level min CPU from same-corpus clean sched>=2 rows, any pair") {
-    val floors = BenchSelect.historicalFloors(ledger, 25000000L, 2, 8)
+    val floors = BenchSelect.historicalFloors(ledger, Export, 25000000L, 2, 8)
     // the clean sched-2 2,8 row contributes both levels (the throttled
     // sched-2 row is clean_pair:false; legacy rows carry no CPU)
     assert(floors == Map(2 -> 360.0, 8 -> 470.0))
-    assert(BenchSelect.historicalFloors(ledger, 10000000L, 2, 8).isEmpty)
+    assert(BenchSelect.historicalFloors(ledger, Export, 10000000L, 2, 8).isEmpty)
     // cross-pair same-level evidence: the 1,4 rows' cpu_4n (320.3 min)
     // binds level 4 in a 4,16 invocation — without it, the first 4,16
     // campaign admitted a 460-CPU level-4 run (1.4× clean) as its anchor
-    assert(BenchSelect.historicalFloors(ledger, 25000000L, 4, 16) ==
+    assert(BenchSelect.historicalFloors(ledger, Export, 25000000L, 4, 16) ==
       Map(4 -> 320.3))
     // and the 1,4 pair itself draws level-1 + level-4 evidence
-    assert(BenchSelect.historicalFloors(ledger, 25000000L, 1, 4) ==
+    assert(BenchSelect.historicalFloors(ledger, Export, 25000000L, 1, 4) ==
       Map(1 -> 300.7, 4 -> 320.3))
   }
 
@@ -68,9 +92,9 @@ class BenchSelectSpec extends AnyFunSuite {
     // a 250M-doc row must NOT feed floors for a 25M-doc query (and vice versa)
     val tenX = ledger :+
       """{"t_n":1700.0,"t_4n":480.0,"eff":0.885,"n":625045770,"n_docs":250000000,"lvl":"2,8","clean_pair":true,"cpu_n":36.0,"cpu_4n":47.0,"sched":2}"""
-    assert(BenchSelect.historicalFloors(tenX, 25000000L, 2, 8) ==
+    assert(BenchSelect.historicalFloors(tenX, Export, 25000000L, 2, 8) ==
       Map(2 -> 360.0, 8 -> 470.0)) // unchanged — the 36/47 floors are the other corpus
-    assert(BenchSelect.historicalFloors(tenX, 250000000L, 2, 8) ==
+    assert(BenchSelect.historicalFloors(tenX, Export, 250000000L, 2, 8) ==
       Map(2 -> 36.0, 8 -> 47.0))
   }
 

@@ -5,6 +5,7 @@ import graft.graph.KgSession
 import graft.model.Doc
 import graft.run.{Enricher, Pipeline}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** G7 lifecycle: Start/Stop/IsRunning ticker with the max_relationships stop
   * condition, mirroring the reference enricher's RunOnce/processBatch tests
@@ -78,6 +79,101 @@ class EnricherSpec extends SparkSuite {
     assert(enr.isRunning)
     enr.stop()
     assert(!enr.isRunning)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
+  /** One document per pair of `names`, three per pair touching `heavy`. */
+  private def pairMentions(names: Seq[String], heavy: Set[String] = Set.empty) =
+    names.combinations(2).zipWithIndex.flatMap { case (Seq(a, b), d) =>
+      val docs = if (heavy(a) || heavy(b)) 3 else 1
+      (0 until docs).flatMap(k => Seq((s"doc$d.$k", a), (s"doc$d.$k", b)))
+    }.toSeq.toDF("doc_id", "canonical")
+
+  test("seeded: each tick commits exactly enrichOnceFromCo over the tables read just before it") {
+    import graft.graph.KgQueries
+    import graft.tables.TableIO
+    import java.nio.file.{Files, Paths}
+    val c = GraphFixture.commit(spark, tmpDir("enrtick"))
+    val (edgesDir, nodesDir) = (Pipeline.edgesDir(c), Pipeline.nodesDir(c))
+    val kg = KgSession.open(spark, c.workDir)
+    val rng = new scala.util.Random(8)
+    val steps = rng.shuffle(Seq.fill(5)("tick") ++ Seq.fill(2)("focused tick") ++
+      Seq.fill(3)("addEdge") ++ Seq.fill(3)("nodes commit"))
+    val extras = steps.indices.map(i => s"Extra $i")
+    // a pair touching an extra name has three documents to the others'
+    // one, so a tick after a nodes commit ranks the new node's pairs first
+    val mentions = pairMentions(GraphFixture.Names ++ extras, extras.toSet)
+    val conf = Enricher.Conf(minDocs = 1, batch = 2, maxRelationships = Long.MaxValue)
+    val co = KgQueries.cooccurrence(mentions).filter(col("n_docs") >= conf.minDocs)
+    val plain = new Enricher(kg, mentions, conf)
+    val focused = new Enricher(kg, mentions, conf.copy(focusBottomK = 2))
+
+    /** enrichOnceFromCo recomputed on the tables as committed now. */
+    def expected(focusK: Int) = {
+      val nodes = TableIO.readCurrent(spark, nodesDir)
+      val edges = KgQueries.mergedEdges(TableIO.readCurrent(spark, edgesDir))
+      val focus = Option.when(focusK > 0)(
+        KgQueries.lowConnectivity(nodes, edges, focusK).select("node_id"))
+      KgQueries.enrichOnceFromCo(nodes, edges, co, conf.batch, focus)
+    }
+    var extraPicked = false
+    def tick(e: Enricher, focusK: Int, step: String): Unit = {
+      val want = rows(expected(focusK))
+      val adjacent = TableIO.readCurrent(spark, edgesDir).select("src_id", "dst_id")
+        .as[(Long, Long)].collect().flatMap { case (a, b) => Seq((a, b), (b, a)) }.toSet
+      val before = TableIO.requireCurrentId(edgesDir)
+      val n = e.runOnce()
+      val head = TableIO.requireCurrentId(edgesDir)
+      assert(n == want.size, step)
+      if (n == 0) assert(head == before, step)
+      else {
+        assert(TableIO.snapshotChain(edgesDir, head).take(2) == Seq(head, before), step)
+        val snap = Paths.get(edgesDir, f"snap-$head%05d")
+        assert(Files.list(snap).iterator().asScala.count(_.toString.endsWith(".parquet")) == 1,
+          s"$step: one parquet file per tick")
+        val delta = TableIO.readSnapshots(spark, edgesDir, Seq(head))
+        assert(rows(delta.select(col("src_id"), col("dst_id"), col("pred"), col("pred_norm"),
+          col("strength"), col("n_obs").as("n_docs"), col("description"))) == want, step)
+        assert(!delta.select("src_id", "dst_id").as[(Long, Long)].collect().exists(adjacent),
+          s"$step: a tick linked an adjacent pair")
+        assert(delta.filter(size(col("provenance")) =!= 0 ||
+          col("created_at") =!= graft.graph.Materialize.CreatedAt).isEmpty, step)
+        extraPicked ||= want.exists(r => r.getString(6).contains("Extra"))
+      }
+    }
+
+    tick(plain, 0, "first tick")
+    steps.zipWithIndex.foreach { case (kind, i) =>
+      val step = s"step $i: $kind"
+      kind match {
+        case "tick" => tick(plain, 0, step)
+        case "focused tick" => tick(focused, 2, step)
+        case "addEdge" =>
+          // link the top candidate, reversed: the next tick must skip it
+          val top = expected(0).select("src_id", "dst_id").as[(Long, Long)].collect()
+          top.headOption.foreach { case (a, b) => kg.addEdge(b, a, s"Manual $i") }
+        case "nodes commit" =>
+          TableIO.commitSnapshot(TableIO.readCurrent(spark, nodesDir).unionByName(
+            TableIO.readCurrent(spark, nodesDir).orderBy("node_id").limit(1)
+              .withColumn("node_id", lit(1000L + i)).withColumn("name", lit(extras(i)))
+              .withColumn("canonical_name", lit(extras(i)))), nodesDir, "nodes")
+      }
+    }
+    assert(extraPicked, "no tick picked a pair of a node committed after the pairs were pinned")
+  }
+
+  test("one unfocused tick on a pinned session runs at most 3 Spark jobs") {
+    val c = GraphFixture.commit(spark, tmpDir("enrjobs"))
+    val kg = KgSession.open(spark, c.workDir)
+    val enr = new Enricher(kg, pairMentions(GraphFixture.Names),
+      Enricher.Conf(minDocs = 1, batch = 1, maxRelationships = Long.MaxValue))
+    assert(enr.runOnce() == 1L) // builds the co-occurrence table and pins the pairs
+    kg.statistics() // folds that tick's delta into the pinned edges
+    val (n, jobs) = withJobCount(enr.runOnce())
+    assert(n == 1L)
+    assert(jobs <= 3, s"a tick ran $jobs Spark jobs")
   }
 
   // LAST in the suite on purpose: per-tick vacuum deletes the snapshots the

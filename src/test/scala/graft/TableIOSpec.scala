@@ -3,6 +3,7 @@ package graft
 import graft.tables.TableIO
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class TableIOSpec extends SparkSuite {
   import spark.implicits._
@@ -156,6 +157,28 @@ class TableIOSpec extends SparkSuite {
     assert(TableIO.readCurrent(spark, dir).count() == 104)
     assert(TableIO.parquetRowCount(s"$dir/snap-00003") == 104)
     assert(TableIO.snapshotChain(dir, 3) == Seq(3))
+  }
+
+  test("a compaction that reads short throws; CURRENT and the old chain stay as they were") {
+    val dir = tmpDir("shortCompact")
+    TableIO.commitSnapshot((1 to 10).map(i => (i.toLong, "base")).toDF("id", "src"), dir, "t")
+    TableIO.commitDelta(Seq((11L, "d1")).toDF("id", "src"), dir, "t")
+    val head = TableIO.requireCurrentId(dir)
+    val chain = TableIO.snapshotChain(dir, head)
+    val roots = TableIO.rootLog(dir)
+    // the delta's part file is gone: its dir reads as no rows
+    val st = Files.list(Paths.get(dir, f"snap-$head%05d"))
+    try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).foreach(Files.delete)
+    finally st.close()
+    val e = intercept[IllegalStateException] {
+      TableIO.commitDelta(Seq((12L, "d2")).toDF("id", "src"), dir, "t", maxChain = 2)
+    }
+    assert(e.getMessage.contains("read 10 rows") && e.getMessage.contains("record 11"),
+      e.getMessage)
+    assert(TableIO.requireCurrentId(dir) == head)
+    assert(TableIO.snapshotChain(dir, head) == chain)
+    assert(TableIO.rootLog(dir) == roots)
+    assert(TableIO.readSnapshot(spark, dir, chain.last).count() == 10)
   }
 
   test("delta commit validates schema against the current snapshot (fail fast, not silent nulls)") {

@@ -11,8 +11,8 @@ import java.nio.file.{Files, Paths}
 /** Deterministic fixture tables for the driver's Verify/DuckDB correctness
   * gate. For a given sf dir (scale knob only — the driver's TPC-H tables
   * don't have the input_hint span shape, so the corpus is synthesized per
-  * FIXTURES.md), this materializes under a FIXED path
-  * `/root/repo/target/graftdata/<sfBase>`:
+  * FIXTURES.md), this materializes under `target/graftdata/<sfBase>` of
+  * the working directory, so each checkout builds and reads its own:
   *
   *   docs/          bucketized pipeline input (partitioned by bucket)
   *   docs_flat/     same corpus, flat parquet for the DuckDB oracle
@@ -24,7 +24,7 @@ import java.nio.file.{Files, Paths}
   */
 object Fixtures {
 
-  val Root = "/root/repo/target/graftdata"
+  val Root: String = Paths.get("target/graftdata").toAbsolutePath.toString
 
   /** q_ann_lsh configuration, shared between the Spark query and the
     * `lsh_planes` fixture the DuckDB oracle reads: 16 tables of 8 bits suits

@@ -370,8 +370,8 @@ object SparkEntry {
       graft.text.NearDup.minhashDupPairs(dedupDocs(s, d), "doc_id", "text")
         .select("a", "b").orderBy("a", "b")),
     // --- SimHash near-dup; md5-derived token hash makes the signature,
-    //     banding, bucket cap and Hamming filter exactly recomputable by the
-    //     DuckDB oracle ---
+    //     banding, Blocking.MaxBucket cap and Hamming filter exactly
+    //     recomputable by the DuckDB oracle ---
     "q_simhash_pairs" -> ((s, d) =>
       graft.text.NearDup.simhashDupPairs(dedupDocs(s, d), "doc_id", "text")
         .select("a", "b", "hamming").orderBy("a", "b")),
@@ -881,7 +881,9 @@ object SparkEntry {
          |WHERE ni * 1.0 / (ca.n + cb.n - ni) >= 0.5 ORDER BY a, b""".stripMargin,
     // full independent re-derivation of the simhash pipeline: md5-derived
     // per-token 64-bit hash -> per-bit majority signature -> 4x16-bit bands
-    // -> bucket cap 64 -> Hamming <= 3
+    // -> bucket cap 64 -> Hamming <= 3. The cap counts rows per bucket;
+    // Blocking.pairs counts distinct ids, the same count when ids are unique
+    // (dedup_docs' are)
     "q_simhash_pairs" ->
       s"""WITH tk AS (SELECT doc_id AS id,
          |  unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),

@@ -1,7 +1,7 @@
 package graft.link
 
 import graft.extract.Validity
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -28,9 +28,10 @@ object EntityLink {
       .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z0-9]+")).as("token"))
       .filter(length(col("token")) > 1)
     val tf = tokens.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val nDocs = tokens.select("doc_id").distinct().count()
+    // a scalar subquery, so building the vectors runs no job of its own
+    val nDocs = tokens.select("doc_id").distinct().agg(count(lit(1))).scalar()
     val idf = tf.groupBy("token").agg(countDistinct("doc_id").as("df"))
-      .withColumn("idf", log((lit(nDocs) + 1.0) / (col("df") + 1.0)))
+      .withColumn("idf", log((nDocs + 1.0) / (col("df") + 1.0)))
       .select("token", "idf")
     val vec = tf.join(idf, "token").withColumn("w", col("tf") * col("idf"))
       .select("doc_id", "token", "w")
@@ -44,7 +45,13 @@ object EntityLink {
     * function of the dictionary's (alias, canonical) pairs, which the
     * driver already holds for the automaton. */
   def hasAmbiguity(pairs: Seq[(String, String)]): Boolean =
-    pairs.groupBy(_._1).exists(_._2.map(_._2).distinct.length > 1)
+    ambiguousAliases(pairs).nonEmpty
+
+  /** The aliases that map to more than one canonical. */
+  def ambiguousAliases(pairs: Seq[(String, String)]): Set[String] =
+    pairs.groupBy(_._1).collect {
+      case (alias, ps) if ps.map(_._2).distinct.length > 1 => alias
+    }.toSet
 
   /** Per-surface resolution of both roles over an ALREADY-AGGREGATED frame
     * (one row per distinct raw (subj, pred, obj)) — valid ONLY when
@@ -74,25 +81,18 @@ object EntityLink {
       .filter(Validity.validPred(col("pred")))
       .withColumn("triple_id", xxhash64(col("doc_id"), col("span_idx")))
 
-    // the alias table is dictionary-sized (broadcast side by design). ONE
-    // tiny aggregate job decides whether ambiguity exists at all; the
-    // common no-ambiguity case (exact-match dictionaries) short-circuits
-    // to "every alias is unique" without building the flagged join or the
-    // slow-path plan.
+    // the alias table is dictionary-sized (broadcast side by design): ONE
+    // driver collect of its (alias, canonical) pairs decides ambiguity and
+    // feeds the ambiguous-doc automaton below; the common no-ambiguity case
+    // (exact-match dictionaries) builds no slow-path plan at all.
     import spark.implicits._
-    val candCounts = aliases.groupBy("alias")
-      .agg(countDistinct("canonical").as("n_cands"))
-    val nAmbiguous = candCounts.filter(col("n_cands") > 1).count()
+    val amb = ambiguousAliases(
+      aliases.select("alias", "canonical").as[(String, String)].collect().toSeq)
+    val all = aliases.select("alias", "canonical", "prior")
+    val isAmb = col("alias").isin(amb.toSeq: _*)
     val (uniqueAliases, ambiguous) =
-      if (nAmbiguous == 0)
-        (aliases.select("alias", "canonical", "prior"), null: org.apache.spark.sql.DataFrame)
-      else {
-        val flagged = aliases.select("alias", "canonical", "prior")
-          .join(candCounts, Seq("alias"))
-        (flagged.filter(col("n_cands") === 1).drop("n_cands"),
-          flagged.filter(col("n_cands") > 1).drop("n_cands")
-            .localCheckpoint()) // tiny; evaluated once for the joins
-      }
+      if (amb.isEmpty) (all, null: DataFrame)
+      else (all.filter(!isAmb), all.filter(isAmb))
 
     // the TF-IDF context corpus is (a) only built when ambiguity exists at
     // all, and (b) restricted to docs that actually HOST an ambiguous
@@ -111,11 +111,9 @@ object EntityLink {
         // (A contains-predicate BroadcastNestedLoopJoin here would scan
         // every document once PER ambiguous alias — with thousands of
         // ambiguous surfaces that multiplies the corpus-scan cost by the
-        // alias count.) The ambiguous surface set is dictionary-sized by
-        // design, so collecting it for the automaton mirrors the alias
-        // broadcast.
-        val ambAc = spark.sparkContext.broadcast(graft.extract.AhoCorasick(
-          ambiguous.select(col("alias")).distinct().as[String].collect().toSeq))
+        // alias count.)
+        val ambAc = spark.sparkContext.broadcast(
+          graft.extract.AhoCorasick(amb.toSeq.sorted))
         // null text = no match (the SQL Contains semantics this replaced)
         val ambDocs = docsText
           .select(col("doc_id"), col("text"))

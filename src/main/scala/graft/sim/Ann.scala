@@ -22,6 +22,27 @@ object Ann {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
+  /** Cosine rounded to 5 dp — ties and rounding the SQL oracles reproduce. */
+  private def cos5(a: Column, b: Column): Column =
+    round(dot(a, b) / (norm(a) * norm(b)), 5)
+
+  /** The k best `(query_id, vec_id, cos5)` rows per query, id tie-break. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("cos5").desc, col("vec_id").asc)))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "vec_id", "cos5")
+
+  /** One `(table, bucket)` struct per sign-LSH table of `bitsPerTable`
+    * consecutive hyperplanes. */
+  private def tableBuckets(v: Column, planes: Array[Array[Double]], nTables: Int,
+      bitsPerTable: Int): Column =
+    array((0 until nTables).map { t =>
+      val tp = planes.slice(t * bitsPerTable, (t + 1) * bitsPerTable)
+      struct(lit(t).as("table"), bucketOf(v, tp).as("bucket"))
+    }: _*)
+
   /** Exact cosine top-k neighbors for the given query ids.
     * Output: (query_id, rank, vec_id, cos5) with cosine rounded to 5 dp and
     * id tie-breaks — deterministic and engine-reproducible. */
@@ -29,15 +50,9 @@ object Ann {
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    e.crossJoin(broadcast(q))
+    topK(e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos5", round(
-        dot(col("v"), col("qv")) / (norm(col("v")) * norm(col("qv"))), 5))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos5").desc, col("vec_id").asc)))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cos5")
+      .withColumn("cos5", cos5(col("v"), col("qv"))), k)
   }
 
   /** Deterministic random hyperplanes (seeded), as a literal array column. */
@@ -74,16 +89,12 @@ object Ann {
       nTables: Int = 8, bitsPerTable: Int = 16, maxBucket: Int = 256): DataFrame = {
     val planes = hyperplanes(dim, nTables * bitsPerTable)
     val e0 = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val tabBuckets = (0 until nTables).map { t =>
-      val tp = planes.slice(t * bitsPerTable, (t + 1) * bitsPerTable)
-      struct(lit(t).as("table"), bucketOf(col("v"), tp).as("bucket"))
-    }
     // SLIM signature rows (vec_id, table, bucket) — the per-bucket cap
     // window and the bucket join shuffle ~24-byte rows, never the vector
     // payload; vectors are joined back ONLY for surviving candidates (one
     // corpus-payload shuffle total, vs nTables× when v rides the window)
     val banded = e0.select(col("vec_id"),
-        explode(array(tabBuckets: _*)).as("tb"))
+        explode(tableBuckets(col("v"), planes, nTables, bitsPerTable)).as("tb"))
       .select(col("vec_id"), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
     val q = banded.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("table"), col("bucket"))
@@ -95,48 +106,23 @@ object Ann {
       .select("query_id", "vec_id").distinct() // union over tables
     val qv = e0.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    cand.join(e0, Seq("vec_id")).join(broadcast(qv), Seq("query_id"))
-      .withColumn("cos5", round(
-        dot(col("v"), col("qv")) / (norm(col("v")) * norm(col("qv"))), 5))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos5").desc, col("vec_id").asc)))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cos5")
+    topK(cand.join(e0, Seq("vec_id")).join(broadcast(qv), Seq("query_id"))
+      .withColumn("cos5", cos5(col("v"), col("qv"))), k)
   }
 
   /** Embedding-cosine near-duplicate pairs — the embedding counterpart of
-    * `NearDup.minhashDupPairs`: multi-table sign-LSH candidate generation
-    * over the WHOLE corpus (same-bucket self-join, hot buckets dropped at
-    * `maxBucket` exactly like the text band joins), exact cosine verify on
-    * candidates only. The all-pairs N² product never materializes; the
-    * shuffle moves (vec_id, bucket) rows plus the candidate slice. */
+    * `NearDup.minhashDupPairs`: vectors sharing a multi-table sign-LSH
+    * bucket are [[Blocking]] candidates, verified by exact cosine. The
+    * all-pairs N² product never materializes. */
   def cosineDupPairs(emb: DataFrame, dim: Int, threshold: Double,
-      nTables: Int = 16, bitsPerTable: Int = 8, maxBucket: Int = 64): DataFrame = {
+      nTables: Int = 16, bitsPerTable: Int = 8): DataFrame = {
     val planes = hyperplanes(dim, nTables * bitsPerTable)
     val e0 = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val tabBuckets = (0 until nTables).map { t =>
-      val tp = planes.slice(t * bitsPerTable, (t + 1) * bitsPerTable)
-      struct(lit(t).as("table"), bucketOf(col("v"), tp).as("bucket"))
-    }
-    val banded = e0.select(col("vec_id"),
-        explode(array(tabBuckets: _*)).as("tb"))
-      .select(col("vec_id"), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
-    val sizes = banded.groupBy("table", "bucket").agg(count(lit(1)).as("bn"))
-    val capped = banded.join(sizes, Seq("table", "bucket"))
-      .filter(col("bn") <= maxBucket).drop("bn")
-    val l = capped.select(col("vec_id").as("a"), col("table"), col("bucket"))
-    val r = capped.select(col("vec_id").as("b"), col("table"), col("bucket"))
-    val pairs = l.join(r, Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-    val va = e0.select(col("vec_id").as("a"), col("v").as("va"))
-    val vb = e0.select(col("vec_id").as("b"), col("v").as("vb"))
-    pairs.join(va, Seq("a")).join(vb, Seq("b"))
-      .withColumn("cos5", round(
-        dot(col("va"), col("vb")) / (norm(col("va")) * norm(col("vb"))), 5))
+    val keyed = e0.select(col("vec_id").as("id"),
+      explode(tableBuckets(col("v"), planes, nTables, bitsPerTable)).as("key"))
+    Blocking.withPayload(Blocking.pairs(keyed), e0, "vec_id", "v")
+      .select(col("a"), col("b"), cos5(col("v_a"), col("v_b")).as("cos5"))
       .filter(col("cos5") >= threshold)
-      .select("a", "b", "cos5")
   }
 
   // ------------------------------------------------------------------- IVF
@@ -308,15 +294,9 @@ object Ann {
         Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("cid").asc)))
       .filter(col("rk") <= nprobe)
       .select(col("query_id"), col("qv"), col("cid"))
-    probed.join(assigned, Seq("cid"))
+    topK(probed.join(assigned, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .join(e, Seq("vec_id"))
-      .withColumn("cos5", round(
-        dot(col("v"), col("qv")) / (norm(col("v")) * norm(col("qv"))), 5))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos5").desc, col("vec_id").asc)))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cos5")
+      .withColumn("cos5", cos5(col("v"), col("qv"))), k)
   }
 }

@@ -1,18 +1,20 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sim.Blocking
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
 
 /** Near-duplicate detection kernels for web-scale corpora — the same
   * typed-mapPartitions pattern as the extraction stage: per-doc CPU kernels
-  * compute compact signatures, then set-oriented DataFrame joins do the
-  * candidate generation, so the shuffle moves signatures (bytes/doc), never
-  * documents.
+  * compute compact signatures, then [[graft.sim.Blocking]] turns shared
+  * band keys into candidate pairs, so the shuffle moves signatures
+  * (bytes/doc), never documents. Each detector supplies only its key and
+  * its verifier.
   *
   * - MinHash + LSH banding: shingle → 64 permutations → `Bands` band hashes;
-  *   docs sharing a band bucket are candidates; exact shingle-Jaccard
-  *   verifies. Standard Broder/LSH construction (public technique).
+  *   docs sharing a band bucket are candidates; exact Jaccard over the
+  *   distinct shingle hashes verifies. Standard Broder/LSH construction.
   * - SimHash: 64-bit near-dup signature; 4×16-bit band trick finds
   *   candidates within small Hamming distance.
   * - Winnowing fingerprints (Schleimer et al., SIGMOD'03): k-gram rolling
@@ -29,7 +31,6 @@ object NearDup extends Serializable {
   val Bands = 8
   val RowsPerBand: Int = NumPerms / Bands
 
-  final case class BandSig(doc_id: Long, band: Int, band_hash: Long)
   final case class Fingerprint(doc_id: Long, fp: Long)
 
   private def hash64(s: String, seed: Int): Long = {
@@ -141,81 +142,42 @@ object NearDup extends Serializable {
 
   // ------------------------------------------------------------- DF stages
 
-  /** MinHash band signatures per doc. */
-  def bandSignatures(docs: DataFrame, idCol: String, textCol: String): Dataset[BandSig] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, t) =>
-        val sig = minhashSignature(t)
-        if (sig.forall(_ == Long.MaxValue)) Iterator.empty
-        else (0 until Bands).iterator.map { b =>
-          val bandVals = sig.slice(b * RowsPerBand, (b + 1) * RowsPerBand)
-          BandSig(id, b, hash64(bandVals.mkString(","), 0xe6546b64 + b))
-        }
-      })
-  }
-
-  /** Candidate near-dup pairs from LSH band buckets (bucket size capped to
-    * keep pathological buckets from exploding quadratically). */
-  def candidatePairs(sigs: Dataset[BandSig], maxBucket: Int = 64): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    sigs.groupByKey(s => (s.band, s.band_hash))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[BandSig]) =>
-        val ids = it.map(_.doc_id).toArray.distinct.sorted
-        if (ids.length < 2 || ids.length > maxBucket) Iterator.empty
-        else for {
-          i <- ids.indices.iterator
-          j <- (i + 1 until ids.length).iterator
-        } yield (ids(i), ids(j))
-      }
-      .toDF("a", "b").distinct()
-  }
-
-  /** Exact shingle-Jaccard verification of candidate pairs. */
-  def verifyPairs(docs: DataFrame, pairs: DataFrame, idCol: String,
-      textCol: String, threshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val txt = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-    val joined = pairs
-      .join(txt.withColumnRenamed("id", "a").withColumnRenamed("t", "ta"), Seq("a"))
-      .join(txt.withColumnRenamed("id", "b").withColumnRenamed("t", "tb"), Seq("b"))
-      .select(col("a"), col("b"), col("ta"), col("tb"))
-      .as[(Long, Long, String, String)]
-    joined.mapPartitions(_.map { case (a, b, ta, tb) =>
-      val sa = shingleHashes(ta).toSet
-      val sb = shingleHashes(tb).toSet
-      val inter = (sa & sb).size
-      val union = (sa | sb).size
-      val j = if (union == 0) 0.0 else inter.toDouble / union
-      (a, b, j)
-    }).toDF("a", "b", "jaccard").filter(col("jaccard") >= threshold)
-  }
-
-  /** End-to-end MinHash-LSH near-dup pairs. */
+  /** End-to-end MinHash-LSH near-dup pairs: docs sharing a band bucket are
+    * [[graft.sim.Blocking]] candidates, verified by exact Jaccard over
+    * their distinct shingle hashes. */
   def minhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5): DataFrame = {
-    val sigs = bandSignatures(docs, idCol, textCol)
-    verifyPairs(docs, candidatePairs(sigs), idCol, textCol, threshold)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val idText = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
+      .as[(Long, String)]
+    // key = (band, band hash); a doc with no shingle has no bands
+    val keyed = idText.mapPartitions(_.flatMap { case (id, t) =>
+      val sig = minhashSignature(t)
+      if (sig.forall(_ == Long.MaxValue)) Iterator.empty
+      else (0 until Bands).iterator.map { b =>
+        val bandVals = sig.slice(b * RowsPerBand, (b + 1) * RowsPerBand)
+        (id, (b, hash64(bandVals.mkString(","), 0xe6546b64 + b)))
+      }
+    }).toDF("id", "key")
+    val shingles = idText.map { case (id, t) => (id, shingleHashes(t).distinct) }
+      .toDF("id", "sh")
+    val inter = size(array_intersect(col("sh_a"), col("sh_b")))
+    val union = size(array_union(col("sh_a"), col("sh_b")))
+    // ANSI division throws on zero: an empty union scores 0
+    Blocking.withPayload(Blocking.pairs(keyed), shingles, "id", "sh")
+      .select(col("a"), col("b"),
+        when(union === 0, lit(0.0)).otherwise(inter / union).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
-  /** SimHash near-dup candidates: equal 16-bit band → candidate, Hamming ≤
-    * maxHamming verifies (4-band pigeonhole ⇒ complete for Hamming ≤ 3,
-    * PROVIDED the band bucket survives the size cap). The signature is the
-    * codegen'd [[graft.functions.SimHash64Expr]] — the whole candidate
-    * generation stays inside whole-stage codegen.
-    *
-    * `maxBucket` is the same guard as [[candidatePairs]]': a hot band value
-    * (boilerplate-heavy web text collapses to few distinct band values)
-    * would make the band self-join quadratic; buckets larger than the cap
-    * are dropped entirely (they are near-certain boilerplate, and exact
-    * dedup catches the identical-text core of such clusters). Bucket sizes
-    * come from a map-side-combined count, so the hot key never fans out. */
+  /** SimHash near-dup pairs: an equal 16-bit band makes a
+    * [[graft.sim.Blocking]] candidate, Hamming ≤ maxHamming verifies (the
+    * 4-band pigeonhole makes this complete for Hamming ≤ 3, provided the
+    * band block survives the size cap). The signature is the codegen'd
+    * [[graft.functions.SimHash64Expr]]. */
   def simhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     // token-free docs (no [a-z0-9] after lowering) all collapse to sig 0 —
     // not meaningful near-dups; drop them (and keep parity with the oracle,
     // whose token unnest naturally excludes them)
@@ -223,22 +185,13 @@ object NearDup extends Serializable {
       .select(col(idCol).cast("long").as("id"),
         graft.functions.SimHash64Expr.simhash64(col(textCol)).as("sig"))
       .localCheckpoint()
-    val banded = sigs.select(col("id"), col("sig"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-          shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xffffL))
-            .as("band_val"))): _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band").as("band"),
-        col("bb.band_val").as("band_val"))
-    val bucketSizes = banded.groupBy("band", "band_val")
-      .agg(count(lit(1)).as("bucket_n"))
-    val capped = banded.join(bucketSizes, Seq("band", "band_val"))
-      .filter(col("bucket_n") <= maxBucket).drop("bucket_n")
-    val l = capped.select(col("id").as("a"), col("sig").as("sig_a"), col("band"), col("band_val"))
-    val r = capped.select(col("id").as("b"), col("sig").as("sig_b"), col("band"), col("band_val"))
-    l.join(r, Seq("band", "band_val")).filter(col("a") < col("b"))
+    val keyed = sigs.select(col("id"), explode(array((0 until 4).map(b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("band_val"))
+    ): _*)).as("key"))
+    Blocking.withPayload(Blocking.pairs(keyed), sigs, "id", "sig")
       .select(col("a"), col("b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
       .filter(col("hamming") <= maxHamming)
   }
 

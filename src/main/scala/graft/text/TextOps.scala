@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.sim.Blocking
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -116,20 +117,16 @@ object TextOps {
   }
 
   /** Distinct-shingle overlap count per candidate pair — the exact n-gram
-    * Jaccard numerator (denominators are per-doc distinct counts). */
+    * Jaccard numerator (denominators are per-doc distinct counts). Each doc
+    * contributes one array of its distinct shingles, joined once per side;
+    * pairs with no common shingle are dropped. */
   def ngramOverlap(docs: DataFrame, pairs: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"),
-        explode(shingles3(col(textCol))).as("sh")).distinct()
-    val counts = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val shA = sh.select(col("id").as("a"), col("sh"))
-    val shB = sh.select(col("id").as("b"), col("sh"))
-    pairs
-      .join(shA, Seq("a"))
-      .join(shB, Seq("b", "sh")) // equi-join on (b, shingle): common shingles
-      .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
-      .join(counts.withColumnRenamed("id", "a").withColumnRenamed("n_sh", "n_a"), Seq("a"))
-      .join(counts.withColumnRenamed("id", "b").withColumnRenamed("n_sh", "n_b"), Seq("b"))
-      .select(col("a"), col("b"), col("n_common"), col("n_a"), col("n_b"))
+    val sh = docs.select(col(idCol).as("id"), array_distinct(shingles3(col(textCol))).as("sh"))
+    Blocking.withPayload(pairs, sh, "id", "sh")
+      .select(col("a"), col("b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
+        size(col("sh_a")).cast("long").as("n_a"), size(col("sh_b")).cast("long").as("n_b"))
+      .filter(col("n_common") > 0)
   }
 }

@@ -114,6 +114,21 @@ class EntityLinkSpec extends SparkSuite {
     assert(viaRows.schema == viaSurface.schema)
   }
 
+  test("building link over an ambiguous dictionary runs exactly 1 Spark job") {
+    // the dictionary is read from parquet so its collect is a real job: the
+    // one driver collect of (alias, canonical) is the whole ambiguity gate
+    val dir = tmpDir("aliases")
+    aliases.write.mode("overwrite").parquet(dir)
+    val fromParquet = spark.read.parquet(dir)
+    assert(EntityLink.ambiguousAliases(
+      fromParquet.select("alias", "canonical").as[(String, String)].collect().toSeq) ==
+      Set("Mercury"))
+    val jobs = jobsOf(EntityLink.link(spark,
+      raw(("db", "Mercury", "IsA", "Artificial Intelligence", true, true)),
+      fromParquet, docsText))
+    assert(jobs == 1, s"building link ran $jobs Spark jobs")
+  }
+
   test("generic predicates are filtered before linking") {
     val linked = EntityLink.link(spark,
       raw(("da", "Machine Learning", "related to", "Artificial Intelligence", true, true),

@@ -208,6 +208,34 @@ class PlanSpec extends SparkSuite {
     assert(df.count() == 10)
   }
 
+  test("near-dup queries keep their Exchange budget: Blocking.pairs + withPayload") {
+    // the four queries as SparkEntry declares them, over small parquet
+    // tables in the sf0.01 fixture shapes; each budget is the count of
+    // `Exchange` lines in the query's initial plan in a `graft.run.Plans`
+    // dump at sf0.01
+    val dir = tmpDir("neardup")
+    (0L until 40L).map(i => (i, s"doc $i shares some boilerplate words with doc ${i % 7}"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/docs")
+    Seq((0L, 7L), (1L, 8L), (0L, 1L)).toDF("a", "b").write.parquet(s"$dir/pairs")
+    val rng = new java.util.Random(3)
+    (0L until 40L).map(i => (i, Array.fill(Fixtures.AnnDim)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/embs")
+    val docs = spark.read.parquet(s"$dir/docs")
+    val budget = Seq(
+      5 -> graft.text.NearDup.minhashDupPairs(docs, "doc_id", "text")
+        .select("a", "b").orderBy("a", "b"),
+      5 -> graft.text.NearDup.simhashDupPairs(docs, "doc_id", "text")
+        .select("a", "b", "hamming").orderBy("a", "b"),
+      5 -> Ann.cosineDupPairs(spark.read.parquet(s"$dir/embs"),
+        dim = Fixtures.AnnDim, threshold = 0.95).orderBy("a", "b"),
+      3 -> graft.text.TextOps.ngramOverlap(docs, spark.read.parquet(s"$dir/pairs"),
+        "doc_id", "text").orderBy("a", "b"))
+    budget.foreach { case (want, df) =>
+      val p = plan(df)
+      assert(p.linesIterator.count(_.contains("Exchange")) == want, p.take(4000))
+    }
+  }
+
   private def countOccurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
 }

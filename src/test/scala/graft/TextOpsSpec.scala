@@ -103,13 +103,14 @@ class TextOpsSpec extends SparkSuite {
   }
 
   test("simhash band-bucket cap drops hot buckets (quadratic-blowup guard)") {
-    val hot = (0L until 100L)
+    def hot(n: Long) = (0L until n)
       .map(i => (i, "identical boilerplate text shared by every single doc"))
       .toDF("doc_id", "text")
-    // 100 identical docs → every band bucket holds 100 > 64 → dropped
-    assert(NearDup.simhashDupPairs(hot, "doc_id", "text").isEmpty)
-    val uncapped = NearDup.simhashDupPairs(hot, "doc_id", "text", maxBucket = 1000)
-    assert(uncapped.count() == 100L * 99 / 2)
+    // n identical docs share every band bucket: at the 64-id cap all
+    // 64·63/2 pairs survive, one doc more and every bucket is dropped
+    assert(NearDup.simhashDupPairs(hot(100), "doc_id", "text").isEmpty)
+    assert(NearDup.simhashDupPairs(hot(65), "doc_id", "text").isEmpty)
+    assert(NearDup.simhashDupPairs(hot(64), "doc_id", "text").count() == 2016L)
   }
 
   test("embedding-cosine near-dup: planted dup found, unrelated vectors not") {

@@ -289,7 +289,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val root = "/root/repo/target/bench"
+    val root = Paths.get("target/bench").toAbsolutePath.toString
     if (args.length >= 5 && args(0) == "--single") {
       singleMain(args(1).toInt, args(2), args(3), args(4)); return
     }
@@ -385,7 +385,7 @@ object Bench {
     // across this invocation and same-corpus same-pair ledger rows
     // (sched≥2 rows persist per-level CPU exactly for this).
     import BenchSelect.{CurrentSched, PerLevelSlack, cleanMult}
-    val histPath = Paths.get("/root/repo/bench_history.jsonl")
+    val histPath = Paths.get("bench_history.jsonl")
     def histLines: Seq[String] =
       if (!Files.exists(histPath)) Seq.empty
       else scala.jdk.CollectionConverters.IteratorHasAsScala(
@@ -784,6 +784,6 @@ object Bench {
          |  the only driver-side data is the alias dictionary and the
          |  (dictionary-sized) equivalence set.
          |""".stripMargin
-    Files.writeString(Paths.get("/root/repo/BENCH.md"), md)
+    Files.writeString(Paths.get("BENCH.md"), md)
   }
 }

@@ -74,7 +74,8 @@ object Fixtures {
     // rationale: fixtures must be built by the kernel that ships
     // v16: the default corpus comes from the built-in vocabulary instead of
     // the reference export — different names, triples and docs
-    val ready = Paths.get(r, s"_READY_v16_jdk$jdkTag")
+    // v17: snapshot reads need each part file's byte length in the manifest
+    val ready = Paths.get(r, s"_READY_v17_jdk$jdkTag")
     if (Files.exists(ready)) return r
     import spark.implicits._
 

@@ -283,7 +283,7 @@ object KgQueries {
     * the previous implementation rewrote the whole table per added edge. */
   def addEdgeDelta(spark: SparkSession, tableDir: String,
       srcId: Long, dstId: Long, pred: String): Unit = {
-    val provType = graft.tables.TableIO.currentSchema(spark, tableDir)("provenance").dataType
+    val provType = graft.tables.TableIO.currentSchema(tableDir)("provenance").dataType
     graft.tables.TableIO.commitDelta(
       edgeRow(spark, provType, srcId, dstId, pred), tableDir, "add_edge")
   }

@@ -32,16 +32,18 @@ import org.apache.spark.sql.functions._
   * keeps the K smallest, which are also the K smallest of (the K smallest
   * of A) ∪ B.
   *
-  * The pin's own job also gathers, with `Dataset.observe`, the view's row
-  * count (so [[statistics]] runs no job) and the rows read, which must equal
-  * the manifests' counts. The session pins a degree frame per (nodes id,
-  * edges id) and carries it across a fold: a new (src_id, dst_id, pred) key
-  * adds one edge and +1 degree at each endpoint, a repeated key adds
-  * nothing. With n_new = n' − n from the observed counts, the degree is
-  * unchanged when n_new = 0 and gets every endpoint increment of the delta
-  * when n_new equals the delta's distinct key count (observed on the delta
-  * branch of the same job; enricher ticks are always this case, their keys
-  * are anti-joined against the edges); any other delta recomputes it. */
+  * Every read takes its files from the snapshots' manifests
+  * ([[TableIO.readSnapshots]]), so a part file that is gone fails the pin
+  * instead of reading as no rows. The pin's own job also gathers, with
+  * `Dataset.observe`, the view's row count (so [[statistics]] runs no job).
+  * The session pins a degree frame per (nodes id, edges id) and carries it
+  * across a fold: a new (src_id, dst_id, pred) key adds one edge and +1
+  * degree at each endpoint, a repeated key adds nothing. With n_new = n' − n
+  * from the observed counts, the degree is unchanged when n_new = 0 and gets
+  * every endpoint increment of the delta when n_new equals the delta's
+  * distinct key count (observed on the delta branch of the same job;
+  * enricher ticks are always this case, their keys are anti-joined against
+  * the edges); any other delta recomputes it. */
 final class KgSession(val spark: SparkSession, val workDir: String) {
   import KgSession._
 
@@ -85,8 +87,7 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     * increments forward when the observed counts allow. */
   private def fold(dir: String, p: Pin, newer: Seq[Int],
       view: DataFrame => DataFrame): Pin = {
-    val keyed = p.degreeFrom.isDefined &&
-      TableIO.snapshotRows(dir, newer).exists(_ <= CarryCap)
+    val keyed = p.degreeFrom.isDefined && TableIO.snapshotRows(dir, newer) <= CarryCap
     val (pin, keys) = checkpointed(dir, newer, Some(p), view, keyed)
     val added = pin.rows - p.rows
     val degreeFrom = p.degreeFrom.flatMap { case (base, incr) =>
@@ -100,27 +101,20 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   }
 
   /** The pin of `view(base ∪ snapshots ids)`, localCheckpointed in one job
-    * that also observes the view's rows, the rows read (checked against the
-    * manifests) and, when `keyed`, the distinct (src_id, dst_id, pred) keys
-    * read. The union keeps the base's partition count: a base that fits one
-    * partition (as the adaptive shuffle sized it) is merged in the read's
-    * own stage, with no shuffle. */
+    * that also observes the view's rows and, when `keyed`, the distinct
+    * (src_id, dst_id, pred) keys read. The union keeps the base's partition
+    * count: a base that fits one partition (as the adaptive shuffle sized
+    * it) is merged in the read's own stage, with no shuffle. */
   private def checkpointed(dir: String, ids: Seq[Int], base: Option[Pin],
       view: DataFrame => DataFrame, keyed: Boolean): (Pin, Option[Seq[Row]]) = {
     val (read, out) = (Observation(), Observation())
-    val in = TableIO.readSnapshots(spark, dir, ids).observe(read, count(lit(1)).as("rows"),
-      (if (keyed) Seq(collect_set(struct("src_id", "dst_id", "pred")).as("keys")) else Nil): _*)
+    val in = TableIO.readSnapshots(spark, dir, ids).transform(r => if (!keyed) r
+      else r.observe(read, collect_set(struct("src_id", "dst_id", "pred")).as("keys")))
     val df = view(base.fold(in)(b => b.df.unionByName(in).coalesce(math.max(1, b.parts))))
       .observe(out, count(lit(1)).as("rows")).localCheckpoint()
-    val r = TableIO.observed(read)
-    val got = r.getAs[Long]("rows")
-    TableIO.snapshotRows(dir, ids).filter(_ != got).foreach { want =>
-      throw new IllegalStateException(
-        s"$dir: snapshots ${ids.mkString(",")} read $got rows, their manifests record $want")
-    }
-    val pin = Pin(ids.head, df, TableIO.observed(out).getAs[Long]("rows"),
+    val pin = Pin(ids.head, df, observed(out).getAs[Long]("rows"),
       df.queryExecution.toRdd.getNumPartitions)
-    (pin, Option.when(keyed)(r.getAs[scala.collection.Seq[Row]]("keys").toSeq))
+    (pin, Option.when(keyed)(observed(read).getAs[scala.collection.Seq[Row]]("keys").toSeq))
   }
 
   private def nodesPin: Pin = pinned(Pipeline.nodesDir(conf))(identity)
@@ -190,6 +184,11 @@ object KgSession {
   /** Largest delta, in rows, whose keys a fold gathers on the driver, and
     * largest carried increment map; past either the degree is recomputed. */
   private val CarryCap = 4096
+
+  /** An observation's metrics. They arrive on the listener bus just after
+    * the job; the bound only keeps a lost event from hanging the caller. */
+  private def observed(o: Observation): Row =
+    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
 
   /** Build (or resume) the graph from the configured corpus, then open. */
   def build(spark: SparkSession, c: Pipeline.Conf): KgSession = {

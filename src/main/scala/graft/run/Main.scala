@@ -32,7 +32,7 @@ object Main {
     m.getOrElse("vacuumGraceMs", "300000").toLong)
 
   def confFrom(m: Map[String, String]): Pipeline.Conf = Pipeline.Conf(
-    workDir = m.getOrElse("workDir", "/root/repo/target/kg-run"),
+    workDir = m.getOrElse("workDir", "target/kg-run"),
     nDocs = m.getOrElse("nDocs", "400").toLong,
     seed = m.getOrElse("seed", "42").toLong,
     nBuckets = m.getOrElse("nBuckets", "8").toInt,

@@ -22,8 +22,8 @@ import scala.collection.immutable.ListMap
   *     → snapshots (nodes / edges / triples_view Iceberg-style tables)
   *
   * Every stage leaves per-partition lineage + counters in checkpoint
-  * manifests; a killed run resumes: the extraction stage at bucket
-  * granularity, downstream snapshot stages at stage granularity.
+  * manifests. A killed run resumes only the extraction stage, per bucket:
+  * every [[run]] recomputes the aggregate and commits three fresh snapshots.
   */
 object Pipeline {
 

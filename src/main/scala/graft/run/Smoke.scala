@@ -9,7 +9,7 @@ object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession("local[8]", 8)
     import spark.implicits._
-    val work = "/root/repo/target/smoke"
+    val work = "target/smoke"
     if (!args.contains("keep"))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     val t0 = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft.tables
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -55,8 +55,8 @@ object TableIO {
   // ---------------------------------------------------------------- snapshot
 
   /** Commit `df` as the next FULL snapshot of table `dir`: data to
-    * snap-<n>/, per-partition row counters and the read schema to
-    * _manifest/snap-<n>.json, then CURRENT is repointed (monotonically).
+    * snap-<n>/; each part file's rows and bytes and the read schema to
+    * _manifest/snap-<n>.json; then CURRENT is repointed (monotonically).
     * Readers always see a complete snapshot.
     *
     * Concurrency scope: concurrent commits produce DISTINCT snapshot ids
@@ -113,7 +113,7 @@ object TableIO {
           // equality, order- and nullability-insensitive; the write below
           // reorders to the snapshot's column order so the chain's parquet
           // files stay column-aligned.
-          val curSchema = snapshotSchema(newRows.sparkSession, dir, cur)
+          val curSchema = manifest(dir, cur).schema
           val curSig = curSchema.fields.map(f => f.name -> f.dataType.sql).toMap
           val newSig = newRows.schema.fields.map(f => f.name -> f.dataType.sql).toMap
           require(curSig == newSig,
@@ -130,28 +130,12 @@ object TableIO {
   }
 
   /** Writes the rows of `chain` ∪ `rows` as a new FULL snapshot and returns
-    * its id. The write's job also counts the rows the chain reads; when they
-    * fall short of its manifests (a part file deleted, which reads as no
-    * rows) it throws before anything repoints CURRENT, so the loss does not
-    * become the table's new base. The written snapshot is left unreferenced. */
+    * its id. The chain is read from its manifests' file lists, so a part
+    * file that is gone fails the write before anything repoints CURRENT. */
   private def compact(spark: SparkSession, dir: String, chain: Seq[Int],
-      rows: DataFrame, stage: String): Int = {
-    val read = Observation()
-    val n = writeSnap(readSnapshots(spark, dir, chain).observe(read, count(lit(1)).as("rows"))
-      .unionByName(rows), Paths.get(dir), stage, deltaOf = -1)
-    val got = observed(read).getAs[Long]("rows")
-    snapshotRows(dir, chain).filter(_ != got).foreach { want =>
-      throw new IllegalStateException(
-        s"commitDelta($dir): compacting snapshots ${chain.mkString(",")} read $got rows, " +
-          f"their manifests record $want; snap-$n%05d left unreferenced")
-    }
-    n
-  }
-
-  /** An observation's metrics. They arrive on the listener bus just after
-    * the job; the bound only keeps a lost event from hanging the caller. */
-  private[graft] def observed(o: Observation): Row =
-    scala.concurrent.Await.result(o.future, scala.concurrent.duration.Duration(60, "s"))
+      rows: DataFrame, stage: String): Int =
+    writeSnap(readSnapshots(spark, dir, chain).unionByName(rows), Paths.get(dir), stage,
+      deltaOf = -1)
 
   /** One lock object per table dir: serializes the read-chain-head →
     * write-delta → repoint sequence for in-JVM delta appenders. */
@@ -160,7 +144,7 @@ object TableIO {
 
   private def writeSnap(df: DataFrame, base: Path, stage: String, deltaOf: Int): Int = {
     Files.createDirectories(base)
-    var n = nextSnapshotId(base)
+    var n = listSnapshots(base.toString).lastOption.fold(0)(_ + 1)
     var snapDir = base.resolve(f"snap-$n%05d")
     var claimed = false
     while (!claimed) {
@@ -172,19 +156,20 @@ object TableIO {
     // append into the freshly claimed EMPTY dir — overwrite would delete the
     // claim first, letting a concurrent committer re-claim the same id
     df.write.mode("append").parquet(snapDir.toString)
-    // per-partition lineage: row counts straight from parquet footers
-    // (driver-side metadata read — no extra Spark job)
+    // per-partition lineage: row counts straight from parquet footers, byte
+    // lengths from a stat (driver-side metadata reads — no extra Spark job)
     val perFile = parquetFileRows(snapDir)
     val node = mapper.createObjectNode()
     node.put("stage", stage); node.put("snapshot", n)
     node.put("delta_of", deltaOf) // -1 = full snapshot
-    node.put("total_rows", perFile.map(_._2).sum)
+    node.put("total_rows", perFile.map(_.rows).sum)
     // the schema a parquet read of the snapshot infers (file sources read
     // every field as nullable), so readers skip the inference job
     node.set[JsonNode]("schema", mapper.readTree(
       org.apache.spark.sql.graft.Bridge.asNullable(df.schema).json))
+    // the snapshot's files: what a read of it scans
     val parts = node.putObject("partitions")
-    perFile.foreach { case (f, r) => parts.put(f, r) }
+    perFile.foreach(f => parts.putObject(f.name).put("rows", f.rows).put("bytes", f.bytes))
     writeJsonAtomic(base.resolve("_manifest").resolve(f"snap-$n%05d.json"),
       mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
     n
@@ -246,32 +231,29 @@ object TableIO {
     * resources costs more than reading a small file's footer. */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
-  /** (fileName, rowCount) per parquet file in a directory, via footers. */
-  def parquetFileRows(dir: Path): Array[(String, Long)] = {
+  /** One parquet file of a directory: its name, row count and byte length. */
+  final case class PartFile(name: String, rows: Long, bytes: Long)
+
+  /** The parquet files in a directory, by name, with their footers' row
+    * counts. */
+  def parquetFileRows(dir: Path): Array[PartFile] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), footerConf))
-        try p.getFileName.toString -> r.getRecordCount finally r.close()
-      }.toArray.sortBy(_._1)
+    entries(dir).filter(_.getFileName.toString.endsWith(".parquet")).map { p =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toString), footerConf))
+      try PartFile(p.getFileName.toString, r.getRecordCount, Files.size(p)) finally r.close()
+    }.toArray.sortBy(_.name)
   }
 
   def parquetRowCount(dir: String): Long =
-    parquetFileRows(Paths.get(dir)).map(_._2).sum
+    parquetFileRows(Paths.get(dir)).map(_.rows).sum
 
-  private def nextSnapshotId(base: Path): Int = {
-    val existing = if (!Files.exists(base)) Seq.empty
-    else {
-      val st = Files.list(base)
-      try st.iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("snap-"))
-        .map(_.stripPrefix("snap-").toInt).toSeq
-      finally st.close()
-    }
-    if (existing.isEmpty) 0 else existing.max + 1
+  /** The entries of directory `dir`. The listing holds a file descriptor
+    * until it is closed, so it is read whole and closed here. */
+  private def entries(dir: Path): List[Path] = {
+    val st = Files.list(dir)
+    try st.iterator().asScala.toList finally st.close()
   }
 
   def currentSnapshot(dir: String): Option[String] = {
@@ -282,39 +264,39 @@ object TableIO {
   def currentSnapshotId(dir: String): Option[Int] =
     currentSnapshot(dir).map(_.stripPrefix("snap-").toInt)
 
-  /** The manifest field `field` of snapshot `n`, if the manifest has it. */
-  private def manifestField(dir: String, n: Int, field: String): Option[JsonNode] = {
+  /** What snapshot `n`'s manifest records: its parent (-1 = a full
+    * snapshot), its rows, the schema a read of it returns and its part
+    * files with their byte lengths. */
+  private final case class Manifest(deltaOf: Int, rows: Long, schema: StructType,
+      files: Seq[(String, Long)])
+
+  /** Snapshot `n`'s manifest. A manifest without a field [[writeSnap]]
+    * writes (one written before the field existed) fails, naming the
+    * snapshot and the field: its table has to be rebuilt. */
+  private def manifest(dir: String, n: Int): Manifest = {
+    val snap = f"$dir/snap-$n%05d"
     val p = Paths.get(dir, "_manifest", f"snap-$n%05d.json")
-    if (!Files.exists(p)) None else Option(mapper.readTree(p.toFile).get(field))
+    if (!Files.exists(p)) throw new IllegalStateException(s"$snap: no manifest at $p")
+    // `path` names the field from the manifest's root; its last part is j's key
+    def field(j: JsonNode, path: String): JsonNode = Option(j.get(path.split('.').last))
+      .getOrElse(throw new IllegalStateException(s"$snap: manifest $p has no field '$path'"))
+    val m = mapper.readTree(p.toFile)
+    Manifest(field(m, "delta_of").asInt, field(m, "total_rows").asLong,
+      DataType.fromJson(field(m, "schema").toString).asInstanceOf[StructType],
+      field(m, "partitions").properties.asScala.toSeq.map(e =>
+        e.getKey -> field(e.getValue, s"partitions.${e.getKey}.bytes").asLong))
   }
 
-  /** The manifest's delta_of pointer; -1 = full snapshot (and legacy
-    * manifests without the field are full snapshots). */
-  private def deltaOf(dir: String, n: Int): Int =
-    manifestField(dir, n, "delta_of").fold(-1)(_.asInt)
-
-  /** The read schema snapshot `n`'s manifest records; None for a manifest
-    * written before the field existed. */
-  private def manifestSchema(dir: String, n: Int): Option[StructType] =
-    manifestField(dir, n, "schema")
-      .map(j => DataType.fromJson(j.toString).asInstanceOf[StructType])
-
-  /** The schema a read of snapshot `n` returns, from its manifest: a small
-    * file read, no Spark job (inferred only for a manifest that predates
-    * the field). */
-  private def snapshotSchema(spark: SparkSession, dir: String, n: Int): StructType =
-    manifestSchema(dir, n).getOrElse(readSnapshot(spark, dir, n).schema)
-
-  /** [[snapshotSchema]] of the current snapshot. */
-  def currentSchema(spark: SparkSession, dir: String): StructType =
-    snapshotSchema(spark, dir, requireCurrentId(dir))
+  /** The schema a read of the current snapshot returns, from its manifest:
+    * a small file read, no Spark job. */
+  def currentSchema(dir: String): StructType = manifest(dir, requireCurrentId(dir)).schema
 
   /** Snapshot ids making up the state at snapshot `n`, newest first: `n`,
     * then the delta chain down to (and including) its base full snapshot. */
   def snapshotChain(dir: String, n: Int): Seq[Int] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Int]
     var cur = n
-    while (cur >= 0 && !buf.contains(cur)) { buf += cur; cur = deltaOf(dir, cur) }
+    while (cur >= 0 && !buf.contains(cur)) { buf += cur; cur = manifest(dir, cur).deltaOf }
     buf.toSeq
   }
 
@@ -327,39 +309,32 @@ object TableIO {
 
   /** Time travel: read the table state AT a committed snapshot — the
     * snapshot's own data plus, for a delta snapshot, its chain of parents
-    * (snapshots are immutable; CURRENT only ever advances). The schema
-    * comes from the snapshot's manifest, so the read runs no
-    * schema-inference job; a manifest from before the `schema` field falls
-    * back to inference. Every snapshot of a chain has the same schema
-    * ([[commitDelta]] checks it), so the head's serves the whole chain. */
+    * (snapshots are immutable; CURRENT only ever advances), through
+    * [[readSnapshots]]. */
   def readSnapshot(spark: SparkSession, dir: String, snapshot: Int): DataFrame =
     readSnapshots(spark, dir, snapshotChain(dir, snapshot))
 
   /** The rows of snapshots `ids` themselves, not of their parents, newest
     * first as [[snapshotChain]] lists them: a reader that already holds a
-    * chain's prefix reads only the deltas after it. The schema is `ids.head`'s
-    * manifest's. */
-  def readSnapshots(spark: SparkSession, dir: String, ids: Seq[Int]): DataFrame =
-    manifestSchema(dir, ids.head).fold(spark.read)(spark.read.schema)
-      .parquet(ids.map(s => Paths.get(dir, f"snap-$s%05d").toString): _*)
+    * chain's prefix reads only the deltas after it. Every snapshot read goes
+    * through here. The files and the schema come from the manifests, so the
+    * read lists no directory and runs no job, and a part file that is gone
+    * fails the read instead of reading as no rows. Every snapshot of a chain
+    * has the same schema ([[commitDelta]] checks it); `ids.head`'s serves. */
+  def readSnapshots(spark: SparkSession, dir: String, ids: Seq[Int]): DataFrame = {
+    val ms = ids.map(manifest(dir, _))
+    org.apache.spark.sql.graft.Bridge.parquetFiles(spark, ms.head.schema,
+      ids.zip(ms).map { case (n, m) => Paths.get(dir, f"snap-$n%05d").toString -> m.files })
+  }
 
   /** The rows snapshots `ids` hold by their manifests (their own data, not
-    * their chains'); None when a manifest lacks the count. */
-  def snapshotRows(dir: String, ids: Seq[Int]): Option[Long] =
-    ids.foldLeft(Option(0L))((acc, n) =>
-      acc.zip(manifestField(dir, n, "total_rows")).map { case (a, r) => a + r.asLong })
+    * their chains'). */
+  def snapshotRows(dir: String, ids: Seq[Int]): Long = ids.map(manifest(dir, _).rows).sum
 
-  def listSnapshots(dir: String): Seq[Int] = {
-    val base = Paths.get(dir)
-    if (!Files.exists(base)) Seq.empty
-    else {
-      val st = Files.list(base)
-      try st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("snap-")).map(_.stripPrefix("snap-").toInt)
-        .toSeq.sorted
-      finally st.close()
-    }
-  }
+  def listSnapshots(dir: String): Seq[Int] =
+    if (!Files.exists(Paths.get(dir))) Seq.empty
+    else entries(Paths.get(dir)).map(_.getFileName.toString)
+      .filter(_.startsWith("snap-")).map(_.stripPrefix("snap-").toInt).sorted
 
   /** Snapshot garbage collection: delete snap dirs (and their manifests)
     * not reachable from the chains of the `retainLast` newest committed
@@ -565,14 +540,9 @@ object TableIO {
     val dir = Paths.get(s"$inputDir/bucket=$b")
     val files =
       if (!Files.exists(dir)) "missing"
-      else {
-        val st = Files.list(dir)
-        try st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(p => s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
-          .toSeq.sorted.mkString(",")
-        finally st.close()
-      }
+      else entries(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
+        .sorted.mkString(",")
     s"$inputDir#bucket=$b#${java.util.UUID.nameUUIDFromBytes(files.getBytes("UTF-8"))}"
   }
 

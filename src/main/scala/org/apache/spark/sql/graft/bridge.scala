@@ -1,18 +1,47 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-/** Column ⇄ Expression bridge for custom Catalyst expressions, and
-  * `StructType.asNullable`. `ExpressionUtils` is `private[sql]` in Spark 4,
-  * so this lives in the spark.sql package tree — the standard
-  * extension-library pattern. */
+/** Column ⇄ Expression bridge for custom Catalyst expressions,
+  * `StructType.asNullable`, and a parquet read of a given file list.
+  * `ExpressionUtils` is `private[sql]` in Spark 4, so this lives in the
+  * spark.sql package tree — the standard extension-library pattern. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   /** `s` with every field, nested ones included, nullable: the schema a
     * file-source read reports (`asNullable` is `private[spark]`). */
   def asNullable(s: StructType): StructType = s.asNullable
+
+  /** The rows of the parquet files `dirs` lists (directory → its files'
+    * names and byte lengths), read with `schema`: the relation
+    * `spark.read.schema(schema).parquet(dirs)` plans, but its file index
+    * takes the files from `dirs` instead of listing the directories. So it
+    * runs no listing job, and a listed file that is gone fails the scan
+    * (`FAILED_READ_FILE.FILE_NOT_EXIST`) instead of reading as no rows. */
+  def parquetFiles(spark: SparkSession, schema: StructType,
+      dirs: Seq[(String, Seq[(String, Long)])]): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val fs = FileSystem.getLocal(session.sessionState.newHadoopConf())
+    val listed = dirs.map { case (d, files) =>
+      val dir = fs.makeQualified(new Path(d))
+      dir -> files.map(f => new FileStatus(f._2, false, 0, 0L, 0L, new Path(dir, f._1))).toArray
+    }
+    val cache = new FileStatusCache {
+      override def getLeafFiles(p: Path) = listed.find(_._1 == p).map(_._2)
+      def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(session, listed.map(_._1), Map.empty, Some(schema),
+      cache, Some(PartitionSpec.emptySpec))
+    classic.Dataset.ofRows(session, LogicalRelation(HadoopFsRelation(index,
+      new StructType(), schema, None, new ParquetFileFormat, Map.empty)(session)))
+  }
 }

@@ -1,8 +1,12 @@
 package graft
 
+import graft.graph.{KgQueries, KgSession}
+import graft.run.Pipeline
 import graft.tables.TableIO
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 class TableIOSpec extends SparkSuite {
@@ -166,15 +170,14 @@ class TableIOSpec extends SparkSuite {
     val head = TableIO.requireCurrentId(dir)
     val chain = TableIO.snapshotChain(dir, head)
     val roots = TableIO.rootLog(dir)
-    // the delta's part file is gone: its dir reads as no rows
+    // the delta's part file is gone: the compaction's read fails on it
     val st = Files.list(Paths.get(dir, f"snap-$head%05d"))
     try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).foreach(Files.delete)
     finally st.close()
-    val e = intercept[IllegalStateException] {
+    val e = intercept[Exception] {
       TableIO.commitDelta(Seq((12L, "d2")).toDF("id", "src"), dir, "t", maxChain = 2)
     }
-    assert(e.getMessage.contains("read 10 rows") && e.getMessage.contains("record 11"),
-      e.getMessage)
+    assert(names(e, f"snap-$head%05d/part-"), messages(e))
     assert(TableIO.requireCurrentId(dir) == head)
     assert(TableIO.snapshotChain(dir, head) == chain)
     assert(TableIO.rootLog(dir) == roots)
@@ -418,18 +421,33 @@ class TableIOSpec extends SparkSuite {
     assert(TableIO.snapshotChain(dir, 2) == Seq(2, 1, 0))
     Seq(1, 2).foreach(same)
     assert(jobsOf(TableIO.readSnapshot(spark, dir, 2)) == 0, "no inference job")
-    assert(jobsOf(TableIO.currentSchema(spark, dir)) == 0)
-    assert(TableIO.currentSchema(spark, dir) == inferred(2).schema)
+    assert(jobsOf(TableIO.currentSchema(dir)) == 0)
+    assert(TableIO.currentSchema(dir) == inferred(2).schema)
 
-    // a manifest written before the field existed: reads fall back to inference
+    // a manifest written before a field existed fails every read of it,
+    // naming the snapshot and the field
     val m = Paths.get(dir, "_manifest", "snap-00002.json")
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(m.toFile)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("schema")
-    Files.writeString(m, node.toString)
+    val written = Files.readString(m)
+    def without(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit, field: String): Unit = {
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(written)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      edit(node)
+      Files.writeString(m, node.toString)
+      Seq[() => Any](() => TableIO.readCurrent(spark, dir), () => TableIO.readSnapshot(spark, dir, 2),
+        () => TableIO.currentSchema(dir)).foreach { read =>
+        val e = intercept[IllegalStateException](read())
+        assert(e.getMessage.contains(s"$dir/snap-00002") && e.getMessage.contains(s"'$field'"),
+          e.getMessage)
+      }
+    }
+    without(_.remove("schema"), "schema")
+    without(_.remove("delta_of"), "delta_of")
+    // the part files listed by row count only, as before their byte lengths
+    val part = partFiles(dir, 2).head.getFileName.toString
+    without(n => n.set[com.fasterxml.jackson.databind.JsonNode]("partitions",
+      n.objectNode().put(part, 1L)), s"partitions.$part.bytes")
+    Files.writeString(m, written)
     same(2)
-    assert(TableIO.currentSchema(spark, dir) == inferred(2).schema)
-    assert(TableIO.readCurrent(spark, dir).count() == 7)
   }
 
   test("vacuum racing full-snapshot commits keeps every root committed since it started in the log") {
@@ -471,16 +489,74 @@ class TableIOSpec extends SparkSuite {
     assert(TableIO.readCurrent(spark, dir).count() == 1)
   }
 
-  test("a delta chain reads with no job up to 32 snapshots and one file-listing job past it") {
-    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32 paths)
-    // the chain's files are listed in a Spark job; maxChain (64) is left
-    // as it is, one listing job being cheaper than compacting twice as often
+  test("a 40-snapshot delta chain reads with no job") {
+    // the files come from the manifests: no listing, however long the chain
     val dir = tmpDir("longChain")
     TableIO.commitSnapshot(Seq((0L, "base")).toDF("id", "src"), dir, "t")
     (1 until 40).foreach(i => TableIO.commitDelta(Seq((i.toLong, "d")).toDF("id", "src"), dir, "t"))
-    assert(TableIO.snapshotChain(dir, 31).size == 32 && TableIO.snapshotChain(dir, 39).size == 40)
-    assert(jobsOf(TableIO.readSnapshot(spark, dir, 31)) == 0)
-    assert(jobsOf(TableIO.readSnapshot(spark, dir, 39)) <= 1)
+    assert(TableIO.snapshotChain(dir, 39).size == 40)
+    assert(jobsOf(TableIO.readSnapshot(spark, dir, 39)) == 0)
     assert(TableIO.readSnapshot(spark, dir, 39).count() == 40)
   }
+
+  test("a part file gone from a committed snapshot fails every read and the compaction") {
+    val c = GraphFixture.commit(spark, tmpDir("goneFile"))
+    val dir = Pipeline.edgesDir(c)
+    val folding = KgSession.open(spark, c.workDir)
+    folding.edges // pinned at the base, so the next read folds the deltas in
+    val Seq(a, b) = Seq("Deep Learning", "Gradient Descent").map(n => folding.idOf(n).get)
+    KgQueries.addEdgeDelta(spark, dir, a, b, "Manually Linked")
+    KgQueries.addEdgeDelta(spark, dir, b, a, "Manually Linked")
+    val head = TableIO.requireCurrentId(dir)
+    val chain = TableIO.snapshotChain(dir, head)
+    val roots = TableIO.rootLog(dir)
+    assert(chain == Seq(2, 1, 0))
+    val gone = partFiles(dir, 1).head
+    Files.delete(gone)
+    def fails(what: String)(read: => Any): Unit = {
+      val r = Await.result(Future(scala.util.Try(read))(ExecutionContext.global), Duration(60, "s"))
+      assert(r.isFailure, s"$what read a snapshot with a part file gone")
+      assert(names(r.failed.get, gone.getFileName.toString), s"$what: ${messages(r.failed.get)}")
+    }
+    fails("readCurrent")(TableIO.readCurrent(spark, dir).collect())
+    fails("readSnapshot(1)")(TableIO.readSnapshot(spark, dir, 1).collect())
+    fails("edgesAt(1)")(KgSession.open(spark, c.workDir).edgesAt(1).collect())
+    fails("a fresh pin")(KgSession.open(spark, c.workDir).edges)
+    fails("a pin fold")(folding.edges)
+    fails("a compacting commitDelta")(TableIO.commitDelta(TableIO.readSnapshot(spark, dir, 0)
+      .limit(1).withColumn("pred", lit("Compacted")), dir, "edges", maxChain = 3))
+    assert(TableIO.requireCurrentId(dir) == head)
+    assert(TableIO.snapshotChain(dir, head) == chain)
+    assert(TableIO.rootLog(dir) == roots)
+  }
+
+  test("parquetFileRows closes the directory it lists") {
+    val dir = tmpDir("fds")
+    TableIO.commitSnapshot(Seq(1, 2, 3).toDF("x"), dir, "t")
+    def openFds: Long = {
+      val st = Files.list(Paths.get("/proc/self/fd"))
+      try st.count() finally st.close()
+    }
+    val before = openFds
+    (1 to 1000).foreach(_ => TableIO.parquetFileRows(Paths.get(dir, "snap-00000")))
+    val grown = openFds - before
+    assert(grown < 50, s"1,000 calls left $grown more open file descriptors")
+  }
+
+  /** Snapshot `n`'s parquet part files. */
+  private def partFiles(dir: String, n: Int): Seq[java.nio.file.Path] = {
+    val st = Files.list(Paths.get(dir, f"snap-$n%05d"))
+    try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+    finally st.close()
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  private def messages(e: Throwable): String =
+    causes(e).map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString("\n")
+
+  /** Whether `e` or one of its causes names `file`. */
+  private def names(e: Throwable, file: String): Boolean =
+    causes(e).exists(c => Option(c.getMessage).exists(_.contains(file)))
 }

@@ -111,6 +111,11 @@ class TextOpsSpec extends SparkSuite {
     assert(NearDup.simhashDupPairs(hot(100), "doc_id", "text").isEmpty)
     assert(NearDup.simhashDupPairs(hot(65), "doc_id", "text").isEmpty)
     assert(NearDup.simhashDupPairs(hot(64), "doc_id", "text").count() == 2016L)
+    // the cap counts distinct ids, not rows: 40 ids, each in two rows (80
+    // rows, past a row cap of 64), keep all 40·39/2 pairs
+    val twice = hot(40).union(hot(40))
+    assert(NearDup.simhashDupPairs(twice, "doc_id", "text").select("a", "b").distinct()
+      .count() == 780L)
   }
 
   test("embedding-cosine near-dup: planted dup found, unrelated vectors not") {

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -136,12 +136,12 @@ object KgQueries {
       cooccurrence(mentionsCanon).filter(col("n_docs") >= minDocs), maxNew, focus)
 
   /** Enrichment tick over a PRECOMPUTED co-occurrence table: exactly
-    * [[pickNew]] over [[coPairs]]. A ticker computes the corpus aggregate
-    * once and pins its [[coPairs]] per nodes snapshot, so a tick runs only
-    * [[pickNew]]. */
+    * [[pickNew]] over the [[unlinked]] [[coPairs]]. A ticker computes the
+    * corpus aggregate once and pins the unlinked pairs per (nodes, edges)
+    * snapshot, so a tick runs only [[pickNew]]. */
   def enrichOnceFromCo(nodes: DataFrame, edges: DataFrame, co: DataFrame,
       maxNew: Int, focus: Option[DataFrame] = None): DataFrame =
-    pickNew(coPairs(nodes, co), edges, maxNew, focus)
+    pickNew(unlinked(coPairs(nodes, co), edges), maxNew, focus)
 
   /** The co-occurrence pairs (a, b, n_docs) mapped to node ids: a_id, b_id,
     * the undirected key (k1, k2) = (least, greatest) of the ids, and the
@@ -157,27 +157,25 @@ object KgQueries {
         md5(concat_ws("|", col("a"), col("b"))).as("pick"))
   }
 
-  /** The top `maxNew` of [[coPairs]] `pairs` by (n_docs desc, pick) that
-    * are not adjacent in `edges` in either direction, as CoOccursWith edge
-    * rows.
-    * @param focus G5 low-connectivity reseeding, as in [[enrichOnce]] */
-  def pickNew(pairs: DataFrame, edges: DataFrame, maxNew: Int,
-      focus: Option[DataFrame]): DataFrame = {
-    val focused = focus.fold(pairs)(f => pairs.join(broadcast(f.select(col("node_id"))),
-      col("a_id") === col("node_id") || col("b_id") === col("node_id"), "left_semi"))
-    // an anti-join drops a pair on any match, so repeated keys (one per
-    // pred, one per direction) need no distinct
-    val existing = edges.select(
+  /** The [[coPairs]] `pairs` not adjacent in `edges` in either direction; an
+    * anti-join drops a pair on any match, so repeated keys need no distinct. */
+  def unlinked(pairs: DataFrame, edges: DataFrame): DataFrame =
+    pairs.join(edges.select(
       least(col("src_id"), col("dst_id")).as("k1"),
-      greatest(col("src_id"), col("dst_id")).as("k2"))
-    focused.join(existing, Seq("k1", "k2"), "left_anti")
+      greatest(col("src_id"), col("dst_id")).as("k2")), Seq("k1", "k2"), "left_anti")
+
+  /** The top `maxNew` of the [[unlinked]] pairs `remaining` by
+    * (n_docs desc, pick), as CoOccursWith edge rows.
+    * @param focus G5 low-connectivity reseeding, as in [[enrichOnce]] */
+  def pickNew(remaining: DataFrame, maxNew: Int, focus: Option[DataFrame]): DataFrame =
+    focus.fold(remaining)(f => remaining.join(broadcast(f.select(col("node_id"))),
+        col("a_id") === col("node_id") || col("b_id") === col("node_id"), "left_semi"))
       .orderBy(col("n_docs").desc, col("pick").asc).limit(maxNew)
       .select(col("a_id").as("src_id"), col("b_id").as("dst_id"),
         lit("CoOccursWith").as("pred"), lit("cooccurswith").as("pred_norm"),
         round(lit(1.0) - lit(1.0) / (col("n_docs") + 1), 6).as("strength"),
         col("n_docs"),
         concat(col("a"), lit(" co-occurs with "), col("b")).as("description"))
-  }
 
   /** G1/O6: seed-BFS reachability — the reference's frontier-queue graph
     * expansion (/root/reference/kg-builder/internal/graph/graph.go:56-130).
@@ -234,10 +232,11 @@ object KgQueries {
   private def edgeRow(spark: SparkSession,
       provType: org.apache.spark.sql.types.DataType,
       srcId: Long, dstId: Long, pred: String): DataFrame = {
-    import spark.implicits._
-    // one projection: each withColumn would be its own analysis pass
-    Seq((srcId, dstId, pred)).toDF("src_id", "dst_id", "pred")
-      .select(col("src_id"), col("dst_id"), col("pred"),
+    // one projection: each withColumn would be its own analysis pass; the
+    // row with its schema, as a tuple's encoder costs more than the rest
+    spark.createDataFrame(java.util.List.of(Row(pred)),
+        new org.apache.spark.sql.types.StructType().add("pred", "string"))
+      .select(lit(srcId).as("src_id"), lit(dstId).as("dst_id"), col("pred"),
         Materialize.normPred(col("pred")).as("pred_norm"),
         lit(1.0).as("strength"),
         lit(1L).as("n_obs"),
@@ -279,8 +278,8 @@ object KgQueries {
   /** S13 scale path: a single-row REST-style add as an O(1) DELTA commit —
     * the write volume is the ONE new row ([[graft.tables.TableIO.commitDelta]]),
     * never a table rewrite; MERGE semantics are applied at read time by
-    * [[mergedEdges]]. At a 10⁹-edge table this is the only viable shape —
-    * the previous implementation rewrote the whole table per added edge. */
+    * [[mergedEdges]]. The row's plan is a local relation, so its collect and
+    * the driver-side write of the delta run no Spark job. */
   def addEdgeDelta(spark: SparkSession, tableDir: String,
       srcId: Long, dstId: Long, pred: String): Unit = {
     val provType = graft.tables.TableIO.currentSchema(tableDir)("provenance").dataType

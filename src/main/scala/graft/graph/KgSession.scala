@@ -36,14 +36,15 @@ import org.apache.spark.sql.functions._
   * ([[TableIO.readSnapshots]]), so a part file that is gone fails the pin
   * instead of reading as no rows. The pin's own job also gathers, with
   * `Dataset.observe`, the view's row count (so [[statistics]] runs no job).
-  * The session pins a degree frame per (nodes id, edges id) and carries it
-  * across a fold: a new (src_id, dst_id, pred) key adds one edge and +1
-  * degree at each endpoint, a repeated key adds nothing. With n_new = n' − n
-  * from the observed counts, the degree is unchanged when n_new = 0 and gets
-  * every endpoint increment of the delta when n_new equals the delta's
-  * distinct key count (observed on the delta branch of the same job;
-  * enricher ticks are always this case, their keys are anti-joined against
-  * the edges); any other delta recomputes it. */
+  *
+  * Once the degree frame or the enricher asks, a fold of ≤ `CarryCap` delta
+  * rows also observes their distinct (src_id, dst_id, pred) keys. With
+  * n_new = n' − n from the observed counts, the delta added none of them
+  * when n_new = 0 and all when n_new is their count (as every enricher tick
+  * does); any other delta, or over `CarryCap` keys, drops the carry. A key
+  * is tagged with the snapshot that added it, so the degree frame and the
+  * enricher, pinned at an earlier edges snapshot, get the keys added since
+  * ([[edgeEndsSince]]). */
 final class KgSession(val spark: SparkSession, val workDir: String) {
   import KgSession._
 
@@ -53,11 +54,9 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   def edgesDir: String = Pipeline.edgesDir(conf)
 
   /** One table's pinned snapshot: its id, its view localCheckpointed, the
-    * view's row count and partition count. `degreeFrom = Some((base, incr))`
-    * says the degree at this edges snapshot is the degree at edges snapshot
-    * `base` plus `incr` per node id; None = unknown, recompute. */
+    * view's row count and partition count, and the keys its folds carry. */
   private final case class Pin(id: Int, df: DataFrame, rows: Long, parts: Int,
-      degreeFrom: Option[(Int, Map[Long, Long])] = None)
+      carry: Option[Carry] = None)
 
   private val pins = scala.collection.mutable.Map.empty[String, Pin]
 
@@ -83,21 +82,18 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     }
   }
 
-  /** The pin `p` with the snapshots `newer` folded in; carries the degree
-    * increments forward when the observed counts allow. */
+  /** The pin `p` with the snapshots `newer` folded in; carries the keys the
+    * fold adds when the observed counts allow. */
   private def fold(dir: String, p: Pin, newer: Seq[Int],
       view: DataFrame => DataFrame): Pin = {
-    val keyed = p.degreeFrom.isDefined && TableIO.snapshotRows(dir, newer) <= CarryCap
+    val keyed = p.carry.isDefined && TableIO.snapshotRows(dir, newer) <= CarryCap
     val (pin, keys) = checkpointed(dir, newer, Some(p), view, keyed)
     val added = pin.rows - p.rows
-    val degreeFrom = p.degreeFrom.flatMap { case (base, incr) =>
-      if (added == 0) Some((base, incr))
-      else keys.filter(_.size == added).map { ks =>
-        val ends = ks.flatMap(k => Seq(0, 1).filterNot(k.isNullAt).map(k.getLong))
-        (base, ends.foldLeft(incr)((m, n) => m.updated(n, m.getOrElse(n, 0L) + 1L)))
-      }.filter(_._2.size <= CarryCap)
-    }
-    pin.copy(degreeFrom = degreeFrom)
+    val carry = p.carry.flatMap { c =>
+      if (added == 0) Some(c)
+      else keys.filter(_.size == added).map(ks => c.copy(keys = c.keys ++ ks.map(_ -> pin.id)))
+    }.filter(_.keys.size <= CarryCap)
+    pin.copy(carry = carry)
   }
 
   /** The pin of `view(base ∪ snapshots ids)`, localCheckpointed in one job
@@ -131,20 +127,35 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
 
   def triples: DataFrame = pinned(Pipeline.triplesDir(conf))(identity).df
 
+  /** The current edges and their snapshot id; from here on the edges pin
+    * carries the keys its folds add, for [[edgeEndsSince]]. */
+  private[graft] def carriedEdges: (Int, DataFrame) = synchronized {
+    val e = edgesPin
+    if (e.carry.isEmpty) pins(edgesDir) = e.copy(carry = Some(Carry(e.id, Map.empty)))
+    (e.id, e.df)
+  }
+
+  /** The non-null endpoints of each key the current edges hold beyond edges
+    * snapshot `id`, or None when the pin has not carried them all. */
+  private[graft] def edgeEndsSince(id: Int): Option[Seq[Seq[Long]]] = synchronized {
+    edgesPin.carry.filter(_.base <= id).map(_.since(id))
+  }
+
   /** (node_id, name, degree) of the current snapshots: the pinned degree
-    * frame plus the edges pin's carried increments, or recomputed and
-    * pinned when they cannot be carried. */
+    * frame plus +1 at each endpoint of each key carried since it, or
+    * recomputed and pinned when they are not carried. */
   private def degreeFrame: DataFrame = synchronized {
-    val (n, e) = (nodesPin, edgesPin)
+    val n = nodesPin
     val carried = for {
       (nodesId, edgesId, d) <- degreePin if nodesId == n.id
-      (base, incr) <- e.degreeFrom if base == edgesId
-    } yield if (incr.isEmpty) d else d.withColumn("degree", col("degree") +
-      coalesce(element_at(typedLit(incr), col("node_id")), lit(0L)))
+      keys <- edgeEndsSince(edgesId)
+    } yield if (keys.isEmpty) d else d.withColumn("degree", col("degree") + coalesce(
+      element_at(typedLit(keys.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)),
+        col("node_id")), lit(0L)))
     carried.getOrElse {
-      val d = KgQueries.degree(n.df, e.df).localCheckpoint()
-      degreePin = Some((n.id, e.id, d))
-      pins(edgesDir) = e.copy(degreeFrom = Some((e.id, Map.empty)))
+      val (edgesId, edges) = carriedEdges
+      val d = KgQueries.degree(n.df, edges).localCheckpoint()
+      degreePin = Some((n.id, edgesId, d))
       d
     }
   }
@@ -182,8 +193,16 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
 
 object KgSession {
   /** Largest delta, in rows, whose keys a fold gathers on the driver, and
-    * largest carried increment map; past either the degree is recomputed. */
+    * most keys a pin carries; past either the carry is dropped. */
   private val CarryCap = 4096
+
+  /** The distinct (src_id, dst_id, pred) keys the edges pin's folds added
+    * since snapshot `base`, each with the snapshot that added it. */
+  private final case class Carry(base: Int, keys: Map[Row, Int]) {
+    def since(id: Int): Seq[Seq[Long]] = keys.iterator.collect {
+      case (k, n) if n > id => Seq(0, 1).filterNot(k.isNullAt).map(k.getLong)
+    }.toSeq
+  }
 
   /** An observation's metrics. They arrive on the listener bus just after
     * the job; the bound only keeps a lost event from hanging the caller. */

@@ -19,9 +19,11 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   * stops itself when `maxRelationships` edges have been added or the candidate
   * pool is drained (a tick adds nothing).
   *
-  * The co-occurrence pairs are mapped to node ids once per nodes snapshot
-  * and pinned; a tick anti-joins them against the session's pinned edges,
-  * collects its ≤ `batch` picks and commits them from the driver.
+  * The [[KgQueries.unlinked]] co-occurrence pairs are pinned per (nodes,
+  * edges) snapshot. As `anti(P, E ∪ D) = anti(anti(P, E), D)`, a tick drops
+  * from the pin, as a literal set, the pairs of the keys folded in since
+  * ([[KgSession.edgeEndsSince]]) and collects its ≤ `batch` picks in one
+  * job; the pin is taken again when those keys are not all carried.
   */
 final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Conf) {
 
@@ -35,31 +37,38 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
     .filter(col("n_docs") >= conf.minDocs)
     .localCheckpoint()
 
-  /** (nodes frame, its [[KgQueries.coPairs]] over [[coTable]],
-    * localCheckpointed). The pairs depend on the nodes only, and `kg.nodes`
-    * returns the same frame until a nodes commit, so a tick re-maps the
-    * pairs to node ids only after one. */
-  private var pairsPin: Option[(DataFrame, DataFrame)] = None
+  /** (nodes frame, edges snapshot id, the unlinked [[KgQueries.coPairs]] of
+    * [[coTable]] at them, localCheckpointed); `kg.nodes` is the same frame
+    * until a nodes commit. */
+  private var unlinkedPin: Option[(DataFrame, Int, DataFrame)] = None
 
-  private def pairs(nodes: DataFrame): DataFrame = pairsPin match {
-    case Some((n, p)) if n eq nodes => p
-    case _ =>
-      val p = KgQueries.coPairs(nodes, coTable).localCheckpoint()
-      pairsPin = Some((nodes, p))
-      p
+  /** The pairs not linked in the current edges: the pin less the
+    * (least, greatest) pairs of the keys folded in since, or a new pin. */
+  private def remaining(nodes: DataFrame): DataFrame = {
+    val carried = for {
+      (n, edgesId, pairs) <- unlinkedPin if n eq nodes
+      ends <- kg.edgeEndsSince(edgesId)
+    } yield pairs.filter(!struct(col("k1"), col("k2")).isin(ends.filter(_.nonEmpty).distinct
+      .map(e => struct(lit(e.min).as("k1"), lit(e.max).as("k2"))): _*))
+    carried.getOrElse {
+      val (edgesId, edges) = kg.carriedEdges
+      val pairs = KgQueries.unlinked(KgQueries.coPairs(nodes, coTable), edges).localCheckpoint()
+      unlinkedPin = Some((nodes, edgesId, pairs))
+      pairs
+    }
   }
 
   def isRunning: Boolean = runningFlag.get()
   def added: Long = addedCount.get()
 
   /** One enrichment pass (the reference's RunOnce/processBatch): append up
-    * to min(batch, remaining) new edges; returns how many were added. Three
-    * Spark jobs when the session's pins are current: the broadcast of the
-    * edge keys, the collect of the picks, and the commit's write. */
+    * to min(batch, remaining) new edges; returns how many were added. One
+    * Spark job, the collect of the picks, when the session's pins and the
+    * unlinked pairs' pin are current. */
   def runOnce(): Long = synchronized {
-    val remaining = conf.maxRelationships - addedCount.get()
-    if (remaining <= 0) return 0L
-    val edges = kg.edges
+    val left = conf.maxRelationships - addedCount.get()
+    if (left <= 0) return 0L
+    val pairs = remaining(kg.nodes)
     // G5 reseeding analog: focus this tick's mining on the currently
     // worst-connected nodes (re-ranked per tick, as the reference reseeds,
     // over the session's pinned degree)
@@ -67,20 +76,17 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
       if (conf.focusBottomK > 0)
         Some(kg.lowConnectivity(conf.focusBottomK).select("node_id"))
       else None
-    val picks = KgQueries.pickNew(pairs(kg.nodes), edges,
-        math.min(conf.batch.toLong, remaining).toInt, focus)
+    val picks = KgQueries.pickNew(pairs, math.min(conf.batch.toLong, left).toInt, focus)
       .select(col("src_id"), col("dst_id"), col("pred"), col("pred_norm"),
         col("strength"), col("n_docs").as("n_obs"), col("description"),
-        array().cast(edges.schema("provenance").dataType).as("provenance"),
+        array().cast(kg.edges.schema("provenance").dataType).as("provenance"),
         Materialize.CreatedAt.as("created_at"))
-    val rows = picks.collect()
+    val rows = picks.collect().toSeq
     if (rows.nonEmpty) {
       // delta-append: each tick writes O(batch) rows, not O(edges) — the
-      // reader unions the delta chain; TableIO compacts when it grows long.
-      // The rows are on the driver already; one partition = one file.
-      val newE = picks.sparkSession
-        .createDataFrame(java.util.Arrays.asList(rows: _*), picks.schema).coalesce(1)
-      TableIO.commitDelta(newE, kg.edgesDir, "edges", conf.maxChain)
+      // reader unions the delta chain; TableIO compacts when it grows long
+      TableIO.commitDeltaRows(picks.sparkSession, picks.schema, kg.edgesDir, "edges",
+        conf.maxChain)(rows)
       // snapshot GC: without it a long-running ticker accretes one snap
       // dir per tick forever (compaction repoints but never deletes);
       // vacuum from the single appender is the safe place (see

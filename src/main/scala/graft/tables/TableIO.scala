@@ -1,8 +1,9 @@
 package graft.tables
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -82,10 +83,11 @@ object TableIO {
   /** Commit `newRows` as a DELTA snapshot chained onto the current one: the
     * write volume is O(newRows), independent of the table size — the
     * enricher's per-tick append path (a full-table rewrite per tick would
-    * make tick cost O(edges)). Readers ([[readCurrent]]/[[readSnapshot]])
-    * union the chain transparently. When the chain (base + deltas) has
-    * reached `maxChain` entries the commit COMPACTS instead: one full
-    * rewrite per ~maxChain appends keeps read fan-in bounded (amortized
+    * make tick cost O(edges)). The driver writes the collected rows as one
+    * parquet file, so the commit runs no job beyond their collect. Readers
+    * union the chain transparently. When the chain has reached `maxChain`
+    * entries the commit COMPACTS instead: a Spark write of chain ∪ rows
+    * keeps read fan-in bounded (amortized
     * O(newRows · maxChain⁻¹ · table) — the standard log-structured trade).
     * Falls back to a full commit when the table has no snapshot yet.
     *
@@ -95,54 +97,69 @@ object TableIO {
     * id from the read chain), and a cross-process appender is detected at
     * repoint time — CURRENT having moved since the chain head was read
     * fails the commit loudly instead of silently dropping the other
-    * writer's rows. */
+    * writer's rows. `newRows` is collected after the chain head is read. */
   def commitDelta(newRows: DataFrame, dir: String, stage: String,
-      maxChain: Int = 64): Unit = {
+      maxChain: Int = 64): Unit =
+    commitDeltaRows(newRows.sparkSession, newRows.schema, dir, stage, maxChain)(
+      newRows.collect().toSeq)
+
+  /** [[commitDelta]] of `rows` of `schema`, evaluated once after the chain head is read. */
+  def commitDeltaRows(spark: SparkSession, schema: StructType, dir: String, stage: String,
+      maxChain: Int = 64)(rows: => Seq[Row]): Unit = {
     val lock = appendLocks.computeIfAbsent(
       Paths.get(dir).toAbsolutePath.toString, _ => new Object)
     lock.synchronized {
       val base = Paths.get(dir)
       currentSnapshotId(dir) match {
-        case None => commitSnapshot(newRows, dir, stage)
+        case None => commitSnapshot(spark.createDataFrame(rows.asJava, schema), dir, stage)
         case Some(cur) =>
-          // fail-fast on schema drift: a delta snapshot persists whatever
-          // schema newRows has, and a mismatch would otherwise only surface
-          // later as silent nulls / read errors when the chain is unioned
-          // (the compaction path fails fast inside unionByName; this check
-          // restores that guarantee for every delta commit). Name→type
-          // equality, order- and nullability-insensitive; the write below
-          // reorders to the snapshot's column order so the chain's parquet
-          // files stay column-aligned.
+          // fail-fast on schema drift (it would surface later as silent
+          // nulls or read errors in the chain's union): name→type equality,
+          // order- and nullability-insensitive; the rows are reordered to
+          // the snapshot's columns so the chain's files stay aligned.
           val curSchema = manifest(dir, cur).schema
           val curSig = curSchema.fields.map(f => f.name -> f.dataType.sql).toMap
-          val newSig = newRows.schema.fields.map(f => f.name -> f.dataType.sql).toMap
+          val newSig = schema.fields.map(f => f.name -> f.dataType.sql).toMap
           require(curSig == newSig,
             s"commitDelta($dir): delta schema does not match the current snapshot\n" +
-              s"  table: ${curSchema.simpleString}\n  delta: ${newRows.schema.simpleString}")
-          val aligned = newRows.select(curSchema.fieldNames.map(col(_)): _*)
+              s"  table: ${curSchema.simpleString}\n  delta: ${schema.simpleString}")
+          val order = curSchema.fieldNames.map(schema.fieldIndex)
+          val aligned = StructType(order.map(schema(_)))
           val chain = snapshotChain(dir, cur)
+          val rs = rows.map(r => Row.fromSeq(order.toSeq.map(r.get)))
           val n =
-            if (chain.length >= maxChain) compact(newRows.sparkSession, dir, chain, aligned, stage)
-            else writeSnap(aligned, base, stage, deltaOf = cur)
+            // compaction: the chain, read from its manifests' file lists (a
+            // part file gone fails it before CURRENT moves), ∪ the rows
+            if (chain.length >= maxChain) writeSnap(readSnapshots(spark, dir, chain)
+              .unionByName(spark.createDataFrame(rs.asJava, aligned)), base, stage, deltaOf = -1)
+            else writeSnap(base, stage, cur, aligned) { snapDir =>
+              val name = Bridge.writeParquet(spark, aligned, rs, snapDir.toString)
+              Seq(PartFile(name, rs.size.toLong, Files.size(snapDir.resolve(name))))
+            }
           repointCurrentFrom(base, cur, n)
       }
     }
   }
-
-  /** Writes the rows of `chain` ∪ `rows` as a new FULL snapshot and returns
-    * its id. The chain is read from its manifests' file lists, so a part
-    * file that is gone fails the write before anything repoints CURRENT. */
-  private def compact(spark: SparkSession, dir: String, chain: Seq[Int],
-      rows: DataFrame, stage: String): Int =
-    writeSnap(readSnapshots(spark, dir, chain).unionByName(rows), Paths.get(dir), stage,
-      deltaOf = -1)
 
   /** One lock object per table dir: serializes the read-chain-head →
     * write-delta → repoint sequence for in-JVM delta appenders. */
   private val appendLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def writeSnap(df: DataFrame, base: Path, stage: String, deltaOf: Int): Int = {
+  /** Writes `df` with Spark as the next snapshot of `base`; returns its id. */
+  private def writeSnap(df: DataFrame, base: Path, stage: String, deltaOf: Int): Int =
+    writeSnap(base, stage, deltaOf, df.schema) { snapDir =>
+      // append into the freshly claimed EMPTY dir — overwrite would delete
+      // the claim first, letting a concurrent committer re-claim the same id;
+      // then row counts from the footers, byte lengths from a stat (no job)
+      df.write.mode("append").parquet(snapDir.toString)
+      parquetFileRows(snapDir).toSeq
+    }
+
+  /** Claims the next snapshot id of `base`, has `write` fill its directory
+    * and return its part files, and writes their manifest; returns the id. */
+  private def writeSnap(base: Path, stage: String, deltaOf: Int, schema: StructType)(
+      write: Path => Seq[PartFile]): Int = {
     Files.createDirectories(base)
     var n = listSnapshots(base.toString).lastOption.fold(0)(_ + 1)
     var snapDir = base.resolve(f"snap-$n%05d")
@@ -153,20 +170,14 @@ object TableIO {
         n += 1; snapDir = base.resolve(f"snap-$n%05d")
       }
     }
-    // append into the freshly claimed EMPTY dir — overwrite would delete the
-    // claim first, letting a concurrent committer re-claim the same id
-    df.write.mode("append").parquet(snapDir.toString)
-    // per-partition lineage: row counts straight from parquet footers, byte
-    // lengths from a stat (driver-side metadata reads — no extra Spark job)
-    val perFile = parquetFileRows(snapDir)
+    val perFile = write(snapDir)
     val node = mapper.createObjectNode()
     node.put("stage", stage); node.put("snapshot", n)
     node.put("delta_of", deltaOf) // -1 = full snapshot
     node.put("total_rows", perFile.map(_.rows).sum)
     // the schema a parquet read of the snapshot infers (file sources read
     // every field as nullable), so readers skip the inference job
-    node.set[JsonNode]("schema", mapper.readTree(
-      org.apache.spark.sql.graft.Bridge.asNullable(df.schema).json))
+    node.set[JsonNode]("schema", mapper.readTree(Bridge.asNullable(schema).json))
     // the snapshot's files: what a read of it scans
     val parts = node.putObject("partitions")
     perFile.foreach(f => parts.putObject(f.name).put("rows", f.rows).put("bytes", f.bytes))
@@ -323,7 +334,7 @@ object TableIO {
     * has the same schema ([[commitDelta]] checks it); `ids.head`'s serves. */
   def readSnapshots(spark: SparkSession, dir: String, ids: Seq[Int]): DataFrame = {
     val ms = ids.map(manifest(dir, _))
-    org.apache.spark.sql.graft.Bridge.parquetFiles(spark, ms.head.schema,
+    Bridge.parquetFiles(spark, ms.head.schema,
       ids.zip(ms).map { case (n, m) => Paths.get(dir, f"snap-$n%05d").toString -> m.files })
   }
 
@@ -425,8 +436,9 @@ object TableIO {
     * bucket is transformed and committed independently (data dir rename +
     * manifest write), several buckets in flight at once as concurrent Spark
     * jobs. On re-run, buckets whose manifest says `committed` with a matching
-    * fingerprint are skipped — the reference's cache-hit short-circuit
-    * (llm.go:61-68) at partition granularity. */
+    * fingerprint, and whose part files hold the manifest's `output_rows`,
+    * are skipped — the reference's cache-hit short-circuit (llm.go:61-68) at
+    * partition granularity. */
   def runBucketed(
       spark: SparkSession,
       stage: String,
@@ -451,8 +463,11 @@ object TableIO {
         Future {
           val mPath = manifestDir.resolve(f"bucket-$b%04d.json")
           val fp = bucketFingerprint(inputDir, b)
+          // its part files must still hold the rows it recorded (footers, no job)
+          val dataDir = base.resolve("data").resolve(s"bucket=$b")
           val done = readPartitionMeta(mPath).exists(m =>
-            m.status == "committed" && m.fingerprint == fp)
+            m.status == "committed" && m.fingerprint == fp && Files.isDirectory(dataDir) &&
+              parquetRowCount(dataDir.toString) == m.output_rows)
           if (!done) {
             // X5: retry with backoff per bucket — the reference's
             // RetryWithBackoff (kg-builder/internal/errors/errors.go:127-151)
@@ -472,7 +487,6 @@ object TableIO {
                 val tmp = base.resolve(f"tmp-$b%04d")
                 out.write.mode("overwrite").parquet(tmp.toString)
                 val outRows = parquetRowCount(tmp.toString)
-                val dataDir = base.resolve("data").resolve(s"bucket=$b")
                 if (Files.exists(dataDir))
                   Files.walk(dataDir).sorted(java.util.Comparator.reverseOrder())
                     .forEach(p => Files.delete(p))

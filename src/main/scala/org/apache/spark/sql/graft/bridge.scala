@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
@@ -10,7 +13,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge for custom Catalyst expressions,
-  * `StructType.asNullable`, and a parquet read of a given file list.
+  * `StructType.asNullable`, a parquet read of a given file list and a
+  * parquet write of rows held on the driver.
   * `ExpressionUtils` is `private[sql]` in Spark 4, so this lives in the
   * spark.sql package tree — the standard extension-library pattern. */
 object Bridge {
@@ -43,5 +47,23 @@ object Bridge {
       cache, Some(PartitionSpec.emptySpec))
     classic.Dataset.ofRows(session, LogicalRelation(HadoopFsRelation(index,
       new StructType(), schema, None, new ParquetFileFormat, Map.empty)(session)))
+  }
+
+  /** Writes `rows` into directory `dir` as one parquet file on the calling
+    * thread, with the writer (and settings) a `DataFrame.write.parquet` task
+    * uses, so the file equals a one-partition write's; returns its name. */
+  def writeParquet(spark: SparkSession, schema: StructType, rows: Seq[Row],
+      dir: String): String = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
+    val name = s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(ctx)}"
+    val writer = factory.newInstance(new Path(dir, name).toString, schema, ctx)
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+    name
   }
 }

@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
 /** `KgSession` keeps one checkpointed frame per table snapshot. These tests
   * check that every writer's commit is seen on the next read, that a frame
   * taken earlier keeps its snapshot, that reads of an unchanged snapshot
-  * and `addEdge` run no schema or re-read jobs, that a delta is folded into
+  * run no schema or re-read jobs and `addEdge` runs none, that a delta is folded into
   * the pin rather than re-read, and that a fold over missing or broken
   * files fails. */
 class KgSessionPinSpec extends SparkSuite {
@@ -70,7 +70,7 @@ class KgSessionPinSpec extends SparkSuite {
     assert(taken.map(_._3).distinct.size > 4, "the writes changed what was read")
   }
 
-  test("an unchanged snapshot is read once: idOf, search and addEdge run one job each") {
+  test("an unchanged snapshot is read once: idOf and search run one job each, addEdge none") {
     val c = GraphFixture.commit(spark, tmpDir("kgjobs"))
     val kg = KgSession.open(spark, c.workDir)
     kg.nodes
@@ -78,7 +78,7 @@ class KgSessionPinSpec extends SparkSuite {
     assert(jobsOf(kg.search("Learning")) == 1)
     assert(kg.search("Learning") == Seq("Deep Learning", "Machine Learning", "Reinforcement Learning"))
     val Seq(a, b) = Seq("Deep Learning", "Gradient Descent").map(n => kg.idOf(n).get)
-    assert(jobsOf(kg.addEdge(a, b, "Manually Linked")) == 1, "addEdge: the write only")
+    assert(jobsOf(kg.addEdge(a, b, "Manually Linked")) == 0, "addEdge: a driver-side write")
     val first = jobsOf(kg.statistics())
     val second = jobsOf(kg.statistics())
     assert(second < first, s"second statistics() ran $second jobs, the first $first")
@@ -107,6 +107,23 @@ class KgSessionPinSpec extends SparkSuite {
     val (stats, statJobs) = withJobCount(kg.statistics())
     assert(stats == (5L, 8L))
     assert(statJobs <= 2, s"statistics() after a tick ran $statJobs jobs")
+  }
+
+  test("KgSession.addEdge runs no Spark job: fresh session, new and repeated keys, a long chain") {
+    val c = GraphFixture.commit(spark, tmpDir("kgadd0"))
+    val edgesDir = Pipeline.edgesDir(c)
+    val ids = KgSession.open(spark, c.workDir).nodes.select("node_id").as[Long].collect().sorted
+    val kg = KgSession.open(spark, c.workDir) // nothing pinned
+    val adds = (0 until 40).map(i => (ids(i % ids.length), ids((i + 1) % ids.length), s"Rel ${i % 3}"))
+    adds.zipWithIndex.foreach { case ((a, b, p), i) =>
+      assert(jobsOf(kg.addEdge(a, b, p)) == 0, s"addEdge $i ran a Spark job")
+    }
+    assert(TableIO.snapshotChain(edgesDir, TableIO.requireCurrentId(edgesDir)).size == 41)
+    val want = adds.groupBy(k => k).map { case (k, v) => k -> v.size.toLong }
+    val got = kg.edges.filter(col("pred").startsWith("Rel "))
+      .select("src_id", "dst_id", "pred", "n_obs").as[(Long, Long, String, Long)].collect()
+      .map(t => (t._1, t._2, t._3) -> t._4).toMap
+    assert(got == want)
   }
 
   test("a fold whose delta file is gone or broken throws; it does not wait") {

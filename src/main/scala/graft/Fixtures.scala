@@ -75,7 +75,8 @@ object Fixtures {
     // v16: the default corpus comes from the built-in vocabulary instead of
     // the reference export — different names, triples and docs
     // v17: snapshot reads need each part file's byte length in the manifest
-    val ready = Paths.get(r, s"_READY_v17_jdk$jdkTag")
+    // v18: delta commits and folds need each manifest's chain_len
+    val ready = Paths.get(r, s"_READY_v18_jdk$jdkTag")
     if (Files.exists(ready)) return r
     import spark.implicits._
 

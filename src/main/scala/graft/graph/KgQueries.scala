@@ -279,9 +279,10 @@ object KgQueries {
     * the write volume is the ONE new row ([[graft.tables.TableIO.commitDelta]]),
     * never a table rewrite; MERGE semantics are applied at read time by
     * [[mergedEdges]]. The row's plan is a local relation, so its collect and
-    * the driver-side write of the delta run no Spark job. */
+    * the driver-side write of the delta run no Spark job. Returns the
+    * committed snapshot's id. */
   def addEdgeDelta(spark: SparkSession, tableDir: String,
-      srcId: Long, dstId: Long, pred: String): Unit = {
+      srcId: Long, dstId: Long, pred: String): Int = {
     val provType = graft.tables.TableIO.currentSchema(tableDir)("provenance").dataType
     graft.tables.TableIO.commitDelta(
       edgeRow(spark, provType, srcId, dstId, pred), tableDir, "add_edge")

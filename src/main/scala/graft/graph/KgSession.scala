@@ -4,6 +4,7 @@ import graft.run.Pipeline
 import graft.tables.TableIO
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The single user-facing handle over a materialized knowledge graph — what
   * a kay-gee-go user gets from the frontend API + ops scripts, as a library:
@@ -21,30 +22,30 @@ import org.apache.spark.sql.functions._
   * directly — is seen on the next read, with no invalidation step. A frame
   * taken before a commit keeps showing its own snapshot.
   *
-  * A new snapshot is folded into the pin, not re-read: when CURRENT's
-  * [[TableIO.snapshotChain]] still contains the pinned id, the new pin is
-  * `view(pinned ∪ the deltas newer than it)`. Otherwise (the first read, a
+  * A new snapshot is folded into the pin, not re-read: when the chain
+  * walked back from CURRENT reaches the pinned id, the new pin is
+  * `view(pinned ∪ the deltas newer than it)`; otherwise (the first read, a
   * compaction, a new full snapshot) the whole chain is read. The fold is
   * exact whenever `view(chain) == view(view(prefix) ∪ rest)`: identity
   * meets it, and so does [[KgQueries.mergedEdges]], whose every aggregate
-  * is associative and idempotent — `n_obs` is a sum, `strength` a max,
-  * `description`, `created_at` and `pred_norm` are mins, and `provenance`
-  * keeps the K smallest, which are also the K smallest of (the K smallest
-  * of A) ∪ B.
+  * is associative and idempotent. Every read takes its files from the
+  * manifests ([[TableIO.readSnapshots]]), so a part file that is gone fails
+  * it instead of reading as no rows, and observes the view's row count.
   *
-  * Every read takes its files from the snapshots' manifests
-  * ([[TableIO.readSnapshots]]), so a part file that is gone fails the pin
-  * instead of reading as no rows. The pin's own job also gathers, with
-  * `Dataset.observe`, the view's row count (so [[statistics]] runs no job).
-  *
-  * Once the degree frame or the enricher asks, a fold of ≤ `CarryCap` delta
-  * rows also observes their distinct (src_id, dst_id, pred) keys. With
-  * n_new = n' − n from the observed counts, the delta added none of them
-  * when n_new = 0 and all when n_new is their count (as every enricher tick
-  * does); any other delta, or over `CarryCap` keys, drops the carry. A key
-  * is tagged with the snapshot that added it, so the degree frame and the
-  * enricher, pinned at an earlier edges snapshot, get the keys added since
-  * ([[edgeEndsSince]]). */
+  * Kept on write: the edges count and, once the degree frame or the
+  * enricher asks, the (src_id, dst_id, pred) keys added since, each tagged
+  * with the snapshot that added it ([[edgeEndsSince]]). The session knows
+  * what two of its own commits add: a tick's keys, when it lands on the
+  * snapshot its pairs were picked at ([[commitPicks]]), and nothing, for an
+  * [[addEdge]] of a carried key. Reading the count or the keys
+  * ([[statistics]], the degree frame, [[edgeEndsSince]]) over known
+  * snapshots runs no job and leaves them pending. Merged on read: [[edges]],
+  * [[graphSnapshot]], [[reachableFrom]] and a re-pin first merge the pending
+  * files in one job, which checks the count kept. Any other snapshot is
+  * folded with the pending ones in one job that observes its keys: with
+  * n_new = n' − n (n the count kept), it added none when n_new = 0 and all
+  * its keys not carried yet when n_new is their number; otherwise, or past
+  * `CarryCap` rows or keys, the carry is dropped. */
 final class KgSession(val spark: SparkSession, val workDir: String) {
   import KgSession._
 
@@ -53,15 +54,18 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   /** Edges table directory (snapshot commits, e.g. the enricher's). */
   def edgesDir: String = Pipeline.edgesDir(conf)
 
-  /** One table's pinned snapshot: its id, its view localCheckpointed, the
-    * view's row count and partition count, and the keys its folds carry. */
+  /** One table's pinned snapshot `id`: its row count, the keys its folds
+    * carry and, with `parts` partitions, its view localCheckpointed but for
+    * the `pending` snapshots, applied to `rows` and `carry` only. */
   private final case class Pin(id: Int, df: DataFrame, rows: Long, parts: Int,
-      carry: Option[Carry] = None)
+      carry: Option[Carry] = None, pending: Seq[TableIO.Snap] = Nil)
 
   private val pins = scala.collection.mutable.Map.empty[String, Pin]
 
-  /** (nodes id, edges id, checkpointed degree frame) of the last degree
-    * computed. */
+  /** What this session's edges commits add, by snapshot id, until the pin passes them. */
+  private val known = scala.collection.mutable.Map.empty[Int, Known]
+
+  /** (nodes id, edges id, checkpointed degree frame) of the last degree computed. */
   private var degreePin: Option[(Int, Int, DataFrame)] = None
 
   /** `view` over the current snapshot of `dir`, folded from the previous
@@ -72,45 +76,61 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     pins.get(dir) match {
       case Some(p) if p.id == id => p
       case prev =>
-        val chain = TableIO.snapshotChain(dir, id)
-        val pin = prev.filter(p => chain.contains(p.id)) match {
-          case Some(p) => fold(dir, p, chain.takeWhile(_ != p.id), view)
-          case None => checkpointed(dir, chain, None, view, keyed = false)._1
+        val newer = TableIO.chainUntil(dir, id, prev.fold(-1)(_.id))
+        val pin = prev.filter(_.id == newer.last.deltaOf) match {
+          case Some(p) => fold(dir, p, newer, view)
+          case None => checkpointed(dir, id, None, newer, Nil, view)._1
         }
         pins(dir) = pin
+        if (dir == edgesDir) known.filterInPlace((n, _) => n > id)
         pin
     }
   }
 
-  /** The pin `p` with the snapshots `newer` folded in; carries the keys the
-    * fold adds when the observed counts allow. */
-  private def fold(dir: String, p: Pin, newer: Seq[Int],
-      view: DataFrame => DataFrame): Pin = {
-    val keyed = p.carry.isDefined && TableIO.snapshotRows(dir, newer) <= CarryCap
-    val (pin, keys) = checkpointed(dir, newer, Some(p), view, keyed)
-    val added = pin.rows - p.rows
-    val carry = p.carry.flatMap { c =>
+  /** The pin `p` advanced over the snapshots `newer`: the known ones are
+    * applied to the count and the carry and, unless all are and no `merge`
+    * is asked, every snapshot not merged is merged in one job that throws if
+    * the merged count is below the count kept, or off it with all known. */
+  private def fold(dir: String, p: Pin, newer: Seq[TableIO.Snap],
+      view: DataFrame => DataFrame, merge: Boolean = false): Pin = {
+    val adds = newer.map(s => s -> known.get(s.id).filter(k =>
+      dir == edgesDir && k.parent.forall(_ == s.deltaOf)).map(_.keys.map(_ -> s.id)))
+    val rows = p.rows + adds.flatMap(_._2).map(_.size).sum
+    val carry = p.carry.map(c => c.copy(keys = adds.flatMap(_._2).flatten.toMap ++ c.keys))
+    val unknown = adds.collect { case (s, None) => s }
+    val id = newer.headOption.fold(p.id)(_.id)
+    if (unknown.isEmpty && !merge) return p.copy(id = id, rows = rows,
+      carry = carry.filter(_.keys.size <= CarryCap), pending = newer ++ p.pending)
+    val keyed = carry.isDefined && unknown.map(_.rows).sum <= CarryCap
+    val (pin, keys) = checkpointed(dir, id, Some(p), (if (keyed) newer.filterNot(unknown.contains)
+      else newer) ++ p.pending, if (keyed) unknown else Nil, view)
+    val added = pin.rows - rows
+    if (added < 0 || added > 0 && unknown.isEmpty) throw new IllegalStateException(
+      s"$dir: snap-$id merged to ${pin.rows} rows; this session's commits counted $rows")
+    pin.copy(carry = carry.flatMap { c =>
       if (added == 0) Some(c)
-      else keys.filter(_.size == added).map(ks => c.copy(keys = c.keys ++ ks.map(_ -> pin.id)))
-    }.filter(_.keys.size <= CarryCap)
-    pin.copy(carry = carry)
+      else keys.map(_.filterNot(c.keys.contains)).filter(_.size == added)
+        .map(ks => c.copy(keys = c.keys ++ ks.map(_ -> id)))
+    }.filter(_.keys.size <= CarryCap))
   }
 
-  /** The pin of `view(base ∪ snapshots ids)`, localCheckpointed in one job
-    * that also observes the view's rows and, when `keyed`, the distinct
-    * (src_id, dst_id, pred) keys read. The union keeps the base's partition
-    * count: a base that fits one partition (as the adaptive shuffle sized
-    * it) is merged in the read's own stage, with no shuffle. */
-  private def checkpointed(dir: String, ids: Seq[Int], base: Option[Pin],
-      view: DataFrame => DataFrame, keyed: Boolean): (Pin, Option[Seq[Row]]) = {
+  /** The pin `id` of `view(base ∪ snaps ∪ keyed)`, localCheckpointed in one
+    * job that also observes the view's rows and the distinct (src_id, dst_id,
+    * pred) keys of `keyed`. The union keeps the base's partition count: a
+    * base that fits one partition is merged in the read's stage, unshuffled. */
+  private def checkpointed(dir: String, id: Int, base: Option[Pin], snaps: Seq[TableIO.Snap],
+      keyed: Seq[TableIO.Snap], view: DataFrame => DataFrame): (Pin, Option[Seq[Row]]) = {
     val (read, out) = (Observation(), Observation())
-    val in = TableIO.readSnapshots(spark, dir, ids).transform(r => if (!keyed) r
-      else r.observe(read, collect_set(struct("src_id", "dst_id", "pred")).as("keys")))
+    val in = (Option.when(snaps.nonEmpty)(TableIO.readSnaps(spark, dir, snaps)) ++
+      Option.when(keyed.nonEmpty)(TableIO.readSnaps(spark, dir, keyed)
+        .observe(read, collect_set(struct("src_id", "dst_id", "pred")).as("keys"))))
+      .reduce(_ unionByName _)
     val df = view(base.fold(in)(b => b.df.unionByName(in).coalesce(math.max(1, b.parts))))
       .observe(out, count(lit(1)).as("rows")).localCheckpoint()
-    val pin = Pin(ids.head, df, observed(out).getAs[Long]("rows"),
+    val pin = Pin(id, df, observed(out).getAs[Long]("rows"),
       df.queryExecution.toRdd.getNumPartitions)
-    (pin, Option.when(keyed)(observed(read).getAs[scala.collection.Seq[Row]]("keys").toSeq))
+    (pin, Option.when(keyed.nonEmpty)(
+      observed(read).getAs[scala.collection.Seq[Row]]("keys").toSeq))
   }
 
   private def nodesPin: Pin = pinned(Pipeline.nodesDir(conf))(identity)
@@ -120,25 +140,44 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     * chain verbatim. Identity on an already-merged table. */
   private def edgesPin: Pin = pinned(edgesDir)(KgQueries.mergedEdges)
 
+  /** [[edgesPin]] with its pending snapshots merged. */
+  private def edgesMerged: Pin = synchronized {
+    val p = edgesPin
+    if (p.pending.nonEmpty) pins(edgesDir) = fold(edgesDir, p, Nil, KgQueries.mergedEdges, merge = true)
+    pins(edgesDir)
+  }
+
   def nodes: DataFrame = nodesPin.df
 
   /** Current edges, one row per (src_id, dst_id, pred) key. */
-  def edges: DataFrame = edgesPin.df
+  def edges: DataFrame = edgesMerged.df
 
   def triples: DataFrame = pinned(Pipeline.triplesDir(conf))(identity).df
 
   /** The current edges and their snapshot id; from here on the edges pin
     * carries the keys its folds add, for [[edgeEndsSince]]. */
   private[graft] def carriedEdges: (Int, DataFrame) = synchronized {
-    val e = edgesPin
+    val e = edgesMerged
     if (e.carry.isEmpty) pins(edgesDir) = e.copy(carry = Some(Carry(e.id, Map.empty)))
     (e.id, e.df)
   }
 
-  /** The non-null endpoints of each key the current edges hold beyond edges
-    * snapshot `id`, or None when the pin has not carried them all. */
-  private[graft] def edgeEndsSince(id: Int): Option[Seq[Seq[Long]]] = synchronized {
-    edgesPin.carry.filter(_.base <= id).map(_.since(id))
+  /** The current edges snapshot id and the non-null endpoints of each key
+    * its edges hold beyond edges snapshot `id`, or None when the pin has not
+    * carried them all. */
+  private[graft] def edgeEndsSince(id: Int): Option[(Int, Seq[Seq[Long]])] = synchronized {
+    val e = edgesPin
+    e.carry.filter(_.base <= id).map(c => (e.id, c.since(id)))
+  }
+
+  /** Commits the enricher's picks `rows` of `schema`, pairs not adjacent at
+    * edges snapshot `at`, as an edges delta ([[TableIO.commitDeltaRows]]);
+    * their keys are known to be new if it lands directly on `at`. */
+  private[graft] def commitPicks(at: Int, schema: StructType, rows: Seq[Row],
+      maxChain: Int): Unit = synchronized {
+    val keys = rows.map(r => Row.fromSeq(Seq("src_id", "dst_id", "pred").map(r.getAs[Any])))
+    known(TableIO.commitDeltaRows(spark, schema, edgesDir, "edges", maxChain)(rows)) =
+      Known(Some(at), keys.distinct)
   }
 
   /** (node_id, name, degree) of the current snapshots: the pinned degree
@@ -148,7 +187,7 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     val n = nodesPin
     val carried = for {
       (nodesId, edgesId, d) <- degreePin if nodesId == n.id
-      keys <- edgeEndsSince(edgesId)
+      (_, keys) <- edgeEndsSince(edgesId)
     } yield if (keys.isEmpty) d else d.withColumn("degree", col("degree") + coalesce(
       element_at(typedLit(keys.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)),
         col("node_id")), lit(0L)))
@@ -177,8 +216,11 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   // --------------------------------------------------------- mutation side
   /** S13 manual edge creation: an O(1)-row DELTA commit (never a table
     * rewrite); MERGE semantics surface through the [[edges]] read view. */
-  def addEdge(srcId: Long, dstId: Long, pred: String): Unit =
-    KgQueries.addEdgeDelta(spark, edgesDir, srcId, dstId, pred)
+  def addEdge(srcId: Long, dstId: Long, pred: String): Unit = synchronized {
+    val carried = pins.get(edgesDir).flatMap(_.carry).exists(_.keys.contains(Row(srcId, dstId, pred)))
+    val id = KgQueries.addEdgeDelta(spark, edgesDir, srcId, dstId, pred)
+    if (carried) known(id) = Known(None, Nil)
+  }
 
   /** Node id lookup by exact name (the frontend's id-addressed API needs it). */
   def idOf(name: String): Option[Long] =
@@ -203,6 +245,9 @@ object KgSession {
       case (k, n) if n > id => Seq(0, 1).filterNot(k.isNullAt).map(k.getLong)
     }.toSeq
   }
+
+  /** The keys a commit adds to the merged edges if its parent is `parent` (or any, for None). */
+  private final case class Known(parent: Option[Int], keys: Seq[Row])
 
   /** An observation's metrics. They arrive on the listener bus just after
     * the job; the bound only keeps a lost event from hanging the caller. */

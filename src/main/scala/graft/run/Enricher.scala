@@ -12,18 +12,21 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   * 210-235), over the deterministic co-occurrence miner instead of an LLM.
   *
   * Each tick appends at most `batch` new non-adjacent CoOccursWith edges as
-  * an edges-table DELTA snapshot ([[TableIO.commitDelta]]) — per-tick write
-  * volume is O(batch), independent of the edges-table size, with periodic
-  * compaction handled by the table layer. Ticks see the PREVIOUS tick's
-  * edges, so the anti-join naturally walks down the candidate ranking. The runner
-  * stops itself when `maxRelationships` edges have been added or the candidate
+  * an edges-table DELTA snapshot, committed through the session
+  * ([[KgSession.commitPicks]]) — per-tick write volume is O(batch),
+  * independent of the edges-table size, with periodic compaction handled
+  * by the table layer. Ticks see the PREVIOUS tick's edges, so the
+  * anti-join naturally walks down the candidate ranking. The runner stops
+  * itself when `maxRelationships` edges have been added or the candidate
   * pool is drained (a tick adds nothing).
   *
   * The [[KgQueries.unlinked]] co-occurrence pairs are pinned per (nodes,
   * edges) snapshot. As `anti(P, E ∪ D) = anti(anti(P, E), D)`, a tick drops
-  * from the pin, as a literal set, the pairs of the keys folded in since
+  * from the pin, as a literal set, the pairs of the keys added since
   * ([[KgSession.edgeEndsSince]]) and collects its ≤ `batch` picks in one
-  * job; the pin is taken again when those keys are not all carried.
+  * job; the pin is taken again when those keys are not all carried. The
+  * tick reads no edge rows, and the session counts its picks as new keys
+  * when its delta lands on the edges snapshot they were picked at.
   */
 final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Conf) {
 
@@ -42,19 +45,19 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
     * until a nodes commit. */
   private var unlinkedPin: Option[(DataFrame, Int, DataFrame)] = None
 
-  /** The pairs not linked in the current edges: the pin less the
-    * (least, greatest) pairs of the keys folded in since, or a new pin. */
-  private def remaining(nodes: DataFrame): DataFrame = {
+  /** The current edges id and the pairs not linked in its edges: the pin less
+    * the (least, greatest) pairs of the keys added since, or a new pin. */
+  private def remaining(nodes: DataFrame): (Int, DataFrame) = {
     val carried = for {
       (n, edgesId, pairs) <- unlinkedPin if n eq nodes
-      ends <- kg.edgeEndsSince(edgesId)
-    } yield pairs.filter(!struct(col("k1"), col("k2")).isin(ends.filter(_.nonEmpty).distinct
+      (at, ends) <- kg.edgeEndsSince(edgesId)
+    } yield at -> pairs.filter(!struct(col("k1"), col("k2")).isin(ends.filter(_.nonEmpty).distinct
       .map(e => struct(lit(e.min).as("k1"), lit(e.max).as("k2"))): _*))
     carried.getOrElse {
       val (edgesId, edges) = kg.carriedEdges
       val pairs = KgQueries.unlinked(KgQueries.coPairs(nodes, coTable), edges).localCheckpoint()
       unlinkedPin = Some((nodes, edgesId, pairs))
-      pairs
+      edgesId -> pairs
     }
   }
 
@@ -67,30 +70,31 @@ final class Enricher(kg: KgSession, mentionsCanon: DataFrame, conf: Enricher.Con
     * unlinked pairs' pin are current. */
   def runOnce(): Long = synchronized {
     val left = conf.maxRelationships - addedCount.get()
-    if (left <= 0) return 0L
-    val pairs = remaining(kg.nodes)
-    // G5 reseeding analog: focus this tick's mining on the currently
-    // worst-connected nodes (re-ranked per tick, as the reference reseeds,
-    // over the session's pinned degree)
-    val focus =
-      if (conf.focusBottomK > 0)
-        Some(kg.lowConnectivity(conf.focusBottomK).select("node_id"))
-      else None
-    val picks = KgQueries.pickNew(pairs, math.min(conf.batch.toLong, left).toInt, focus)
+    if (left <= 0) 0L else commit(picks(math.min(conf.batch.toLong, left).toInt))
+  }
+
+  /** The current edges snapshot id and the top `n` pairs not linked at it. */
+  private[graft] def picks(n: Int): (Int, DataFrame) = {
+    val (at, pairs) = remaining(kg.nodes)
+    // G5 reseeding analog: focus this tick's mining on the currently worst-
+    // connected nodes, re-ranked per tick over the session's pinned degree
+    val focus = Option.when(conf.focusBottomK > 0)(
+      kg.lowConnectivity(conf.focusBottomK).select("node_id"))
+    at -> KgQueries.pickNew(pairs, n, focus)
       .select(col("src_id"), col("dst_id"), col("pred"), col("pred_norm"),
         col("strength"), col("n_docs").as("n_obs"), col("description"),
-        array().cast(kg.edges.schema("provenance").dataType).as("provenance"),
+        array().cast(TableIO.currentSchema(kg.edgesDir)("provenance").dataType).as("provenance"),
         Materialize.CreatedAt.as("created_at"))
-    val rows = picks.collect().toSeq
+  }
+
+  /** Collects `picks` and commits them; returns how many there were. */
+  private[graft] def commit(picks: (Int, DataFrame)): Long = {
+    val (at, df) = picks
+    val rows = df.collect().toSeq
     if (rows.nonEmpty) {
-      // delta-append: each tick writes O(batch) rows, not O(edges) — the
-      // reader unions the delta chain; TableIO compacts when it grows long
-      TableIO.commitDeltaRows(picks.sparkSession, picks.schema, kg.edgesDir, "edges",
-        conf.maxChain)(rows)
-      // snapshot GC: without it a long-running ticker accretes one snap
-      // dir per tick forever (compaction repoints but never deletes);
-      // vacuum from the single appender is the safe place (see
-      // TableIO.vacuum's reader caveat)
+      kg.commitPicks(at, df.schema, rows, conf.maxChain)
+      // snapshot GC: without it a long-running ticker accretes one snap dir
+      // per tick forever; the single appender is the safe place to vacuum
       if (conf.vacuumRetain > 0)
         TableIO.vacuum(kg.edgesDir, conf.vacuumRetain, conf.vacuumGraceMs)
       addedCount.addAndGet(rows.length)

@@ -73,12 +73,10 @@ object TableIO {
     * persist only their own addition — last id wins. The same applies to
     * [[commitDelta]]: delta chains assume a SINGLE appender (the enricher
     * ticker); two concurrent delta writers would chain onto the same
-    * parent and the lower id would drop out of the read chain. */
-  def commitSnapshot(df: DataFrame, dir: String, stage: String): Unit = {
-    val base = Paths.get(dir)
-    val n = writeSnap(df, base, stage, deltaOf = -1)
-    repointCurrent(base, n)
-  }
+    * parent and the lower id would drop out of the read chain. Returns the
+    * snapshot's id. */
+  def commitSnapshot(df: DataFrame, dir: String, stage: String): Int =
+    repointCurrent(Paths.get(dir), writeSnap(df, Paths.get(dir), stage))
 
   /** Commit `newRows` as a DELTA snapshot chained onto the current one: the
     * write volume is O(newRows), independent of the table size — the
@@ -97,15 +95,19 @@ object TableIO {
     * id from the read chain), and a cross-process appender is detected at
     * repoint time — CURRENT having moved since the chain head was read
     * fails the commit loudly instead of silently dropping the other
-    * writer's rows. `newRows` is collected after the chain head is read. */
+    * writer's rows. `newRows` is collected after the chain head is read.
+    * Returns the committed snapshot's id, as [[commitDeltaRows]]. */
   def commitDelta(newRows: DataFrame, dir: String, stage: String,
-      maxChain: Int = 64): Unit =
+      maxChain: Int = 64): Int =
     commitDeltaRows(newRows.sparkSession, newRows.schema, dir, stage, maxChain)(
       newRows.collect().toSeq)
 
-  /** [[commitDelta]] of `rows` of `schema`, evaluated once after the chain head is read. */
+  /** [[commitDelta]] of `rows` of `schema`, evaluated once after the chain
+    * head is read. Returns the id of the snapshot committed: a delta whose
+    * parent is the head read under the append lock, or, when the chain had
+    * reached `maxChain` or the table had no snapshot, a full snapshot. */
   def commitDeltaRows(spark: SparkSession, schema: StructType, dir: String, stage: String,
-      maxChain: Int = 64)(rows: => Seq[Row]): Unit = {
+      maxChain: Int = 64)(rows: => Seq[Row]): Int = {
     val lock = appendLocks.computeIfAbsent(
       Paths.get(dir).toAbsolutePath.toString, _ => new Object)
     lock.synchronized {
@@ -117,22 +119,21 @@ object TableIO {
           // nulls or read errors in the chain's union): name→type equality,
           // order- and nullability-insensitive; the rows are reordered to
           // the snapshot's columns so the chain's files stay aligned.
-          val curSchema = manifest(dir, cur).schema
-          val curSig = curSchema.fields.map(f => f.name -> f.dataType.sql).toMap
+          val head = snap(dir, cur)
+          val curSig = head.schema.fields.map(f => f.name -> f.dataType.sql).toMap
           val newSig = schema.fields.map(f => f.name -> f.dataType.sql).toMap
           require(curSig == newSig,
             s"commitDelta($dir): delta schema does not match the current snapshot\n" +
-              s"  table: ${curSchema.simpleString}\n  delta: ${schema.simpleString}")
-          val order = curSchema.fieldNames.map(schema.fieldIndex)
+              s"  table: ${head.schema.simpleString}\n  delta: ${schema.simpleString}")
+          val order = head.schema.fieldNames.map(schema.fieldIndex)
           val aligned = StructType(order.map(schema(_)))
-          val chain = snapshotChain(dir, cur)
           val rs = rows.map(r => Row.fromSeq(order.toSeq.map(r.get)))
           val n =
             // compaction: the chain, read from its manifests' file lists (a
             // part file gone fails it before CURRENT moves), ∪ the rows
-            if (chain.length >= maxChain) writeSnap(readSnapshots(spark, dir, chain)
-              .unionByName(spark.createDataFrame(rs.asJava, aligned)), base, stage, deltaOf = -1)
-            else writeSnap(base, stage, cur, aligned) { snapDir =>
+            if (head.chainLen >= maxChain) writeSnap(readSnapshots(spark, dir, snapshotChain(dir, cur))
+              .unionByName(spark.createDataFrame(rs.asJava, aligned)), base, stage)
+            else writeSnap(base, stage, cur, head.chainLen + 1, aligned) { snapDir =>
               val name = Bridge.writeParquet(spark, aligned, rs, snapDir.toString)
               Seq(PartFile(name, rs.size.toLong, Files.size(snapDir.resolve(name))))
             }
@@ -146,9 +147,9 @@ object TableIO {
   private val appendLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Writes `df` with Spark as the next snapshot of `base`; returns its id. */
-  private def writeSnap(df: DataFrame, base: Path, stage: String, deltaOf: Int): Int =
-    writeSnap(base, stage, deltaOf, df.schema) { snapDir =>
+  /** Writes `df` with Spark as the next full snapshot of `base`; returns its id. */
+  private def writeSnap(df: DataFrame, base: Path, stage: String): Int =
+    writeSnap(base, stage, deltaOf = -1, chainLen = 1, df.schema) { snapDir =>
       // append into the freshly claimed EMPTY dir — overwrite would delete
       // the claim first, letting a concurrent committer re-claim the same id;
       // then row counts from the footers, byte lengths from a stat (no job)
@@ -157,8 +158,9 @@ object TableIO {
     }
 
   /** Claims the next snapshot id of `base`, has `write` fill its directory
-    * and return its part files, and writes their manifest; returns the id. */
-  private def writeSnap(base: Path, stage: String, deltaOf: Int, schema: StructType)(
+    * and return its part files, and writes their manifest; returns the id.
+    * `chainLen` is the length of the snapshot's chain, itself included. */
+  private def writeSnap(base: Path, stage: String, deltaOf: Int, chainLen: Int, schema: StructType)(
       write: Path => Seq[PartFile]): Int = {
     Files.createDirectories(base)
     var n = listSnapshots(base.toString).lastOption.fold(0)(_ + 1)
@@ -174,6 +176,7 @@ object TableIO {
     val node = mapper.createObjectNode()
     node.put("stage", stage); node.put("snapshot", n)
     node.put("delta_of", deltaOf) // -1 = full snapshot
+    node.put("chain_len", chainLen)
     node.put("total_rows", perFile.map(_.rows).sum)
     // the schema a parquet read of the snapshot infers (file sources read
     // every field as nullable), so readers skip the inference job
@@ -186,17 +189,18 @@ object TableIO {
     n
   }
 
-  /** Advance CURRENT to snapshot `n` unless it already points past it.
+  /** Advance CURRENT to snapshot `n` unless it already points past it; returns `n`.
     * The read-check-write is serialized in-process (one lock for all
     * tables — repointing is microseconds), making the monotonic guarantee
     * hold for concurrent committers within a JVM; cross-process writers
     * are out of scope (one driver per table dir). */
   private val repointLock = new Object
-  private def repointCurrent(base: Path, n: Int): Unit = repointLock.synchronized {
+  private def repointCurrent(base: Path, n: Int): Int = repointLock.synchronized {
     if (currentSnapshotId(base.toString).forall(_ < n)) {
       writeJsonAtomic(base.resolve("CURRENT"), f"snap-$n%05d")
       logRoot(base, n)
     }
+    n
   }
 
   /** Append a successfully-committed root id to the table's `_roots` log —
@@ -225,8 +229,8 @@ object TableIO {
   /** CAS repoint for delta commits: advance CURRENT `expected → n`, failing
     * LOUDLY if CURRENT moved since the chain head was read — that means a
     * second (cross-process) appender chained onto the same parent, and
-    * silently repointing would drop its rows from the read chain. */
-  private def repointCurrentFrom(base: Path, expected: Int, n: Int): Unit =
+    * silently repointing would drop its rows from the read chain. Returns `n`. */
+  private def repointCurrentFrom(base: Path, expected: Int, n: Int): Int =
     repointLock.synchronized {
       val cur = currentSnapshotId(base.toString)
       if (!cur.contains(expected) || n <= expected)
@@ -236,6 +240,7 @@ object TableIO {
             f"(concurrent appender?); snap-$n%05d left unreferenced")
       writeJsonAtomic(base.resolve("CURRENT"), f"snap-$n%05d")
       logRoot(base, n)
+      n
     }
 
   /** Hadoop conf for footer reads: built once, as parsing its default
@@ -275,16 +280,16 @@ object TableIO {
   def currentSnapshotId(dir: String): Option[Int] =
     currentSnapshot(dir).map(_.stripPrefix("snap-").toInt)
 
-  /** What snapshot `n`'s manifest records: its parent (-1 = a full
-    * snapshot), its rows, the schema a read of it returns and its part
-    * files with their byte lengths. */
-  private final case class Manifest(deltaOf: Int, rows: Long, schema: StructType,
-      files: Seq[(String, Long)])
+  /** What snapshot `id`'s manifest records: its parent (-1 = a full
+    * snapshot), its chain's length, its rows, the schema a read of it
+    * returns and its part files with their byte lengths. */
+  private[graft] final case class Snap(id: Int, deltaOf: Int, chainLen: Int, rows: Long,
+      schema: StructType, files: Seq[(String, Long)])
 
   /** Snapshot `n`'s manifest. A manifest without a field [[writeSnap]]
     * writes (one written before the field existed) fails, naming the
     * snapshot and the field: its table has to be rebuilt. */
-  private def manifest(dir: String, n: Int): Manifest = {
+  private[graft] def snap(dir: String, n: Int): Snap = {
     val snap = f"$dir/snap-$n%05d"
     val p = Paths.get(dir, "_manifest", f"snap-$n%05d.json")
     if (!Files.exists(p)) throw new IllegalStateException(s"$snap: no manifest at $p")
@@ -292,7 +297,7 @@ object TableIO {
     def field(j: JsonNode, path: String): JsonNode = Option(j.get(path.split('.').last))
       .getOrElse(throw new IllegalStateException(s"$snap: manifest $p has no field '$path'"))
     val m = mapper.readTree(p.toFile)
-    Manifest(field(m, "delta_of").asInt, field(m, "total_rows").asLong,
+    Snap(n, field(m, "delta_of").asInt, field(m, "chain_len").asInt, field(m, "total_rows").asLong,
       DataType.fromJson(field(m, "schema").toString).asInstanceOf[StructType],
       field(m, "partitions").properties.asScala.toSeq.map(e =>
         e.getKey -> field(e.getValue, s"partitions.${e.getKey}.bytes").asLong))
@@ -300,14 +305,20 @@ object TableIO {
 
   /** The schema a read of the current snapshot returns, from its manifest:
     * a small file read, no Spark job. */
-  def currentSchema(dir: String): StructType = manifest(dir, requireCurrentId(dir)).schema
+  def currentSchema(dir: String): StructType = snap(dir, requireCurrentId(dir)).schema
 
   /** Snapshot ids making up the state at snapshot `n`, newest first: `n`,
     * then the delta chain down to (and including) its base full snapshot. */
-  def snapshotChain(dir: String, n: Int): Seq[Int] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Int]
+  def snapshotChain(dir: String, n: Int): Seq[Int] = chainUntil(dir, n, -1).map(_.id)
+
+  /** The manifests of snapshot `n`'s chain, newest first, down to its base
+    * or to the snapshot just after `stop`, each parsed once. */
+  private[graft] def chainUntil(dir: String, n: Int, stop: Int): Seq[Snap] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Snap]
     var cur = n
-    while (cur >= 0 && !buf.contains(cur)) { buf += cur; cur = manifest(dir, cur).deltaOf }
+    while (cur >= 0 && cur != stop && !buf.exists(_.id == cur)) {
+      buf += snap(dir, cur); cur = buf.last.deltaOf
+    }
     buf.toSeq
   }
 
@@ -332,15 +343,13 @@ object TableIO {
     * read lists no directory and runs no job, and a part file that is gone
     * fails the read instead of reading as no rows. Every snapshot of a chain
     * has the same schema ([[commitDelta]] checks it); `ids.head`'s serves. */
-  def readSnapshots(spark: SparkSession, dir: String, ids: Seq[Int]): DataFrame = {
-    val ms = ids.map(manifest(dir, _))
-    Bridge.parquetFiles(spark, ms.head.schema,
-      ids.zip(ms).map { case (n, m) => Paths.get(dir, f"snap-$n%05d").toString -> m.files })
-  }
+  def readSnapshots(spark: SparkSession, dir: String, ids: Seq[Int]): DataFrame =
+    readSnaps(spark, dir, ids.map(snap(dir, _)))
 
-  /** The rows snapshots `ids` hold by their manifests (their own data, not
-    * their chains'). */
-  def snapshotRows(dir: String, ids: Seq[Int]): Long = ids.map(manifest(dir, _).rows).sum
+  /** [[readSnapshots]] of manifests already parsed. */
+  private[graft] def readSnaps(spark: SparkSession, dir: String, snaps: Seq[Snap]): DataFrame =
+    Bridge.parquetFiles(spark, snaps.head.schema,
+      snaps.map(s => Paths.get(dir, f"snap-${s.id}%05d").toString -> s.files))
 
   def listSnapshots(dir: String): Seq[Int] =
     if (!Files.exists(Paths.get(dir))) Seq.empty

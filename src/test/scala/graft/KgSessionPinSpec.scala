@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * check that every writer's commit is seen on the next read, that a frame
   * taken earlier keeps its snapshot, that reads of an unchanged snapshot
   * run no schema or re-read jobs and `addEdge` runs none, that a delta is folded into
-  * the pin rather than re-read, and that a fold over missing or broken
-  * files fails. */
+  * the pin rather than re-read, that the counts the session keeps on its
+  * own writes are read without a merge, and that a fold or a merge over
+  * missing or broken files fails. */
 class KgSessionPinSpec extends SparkSuite {
   import spark.implicits._
 
@@ -124,6 +125,47 @@ class KgSessionPinSpec extends SparkSuite {
       .select("src_id", "dst_id", "pred", "n_obs").as[(Long, Long, String, Long)].collect()
       .map(t => (t._1, t._2, t._3) -> t._4).toMap
     assert(got == want)
+  }
+
+  test("kept on write: counts after a tick and a carried re-add run no merge; the next rows read merges once") {
+    val c = GraphFixture.commit(spark, tmpDir("kgknown"))
+    val edgesDir = Pipeline.edgesDir(c)
+    val kg = KgSession.open(spark, c.workDir)
+    val names = GraphFixture.Names
+    val mentions = names.combinations(2).zipWithIndex.flatMap { case (Seq(a, b), d) =>
+      Seq((s"doc$d", a), (s"doc$d", b))
+    }.toSeq.toDF("doc_id", "canonical")
+    val enricher = new Enricher(kg, mentions, Enricher.Conf(minDocs = 1, batch = 1))
+    def merged = KgQueries.mergedEdges(TableIO.readCurrent(spark, edgesDir))
+    kg.mostConnected(5).collect() // pins the degree frame; the edges pin carries keys
+    assert(enricher.runOnce() == 1L)
+    val (stats, statJobs) = withJobCount(kg.statistics())
+    assert(statJobs == 0, s"statistics() right after a tick ran $statJobs jobs")
+    assert(stats == ((5L, merged.count())))
+
+    // re-add the key the tick added: known to add no key
+    val Row(a: Long, b: Long, p: String) = TableIO.readCurrent(spark, edgesDir)
+      .filter(col("pred") === "CoOccursWith").select("src_id", "dst_id", "pred").head()
+    assert(jobsOf(kg.addEdge(a, b, p)) == 0)
+    val (top, topJobs) = withJobCount(kg.mostConnected(5).collect().toSeq)
+    assert(topJobs == 1, s"mostConnected(5) after a carried re-add ran $topJobs jobs")
+    assert(top == KgQueries.mostConnected(kg.nodes, merged, 5).collect().toSeq)
+    assert(kg.statistics() == ((5L, merged.count())))
+    // the next read of rows merges the tick and the re-add in one job
+    val (edges, edgesJobs) = withJobCount(kg.edges)
+    assert(edgesJobs == 1, s"kg.edges after known writes ran $edgesJobs jobs")
+    assert(rows(edges) == rows(merged))
+    assert(edges.filter(col("src_id") === a && col("dst_id") === b && col("pred") === p)
+      .select("n_obs").head().getLong(0) == 2L)
+    assert(jobsOf(kg.edges) == 0)
+
+    // a known pending delta whose part file is gone fails the merge
+    assert(enricher.runOnce() == 1L)
+    assert(jobsOf(kg.statistics()) == 0)
+    val snap = Paths.get(edgesDir, f"snap-${TableIO.requireCurrentId(edgesDir)}%05d")
+    Files.list(snap).iterator().asScala.filter(_.toString.endsWith(".parquet")).foreach(Files.delete)
+    val read = Future(scala.util.Try(kg.edges))(ExecutionContext.global)
+    assert(Await.result(read, Duration(60, "s")).isFailure, "kg.edges with a pending delta's file gone")
   }
 
   test("a fold whose delta file is gone or broken throws; it does not wait") {

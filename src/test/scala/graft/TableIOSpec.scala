@@ -513,6 +513,7 @@ class TableIOSpec extends SparkSuite {
     }
     without(_.remove("schema"), "schema")
     without(_.remove("delta_of"), "delta_of")
+    without(_.remove("chain_len"), "chain_len")
     // the part files listed by row count only, as before their byte lengths
     val part = partFiles(dir, 2).head.getFileName.toString
     without(n => n.set[com.fasterxml.jackson.databind.JsonNode]("partitions",
@@ -568,6 +569,25 @@ class TableIOSpec extends SparkSuite {
     assert(TableIO.snapshotChain(dir, 39).size == 40)
     assert(jobsOf(TableIO.readSnapshot(spark, dir, 39)) == 0)
     assert(TableIO.readSnapshot(spark, dir, 39).count() == 40)
+  }
+
+  test("every manifest records its chain's length; a delta commit compacts at maxChain from it") {
+    val dir = tmpDir("chainLen")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def chainLen(n: Int) =
+      mapper.readTree(Paths.get(dir, "_manifest", f"snap-$n%05d.json").toFile).get("chain_len").asInt
+    TableIO.commitSnapshot(Seq((0L, "base")).toDF("id", "src"), dir, "t")
+    // maxChain 5: deltas 1-4 chain onto 0, 5 compacts, 6-9 chain onto 5, 10
+    // compacts; then a full commit and deltas onto it
+    val ids = (1 to 10).map(i => TableIO.commitDelta(Seq((i.toLong, "d")).toDF("id", "src"), dir, "t",
+      maxChain = 5))
+    assert(ids == (1 to 10))
+    TableIO.commitSnapshot(TableIO.readCurrent(spark, dir), dir, "t")
+    (12 to 13).foreach(i => TableIO.commitDelta(Seq((i.toLong, "d")).toDF("id", "src"), dir, "t"))
+    val lens = (0 to 13).map(n => n -> TableIO.snapshotChain(dir, n).size)
+    lens.foreach { case (n, len) => assert(chainLen(n) == len, s"snap $n") }
+    assert(lens.map(_._2) == Seq(1, 2, 3, 4, 5, 1, 2, 3, 4, 5, 1, 1, 2, 3))
+    assert(TableIO.readCurrent(spark, dir).count() == 13)
   }
 
   test("a part file gone from a committed snapshot fails every read and the compaction") {

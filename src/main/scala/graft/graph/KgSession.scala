@@ -35,10 +35,10 @@ import org.apache.spark.sql.types.StructType
   * Kept on write: the edges count and, once the degree frame or the
   * enricher asks, the (src_id, dst_id, pred) keys added since, each tagged
   * with the snapshot that added it ([[edgeEndsSince]]). The session knows
-  * what two of its own commits add: a tick's keys, when it lands on the
-  * snapshot its pairs were picked at ([[commitPicks]]), and nothing, for an
-  * [[addEdge]] of a carried key. Reading the count or the keys
-  * ([[statistics]], the degree frame, [[edgeEndsSince]]) over known
+  * what two of its own commits add, recorded after the commit (which holds
+  * no lock) unless a read folded it first: a tick's keys, when it lands on
+  * the snapshot its pairs were picked at ([[commitPicks]]), and nothing, for
+  * an [[addEdge]] of a carried key. Reading the count or the keys over known
   * snapshots runs no job and leaves them pending. Merged on read: [[edges]],
   * [[graphSnapshot]], [[reachableFrom]] and a re-pin first merge the pending
   * files in one job, which checks the count kept. Any other snapshot is
@@ -171,13 +171,13 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   }
 
   /** Commits the enricher's picks `rows` of `schema`, pairs not adjacent at
-    * edges snapshot `at`, as an edges delta ([[TableIO.commitDeltaRows]]);
-    * their keys are known to be new if it lands directly on `at`. */
+    * edges snapshot `at`, as an edges delta outside the lock; their keys are
+    * known to be new if it lands on `at` and no read has folded it yet. */
   private[graft] def commitPicks(at: Int, schema: StructType, rows: Seq[Row],
-      maxChain: Int): Unit = synchronized {
+      maxChain: Int): Unit = {
     val keys = rows.map(r => Row.fromSeq(Seq("src_id", "dst_id", "pred").map(r.getAs[Any])))
-    known(TableIO.commitDeltaRows(spark, schema, edgesDir, "edges", maxChain)(rows)) =
-      Known(Some(at), keys.distinct)
+    val id = TableIO.commitDeltaRows(spark, schema, edgesDir, "edges", maxChain)(rows)
+    synchronized { if (pins.get(edgesDir).exists(_.id < id)) known(id) = Known(Some(at), keys.distinct) }
   }
 
   /** (node_id, name, degree) of the current snapshots: the pinned degree
@@ -216,10 +216,10 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   // --------------------------------------------------------- mutation side
   /** S13 manual edge creation: an O(1)-row DELTA commit (never a table
     * rewrite); MERGE semantics surface through the [[edges]] read view. */
-  def addEdge(srcId: Long, dstId: Long, pred: String): Unit = synchronized {
-    val carried = pins.get(edgesDir).flatMap(_.carry).exists(_.keys.contains(Row(srcId, dstId, pred)))
+  def addEdge(srcId: Long, dstId: Long, pred: String): Unit = {
     val id = KgQueries.addEdgeDelta(spark, edgesDir, srcId, dstId, pred)
-    if (carried) known(id) = Known(None, Nil)
+    synchronized { if (pins.get(edgesDir).exists(p => p.id < id &&
+      p.carry.exists(_.keys.contains(Row(srcId, dstId, pred))))) known(id) = Known(None, Nil) }
   }
 
   /** Node id lookup by exact name (the frontend's id-addressed API needs it). */

@@ -159,6 +159,16 @@ class KgSessionPinSpec extends SparkSuite {
       .select("n_obs").head().getLong(0) == 2L)
     assert(jobsOf(kg.edges) == 0)
 
+    // the first add of a key is not known: the next count read folds it
+    // (1 job) before mostConnected collects; a re-add of it is known again
+    assert(jobsOf(kg.addEdge(a, b, "Rel new")) == 0)
+    val (firstTop, firstJobs) = withJobCount(kg.mostConnected(5).collect().toSeq)
+    assert(firstJobs == 2, s"mostConnected(5) after a first add ran $firstJobs jobs")
+    assert(firstTop == KgQueries.mostConnected(kg.nodes, merged, 5).collect().toSeq)
+    kg.addEdge(a, b, "Rel new")
+    assert(jobsOf(kg.mostConnected(5).collect()) == 1)
+    assert(kg.statistics() == ((5L, merged.count())))
+
     // a known pending delta whose part file is gone fails the merge
     assert(enricher.runOnce() == 1L)
     assert(jobsOf(kg.statistics()) == 0)

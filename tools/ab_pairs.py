@@ -2,11 +2,12 @@
 """Alternating A/B pairs of one benchmark workload in two checkouts.
 
     python3 tools/ab_pairs.py --parent ../parent --change . --workload kg_ops \\
-        --pairs 10 --seed0 21 [--seconds 12] [--trace 0] [--out pairs.jsonl]
+        --pairs 10 --seed0 21 [--trace 0] [--out pairs.jsonl]
 
 Pair i runs `python3 perfbench/run.py --workload W --seed s0+i --seconds S
---trace T` once in each checkout, the parent first in even pairs and the
-change first in odd ones, so neither side always runs on the warmer machine.
+--trace T` once in each checkout, S being the change's BENCHMARK.json
+`run_seconds`, the parent first in even pairs and the change first in odd
+ones, so neither side always runs on the warmer machine.
 Each checkout builds its own benchmark on its first run (perfbench/run.py
 does that), so build both before timing-sensitive work if that matters.
 
@@ -36,9 +37,11 @@ def run_once(checkout, workload, seed, seconds, trace, log):
     return json.loads(lines[-1])
 
 
-def directions(checkout, trace):
+def benchmark(checkout, trace):
+    """BENCHMARK.json's run length and, per metric, which way is better."""
     spec = json.loads((Path(checkout) / "BENCHMARK.json").read_text())
-    return {m["name"]: m["better"] for m in spec["per_layer" if trace else "end_to_end"]}
+    return spec["run_seconds"], {m["name"]: m["better"]
+                                 for m in spec["per_layer" if trace else "end_to_end"]}
 
 
 def quartiles(xs):
@@ -55,13 +58,12 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, required=True, help="seed of the first pair")
-    ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--out", help="append each run's result as a JSON line")
     ap.add_argument("--log", help="file for the runs' standard error (default: discarded)")
     a = ap.parse_args()
 
-    better = directions(a.change, a.trace)
+    seconds, better = benchmark(a.change, a.trace)
     sides = {"parent": a.parent, "change": a.change}
     results = {"parent": [], "change": []}
     bad = []
@@ -71,7 +73,7 @@ def main():
         seed = a.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_once(sides[side], a.workload, seed, a.seconds, a.trace, log)
+            res = run_once(sides[side], a.workload, seed, seconds, a.trace, log)
             results[side].append(res)
             if not res.get("correct") or res.get("failed", 0):
                 bad.append(f"{side} seed {seed}: correct={res.get('correct')} failed={res.get('failed')}")
@@ -84,7 +86,7 @@ def main():
             for k in sorted(better)), flush=True)
 
     print(f"\n{a.workload}, {a.pairs} pairs, seeds {a.seed0}-{a.seed0 + a.pairs - 1}, "
-          f"{a.seconds}s runs, trace {a.trace}; values are parent/change")
+          f"{seconds}s runs, trace {a.trace}; values are parent/change")
     print(f"{'metric':<36} {'parent':>10} {'change':>10} {'delta':>8}  "
           f"{'parent q1-q3 (IQR)':>28}  wins")
     for name in sorted(better):

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's read/ops API re-expressed as one-line DataFrame queries
   * (SURVEY.md §3.3): frontend handlers
@@ -43,19 +45,11 @@ object KgQueries {
 
   /** A3: low-connectivity top-k (ORDER BY connectivity ASC LIMIT k). */
   def lowConnectivity(nodes: DataFrame, edges: DataFrame, k: Int = 10): DataFrame =
-    lowConnectivityOf(degree(nodes, edges), k)
-
-  /** A3 over a [[degree]] frame. */
-  def lowConnectivityOf(degree: DataFrame, k: Int): DataFrame =
-    degree.orderBy(col("degree").asc, col("name").asc).limit(k)
+    degree(nodes, edges).orderBy(col("degree").asc, col("name").asc).limit(k)
 
   /** A4: most-connected top-k (stats dashboard top-5). */
   def mostConnected(nodes: DataFrame, edges: DataFrame, k: Int = 5): DataFrame =
-    mostConnectedOf(degree(nodes, edges), k)
-
-  /** A4 over a [[degree]] frame. */
-  def mostConnectedOf(degree: DataFrame, k: Int): DataFrame =
-    degree.orderBy(col("degree").desc, col("name").asc).limit(k)
+    degree(nodes, edges).orderBy(col("degree").desc, col("name").asc).limit(k)
 
   /** A6: relationship-type histogram. */
   def predHistogram(edges: DataFrame): DataFrame =
@@ -182,15 +176,19 @@ object KgQueries {
     * As there, the frontier and the visited ids are held in process memory,
     * here the driver's: they are bounded by the node table, which is
     * dictionary-sized, and by maxNodes (the reference's MAX_NODES cap).
-    * Spark scans the edges once per hop: one job for the seed, one per hop,
-    * one for the result.
+    * Collects the nodes' [[NodeDirectory]] in one job, and Spark scans the
+    * edges once per hop.
     * Follows out-edges, as the builder's expansion does.
     * Returns (node_id, name, hops), ordered by (hops, name). */
   def reachableFrom(nodes: DataFrame, edges: DataFrame, seedName: String,
-      maxHops: Int, maxNodes: Int = Int.MaxValue): DataFrame = {
-    val named = nodes.select(col("node_id"), col("name"))
+      maxHops: Int, maxNodes: Int = Int.MaxValue): DataFrame =
+    reachableFrom(NodeDirectory(nodes), edges, seedName, maxHops, maxNodes)
+
+  /** [[reachableFrom]] with the seed, each hop's winners and the rows from `dir`. */
+  def reachableFrom(dir: NodeDirectory, edges: DataFrame, seedName: String,
+      maxHops: Int, maxNodes: Int): DataFrame = {
     val visited = scala.collection.mutable.LinkedHashMap.empty[Long, Int]
-    named.filter(col("name") === seedName).collect().foreach(r => visited(r.getLong(0)) = 0)
+    dir.named(seedName).foreach(i => visited(dir.id(i)) = 0)
     var frontier = visited.keys.toSeq
     var hop = 0
     // the maxNodes budget binds INSIDE the loop, per hop — the reference
@@ -202,23 +200,23 @@ object KgQueries {
     // DISCOVERED ids (dangling ones included), i.e. it bounds frontier and
     // visited memory like the reference's id-holding frontier channel — so
     // under a binding cap on a referentially-drifted graph the NAMED output
-    // may hold fewer than maxNodes rows. (The q_bfs oracle compares the
-    // non-binding-cap configuration.)
+    // may hold fewer than maxNodes rows.
     while (hop < maxHops && visited.size < maxNodes && frontier.nonEmpty) {
       hop += 1
       val candidates = edges.filter(col("src_id").isin(frontier: _*)).select("dst_id")
         .collect().map(_.getLong(0)).distinct.filterNot(visited.contains).toSeq
       val budget = maxNodes - visited.size
       frontier = if (candidates.size <= budget) candidates else {
-        val byName = named.filter(col("node_id").isin(candidates: _*) && col("name").isNotNull)
-          .orderBy("name", "node_id").limit(budget).collect().map(_.getLong(0)).toSeq
-        byName ++ (candidates.toSet -- byName).toSeq.sorted.take(budget - byName.size)
+        val c = candidates.toSet
+        val byName = dir.byName.filter(i => c(dir.id(i)) && dir.name(i) != null)
+          .take(budget).map(dir.id)
+        byName ++ (c -- byName).toSeq.sorted.take(budget - byName.size)
       }
       frontier.foreach(visited(_) = hop)
     }
-    named.filter(col("node_id").isin(visited.keys.toSeq: _*))
-      .withColumn("hops", element_at(typedLit(visited.toMap), col("node_id")))
-      .orderBy(col("hops").asc, col("name").asc).limit(math.min(visited.size, maxNodes))
+    val rows = dir.byName.filter(i => visited.contains(dir.id(i))).sortBy(i => visited(dir.id(i)))
+    dir.frame(edges.sparkSession, rows.take(math.min(visited.size, maxNodes)),
+      StructField("hops", IntegerType))(i => visited(dir.id(i)))
   }
 
   /** Marker prefix on manually-added edge descriptions; [[mergedEdges]]
@@ -302,6 +300,46 @@ object KgQueries {
     val ls = edges.select(col("src_id").as("source"), col("dst_id").as("target"),
       col("pred_norm").as("type"))
     (ns, ls)
+  }
+}
+
+/** A nodes table's (node_id, name) rows on the driver in its row order, so
+  * that reads whose answer is a few node rows run no Spark query; as large
+  * as the node table, which is broadcast-sized (SCALE.md). Names are held
+  * and ordered as Spark holds them, in UTF-8, nulls first. Never mutated. */
+final class NodeDirectory private (val schema: StructType, ids: Array[Long],
+    names: Array[UTF8String]) {
+  def rows: Range = ids.indices
+  def id(i: Int): Long = ids(i)
+  def name(i: Int): String = Option(names(i)).map(_.toString).orNull
+
+  /** The rows by (name, node_id). */
+  val byName: Array[Int] = rows.sortBy(i => (Option(names(i)), ids(i)))(
+    Ordering.Tuple2(Ordering.Option(Ordering.fromLessThan(_.compareTo(_) < 0)), Ordering.Long)).toArray
+
+  /** The rows named `name`, in row order. */
+  def named(name: String): Seq[Int] =
+    Option(UTF8String.fromString(name)).toSeq.flatMap(u => rows.filter(i => u == names(i)))
+
+  /** The node_id of the first row named `name`. */
+  def idOf(name: String): Option[Long] = named(name).headOption.map(ids)
+
+  /** [[KgQueries.search]]: the non-null names containing `q`, by name, at most `limit`. */
+  def search(q: String, limit: Int): Seq[String] = Option(UTF8String.fromString(q)).toSeq.flatMap(u =>
+    byName.iterator.map(names(_)).filter(n => n != null && n.contains(u)).take(limit).map(_.toString))
+
+  /** (node_id, name, `field`) of `rows`, in that order, as a local frame. */
+  def frame(spark: SparkSession, rows: Array[Int], field: StructField)(value: Int => Any): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(i => Row(ids(i), name(i), value(i))): _*),
+      schema.add(field))
+}
+
+object NodeDirectory {
+  def apply(nodes: DataFrame): NodeDirectory = {
+    val named = nodes.select("node_id", "name")
+    val rows = named.collect()
+    new NodeDirectory(named.schema, rows.map(_.getLong(0)),
+      rows.map(r => UTF8String.fromString(r.getString(1))))
   }
 }
 

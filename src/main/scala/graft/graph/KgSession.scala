@@ -4,7 +4,7 @@ import graft.run.Pipeline
 import graft.tables.TableIO
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The single user-facing handle over a materialized knowledge graph — what
   * a kay-gee-go user gets from the frontend API + ops scripts, as a library:
@@ -45,7 +45,12 @@ import org.apache.spark.sql.types.StructType
   * folded with the pending ones in one job that observes its keys: with
   * n_new = n' − n (n the count kept), it added none when n_new = 0 and all
   * its keys not carried yet when n_new is their number; otherwise, or past
-  * `CarryCap` rows or keys, the carry is dropped. */
+  * `CarryCap` rows or keys, the carry is dropped.
+  *
+  * Node-sized reads run no job: per nodes snapshot the session collects a
+  * [[NodeDirectory]] and keeps a degree array beside it, carried like the
+  * count. [[search]], [[idOf]], [[degree]], top-k and [[reachableFrom]]'s
+  * seed, budget and rows read them; only its hops scan the edges. */
 final class KgSession(val spark: SparkSession, val workDir: String) {
   import KgSession._
 
@@ -65,8 +70,11 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   /** What this session's edges commits add, by snapshot id, until the pin passes them. */
   private val known = scala.collection.mutable.Map.empty[Int, Known]
 
-  /** (nodes id, edges id, checkpointed degree frame) of the last degree computed. */
-  private var degreePin: Option[(Int, Int, DataFrame)] = None
+  /** The nodes pin of the last directory collected, and that directory. */
+  private var dirPin: Option[(Pin, NodeDirectory)] = None
+
+  /** (directory, edges id, degrees aligned with the directory) of the last degrees read. */
+  private var degreePin: Option[(NodeDirectory, Int, Array[Long])] = None
 
   /** `view` over the current snapshot of `dir`, folded from the previous
     * pin when the chain allows it. Synchronized: the enricher reads from its
@@ -180,38 +188,44 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     synchronized { if (pins.get(edgesDir).exists(_.id < id)) known(id) = Known(Some(at), keys.distinct) }
   }
 
-  /** (node_id, name, degree) of the current snapshots: the pinned degree
-    * frame plus +1 at each endpoint of each key carried since it, or
-    * recomputed and pinned when they are not carried. */
-  private def degreeFrame: DataFrame = synchronized {
+  /** The current nodes snapshot's directory, collected once per snapshot. */
+  private def directory: NodeDirectory = synchronized {
     val n = nodesPin
-    val carried = for {
-      (nodesId, edgesId, d) <- degreePin if nodesId == n.id
-      (_, keys) <- edgeEndsSince(edgesId)
-    } yield if (keys.isEmpty) d else d.withColumn("degree", col("degree") + coalesce(
-      element_at(typedLit(keys.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)),
-        col("node_id")), lit(0L)))
-    carried.getOrElse {
+    if (!dirPin.exists(_._1.id == n.id)) dirPin = Some(n -> NodeDirectory(n.df))
+    dirPin.get._2
+  }
+
+  /** The (node_id, name, degree) rows `pick` chooses, as a local frame. The
+    * degrees are the last ones plus 1 at each endpoint in the nodes of each
+    * key carried since (a new array), or recomputed in one job. */
+  private def degreeRows(pick: (NodeDirectory, Array[Long]) => Array[Int]): DataFrame = synchronized {
+    val dir = directory
+    val (edgesId, deg) = (for {
+      (d0, edgesId, d) <- degreePin if d0 eq dir
+      (id, keys) <- edgeEndsSince(edgesId)
+      inc = keys.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)
+    } yield id -> dir.rows.map(i => d(i) + inc.getOrElse(dir.id(i), 0L)).toArray).getOrElse {
       val (edgesId, edges) = carriedEdges
-      val d = KgQueries.degree(n.df, edges).localCheckpoint()
-      degreePin = Some((n.id, edgesId, d))
-      d
+      val byId = KgQueries.degree(dirPin.get._1.df, edges).select("node_id", "degree").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      edgesId -> dir.rows.map(i => byId(dir.id(i))).toArray
     }
+    degreePin = Some((dir, edgesId, deg))
+    dir.frame(spark, pick(dir, deg), StructField("degree", LongType, nullable = false))(deg(_))
   }
 
   // ------------------------------------------------------------ query side
   /** (node count, relationship count), observed when the pins were taken. */
   def statistics(): (Long, Long) = (nodesPin.rows, edgesPin.rows)
-  def search(q: String, limit: Int = 10): Seq[String] =
-    KgQueries.search(nodes, q, limit).collect().map(_.getString(0)).toSeq
+  def search(q: String, limit: Int = 10): Seq[String] = directory.search(q, limit)
   def conceptNames(): DataFrame = KgQueries.conceptNames(nodes)
-  def degree(): DataFrame = degreeFrame
-  def mostConnected(k: Int = 5): DataFrame = KgQueries.mostConnectedOf(degreeFrame, k)
-  def lowConnectivity(k: Int = 10): DataFrame = KgQueries.lowConnectivityOf(degreeFrame, k)
+  def degree(): DataFrame = degreeRows((d, _) => d.rows.toArray)
+  def mostConnected(k: Int = 5): DataFrame = degreeRows((d, deg) => d.byName.sortBy(-deg(_)).take(k))
+  def lowConnectivity(k: Int = 10): DataFrame = degreeRows((d, deg) => d.byName.sortBy(deg(_)).take(k))
   def graphSnapshot(): (DataFrame, DataFrame) =
-    KgQueries.graphSnapshotOf(nodes, edges, degreeFrame)
+    KgQueries.graphSnapshotOf(nodes, edges, degree())
   def reachableFrom(seed: String, maxHops: Int, maxNodes: Int = Int.MaxValue): DataFrame =
-    KgQueries.reachableFrom(nodes, edges, seed, maxHops, maxNodes)
+    KgQueries.reachableFrom(directory, edges, seed, maxHops, maxNodes)
 
   // --------------------------------------------------------- mutation side
   /** S13 manual edge creation: an O(1)-row DELTA commit (never a table
@@ -223,14 +237,12 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   }
 
   /** Node id lookup by exact name (the frontend's id-addressed API needs it). */
-  def idOf(name: String): Option[Long] =
-    nodes.filter(col("name") === name).select("node_id")
-      .collect().headOption.map(_.getLong(0))
+  def idOf(name: String): Option[Long] = directory.idOf(name)
 
   // ----------------------------------------------------------- time travel
   def edgeSnapshots(): Seq[Int] = TableIO.listSnapshots(edgesDir)
   def edgesAt(snapshot: Int): DataFrame =
-    TableIO.readSnapshot(spark, edgesDir, snapshot)
+    KgQueries.mergedEdges(TableIO.readSnapshot(spark, edgesDir, snapshot))
 }
 
 object KgSession {

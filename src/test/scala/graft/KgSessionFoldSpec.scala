@@ -72,6 +72,15 @@ class KgSessionFoldSpec extends SparkSuite {
           KgQueries.mostConnected(nodes, edges, 3).collect().toSeq, step)
         assert(kg.lowConnectivity(3).collect().toSeq ==
           KgQueries.lowConnectivity(nodes, edges, 3).collect().toSeq, step)
+        // the node directory follows the nodes snapshot
+        for ((q, limit) <- Seq("" -> 100, "Learning" -> 2, "Extra" -> 100))
+          assert(kg.search(q, limit) == KgQueries.search(nodes, q, limit).as[String].collect().toSeq, step)
+        for (name <- Seq("Deep Learning", "Pre 3", "absent") ++
+            nodes.filter(col("name").startsWith("Extra")).select("name").as[String].collect())
+          assert(kg.idOf(name) == nodes.filter(col("name") === name).select("node_id").as[Long]
+            .collect().headOption, step)
+        assert(rows(kg.reachableFrom("Machine Learning", 2, 4)) ==
+          rows(KgQueries.reachableFrom(nodes, edges, "Machine Learning", 2, 4)), step)
         assert(rows(kg.edges) == rows(edges), step)
         val (ns, ls) = kg.graphSnapshot()
         val (ns0, ls0) = KgQueries.graphSnapshot(nodes, edges)

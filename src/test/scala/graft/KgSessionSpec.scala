@@ -34,6 +34,10 @@ class KgSessionSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     assert(kg.edges.filter(col("src_id") === a && col("dst_id") === b)
       .select("n_obs").collect()(0).getLong(0) == 2L)
+    // every snapshot reads through the MERGE view: the newest equals edges,
+    // an older one keeps its own state
+    assert(kg.edgesAt(kg.edgeSnapshots().max).collect().toSet == kg.edges.collect().toSet)
+    assert(kg.edgesAt(after.max).count() == 168)
   }
 
   test("simhash64 expression: codegen result equals kernel; null-safe") {

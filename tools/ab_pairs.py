@@ -14,27 +14,60 @@ does that), so build both before timing-sensitive work if that matters.
 Prints, per metric: both sides' medians, the change against the parent in
 per cent, the parent's quartiles and their distance (IQR), and in how many
 pairs the change read better, in the direction BENCHMARK.json gives the
-metric (ties count for neither side). Exits non-zero if a run fails or a
-result is not `correct`. With --out, every run's result object is appended
-to that file as one JSON line.
+metric (ties count for neither side). For a workload whose runs print
+perfbench's per-operation line (`[perfbench] ops=... ms wall/cpu: ...` on
+standard error, as kg_ops does), it also prints, per side, each operation
+type's Java-thread CPU: the median over runs of the run's median, which
+shows where a change to the end-to-end figure lands. Exits non-zero if a run
+fails or a result is not `correct`. With --out, every run's result object
+is appended to that file as one JSON line; with --log, every run's standard
+error to that file.
 """
 import argparse
 import json
+import math
+import re
 import statistics
 import subprocess
 import sys
 from pathlib import Path
 
 
+OPS_LINE = re.compile(r"\[perfbench\] ops=\d+ ms wall/cpu: (.*)")
+
+
+def op_cpu(stderr):
+    """Each operation type's median CPU ms in one run, from its per-op line
+    (`kind wall/cpu,wall/cpu,...; kind ...`); empty if there is none."""
+    for line in stderr.splitlines():
+        m = OPS_LINE.search(line)
+        if not m:
+            continue
+        out = {}
+        for part in m.group(1).split("; "):
+            kind, samples = part.split(" ", 1)
+            cpu = [float(x.split("/")[1]) for x in samples.split(",")]
+            cpu = [x for x in cpu if not math.isnan(x)]
+            if cpu:
+                out[kind] = statistics.median(cpu)
+        return out
+    return {}
+
+
 def run_once(checkout, workload, seed, seconds, trace, log):
+    """The run's result object and `op_cpu` of its standard error."""
     cmd = ["python3", "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
-    r = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=log,
+    r = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                        stdin=subprocess.DEVNULL, text=True)
+    if log:
+        log.write(r.stderr)
+        log.flush()
     lines = r.stdout.strip().splitlines()
     if r.returncode != 0 or not lines:
-        sys.exit(f"{checkout}: run.py seed {seed} exited {r.returncode} without a result")
-    return json.loads(lines[-1])
+        sys.exit(f"{checkout}: run.py seed {seed} exited {r.returncode} without a result\n"
+                 + r.stderr[-2000:])
+    return json.loads(lines[-1]), op_cpu(r.stderr)
 
 
 def benchmark(checkout, trace):
@@ -66,15 +99,17 @@ def main():
     seconds, better = benchmark(a.change, a.trace)
     sides = {"parent": a.parent, "change": a.change}
     results = {"parent": [], "change": []}
+    ops = {"parent": [], "change": []}
     bad = []
-    log = open(a.log, "a") if a.log else subprocess.DEVNULL
+    log = open(a.log, "a") if a.log else None
     out = open(a.out, "a") if a.out else None
     for i in range(a.pairs):
         seed = a.seed0 + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_once(sides[side], a.workload, seed, seconds, a.trace, log)
+            res, cpu = run_once(sides[side], a.workload, seed, seconds, a.trace, log)
             results[side].append(res)
+            ops[side].append(cpu)
             if not res.get("correct") or res.get("failed", 0):
                 bad.append(f"{side} seed {seed}: correct={res.get('correct')} failed={res.get('failed')}")
             if out:
@@ -102,6 +137,18 @@ def main():
         delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
         print(f"{name:<36} {pm:>10.4g} {cm:>10.4g} {delta:>8}  "
               f"{q1:>9.4g}-{q3:<9.4g} ({q3 - q1:.3g})  {wins}/{a.pairs}")
+    kinds = sorted({k for side in ops.values() for run in side for k in run})
+    if kinds:
+        print("\nJava-thread CPU per operation, ms: the median over runs of each run's median")
+        print(f"{'operation':<36} {'parent':>10} {'change':>10} {'delta':>8}")
+        for kind in kinds:
+            p, c = ([run[kind] for run in ops[s] if kind in run] for s in ("parent", "change"))
+            if not p or not c:
+                print(f"{kind:<36} missing from one side")
+                continue
+            pm, cm = statistics.median(p), statistics.median(c)
+            delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
+            print(f"{kind:<36} {pm:>10.4g} {cm:>10.4g} {delta:>8}")
     if bad:
         print("\nnot correct:\n  " + "\n  ".join(bad))
         sys.exit(1)

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -224,23 +225,16 @@ object KgQueries {
     * semantics without needing write-order metadata in the chain). */
   val ManualDescriptionPrefix = "Manually added: "
 
-  /** The single manual edge row, full edge-table schema. `provType` is the
-    * target table's provenance array type (its doc-id field type varies by
-    * table). */
-  private def edgeRow(spark: SparkSession,
-      provType: org.apache.spark.sql.types.DataType,
-      srcId: Long, dstId: Long, pred: String): DataFrame = {
-    // one projection: each withColumn would be its own analysis pass; the
-    // row with its schema, as a tuple's encoder costs more than the rest
-    spark.createDataFrame(java.util.List.of(Row(pred)),
-        new org.apache.spark.sql.types.StructType().add("pred", "string"))
-      .select(lit(srcId).as("src_id"), lit(dstId).as("dst_id"), col("pred"),
-        Materialize.normPred(col("pred")).as("pred_norm"),
-        lit(1.0).as("strength"),
-        lit(1L).as("n_obs"),
-        lit(s"$ManualDescriptionPrefix$pred").as("description"),
-        array().cast(provType).as("provenance"),
-        Materialize.CreatedAt.as("created_at"))
+  /** The single manual edge row in the column order of `schema`, an edge
+    * table's, built on the driver: `pred_norm` and `created_at` are
+    * [[Materialize]]'s columns evaluated on a literal in `spark`'s time zone. */
+  private def edgeRow(spark: SparkSession, schema: StructType,
+      srcId: Long, dstId: Long, pred: String): Row = {
+    val value = Map[String, Any]("src_id" -> srcId, "dst_id" -> dstId, "pred" -> pred,
+      "pred_norm" -> Bridge.eval(spark, Materialize.normPred(lit(pred))),
+      "strength" -> 1.0, "n_obs" -> 1L, "description" -> s"$ManualDescriptionPrefix$pred",
+      "provenance" -> Seq.empty, "created_at" -> Bridge.eval(spark, Materialize.CreatedAt))
+    Row.fromSeq(schema.fieldNames.toSeq.map(value))
   }
 
   /** Read-side MERGE over a (possibly delta-chained) union of edge rows: one
@@ -270,20 +264,20 @@ object KgQueries {
     * frame-level MERGE (full groupBy over the input frame; fine for tests
     * and dictionary-scale frames). The TABLE path is [[addEdgeDelta]]. */
   def addEdge(edges: DataFrame, srcId: Long, dstId: Long, pred: String): DataFrame =
-    mergedEdges(edges.unionByName(edgeRow(edges.sparkSession,
-      edges.schema("provenance").dataType, srcId, dstId, pred)))
+    mergedEdges(edges.unionByName(edges.sparkSession.createDataFrame(java.util.List.of(
+      edgeRow(edges.sparkSession, edges.schema, srcId, dstId, pred)), edges.schema)))
 
   /** S13 scale path: a single-row REST-style add as an O(1) DELTA commit —
     * the write volume is the ONE new row ([[graft.tables.TableIO.commitDelta]]),
     * never a table rewrite; MERGE semantics are applied at read time by
-    * [[mergedEdges]]. The row's plan is a local relation, so its collect and
-    * the driver-side write of the delta run no Spark job. Returns the
-    * committed snapshot's id. */
+    * [[mergedEdges]]. The row is built on the driver and written there, so
+    * the add plans no query and runs no Spark job. Returns the committed
+    * snapshot's id. */
   def addEdgeDelta(spark: SparkSession, tableDir: String,
       srcId: Long, dstId: Long, pred: String): Int = {
-    val provType = graft.tables.TableIO.currentSchema(tableDir)("provenance").dataType
-    graft.tables.TableIO.commitDelta(
-      edgeRow(spark, provType, srcId, dstId, pred), tableDir, "add_edge")
+    val schema = graft.tables.TableIO.currentSchema(tableDir)
+    graft.tables.TableIO.commitDeltaRows(spark, schema, tableDir, "add_edge")(
+      Seq(edgeRow(spark, schema, srcId, dstId, pred)))
   }
 
   /** G8: graph snapshot export (nodes + links, id-addressed). */

@@ -38,9 +38,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * what two of its own commits add, recorded after the commit (which holds
   * no lock) unless a read folded it first: a tick's keys, when it lands on
   * the snapshot its pairs were picked at ([[commitPicks]]), and nothing, for
-  * an [[addEdge]] of a carried key. Reading the count or the keys over known
-  * snapshots runs no job and leaves them pending. Merged on read: [[edges]],
-  * [[graphSnapshot]], [[reachableFrom]] and a re-pin first merge the pending
+  * an [[addEdge]] of a carried key. Reading the count, the carried keys or
+  * the edge keys over known snapshots runs no job and leaves them pending:
+  * [[reachableFrom]]'s hops, the enricher's re-pin and the degree
+  * recompute read the pin's keys ∪ the pending snapshots' known keys.
+  * Merged on read: [[edges]] and [[graphSnapshot]] first merge the pending
   * files in one job, which checks the count kept. Any other snapshot is
   * folded with the pending ones in one job that observes its keys: with
   * n_new = n' − n (n the count kept), it added none when n_new = 0 and all
@@ -61,9 +63,10 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
 
   /** One table's pinned snapshot `id`: its row count, the keys its folds
     * carry and, with `parts` partitions, its view localCheckpointed but for
-    * the `pending` snapshots, applied to `rows` and `carry` only. */
+    * the `pending` snapshots, applied to `rows`, `carry` and `pendingKeys`
+    * (the new keys they add) only. */
   private final case class Pin(id: Int, df: DataFrame, rows: Long, parts: Int,
-      carry: Option[Carry] = None, pending: Seq[TableIO.Snap] = Nil)
+      carry: Option[Carry] = None, pending: Seq[TableIO.Snap] = Nil, pendingKeys: Seq[Row] = Nil)
 
   private val pins = scala.collection.mutable.Map.empty[String, Pin]
 
@@ -103,12 +106,13 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
       view: DataFrame => DataFrame, merge: Boolean = false): Pin = {
     val adds = newer.map(s => s -> known.get(s.id).filter(k =>
       dir == edgesDir && k.parent.forall(_ == s.deltaOf)).map(_.keys.map(_ -> s.id)))
-    val rows = p.rows + adds.flatMap(_._2).map(_.size).sum
-    val carry = p.carry.map(c => c.copy(keys = adds.flatMap(_._2).flatten.toMap ++ c.keys))
+    val newKeys = adds.flatMap(_._2).flatten
+    val rows = p.rows + newKeys.size
+    val carry = p.carry.map(c => c.copy(keys = newKeys.toMap ++ c.keys))
     val unknown = adds.collect { case (s, None) => s }
     val id = newer.headOption.fold(p.id)(_.id)
-    if (unknown.isEmpty && !merge) return p.copy(id = id, rows = rows,
-      carry = carry.filter(_.keys.size <= CarryCap), pending = newer ++ p.pending)
+    if (unknown.isEmpty && !merge) return p.copy(id = id, rows = rows, carry = carry.filter(
+      _.keys.size <= CarryCap), pending = newer ++ p.pending, pendingKeys = newKeys.map(_._1) ++ p.pendingKeys)
     val keyed = carry.isDefined && unknown.map(_.rows).sum <= CarryCap
     val (pin, keys) = checkpointed(dir, id, Some(p), (if (keyed) newer.filterNot(unknown.contains)
       else newer) ++ p.pending, if (keyed) unknown else Nil, view)
@@ -148,26 +152,35 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
     * chain verbatim. Identity on an already-merged table. */
   private def edgesPin: Pin = pinned(edgesDir)(KgQueries.mergedEdges)
 
-  /** [[edgesPin]] with its pending snapshots merged. */
-  private def edgesMerged: Pin = synchronized {
+  /** The current edges' snapshot id and (src_id, dst_id, pred) keys, one row
+    * each, with no merge: the pin's ∪ its pending snapshots' known keys. A
+    * known tick's picks are new, distinct keys and a known add adds none. */
+  private def edgeKeys: (Int, DataFrame) = synchronized {
     val p = edgesPin
-    if (p.pending.nonEmpty) pins(edgesDir) = fold(edgesDir, p, Nil, KgQueries.mergedEdges, merge = true)
-    pins(edgesDir)
+    val keys = p.df.select("src_id", "dst_id", "pred")
+    p.id -> (if (p.pendingKeys.isEmpty) keys
+      else keys.unionByName(spark.createDataFrame(java.util.List.of(p.pendingKeys: _*), keys.schema)))
   }
 
   def nodes: DataFrame = nodesPin.df
 
-  /** Current edges, one row per (src_id, dst_id, pred) key. */
-  def edges: DataFrame = edgesMerged.df
+  /** Current edges, one row per (src_id, dst_id, pred) key: the pin with its
+    * pending snapshots merged. */
+  def edges: DataFrame = synchronized {
+    val p = edgesPin
+    if (p.pending.nonEmpty) pins(edgesDir) = fold(edgesDir, p, Nil, KgQueries.mergedEdges, merge = true)
+    pins(edgesDir).df
+  }
 
   def triples: DataFrame = pinned(Pipeline.triplesDir(conf))(identity).df
 
-  /** The current edges and their snapshot id; from here on the edges pin
-    * carries the keys its folds add, for [[edgeEndsSince]]. */
+  /** The current edges' snapshot id and keys ([[edgeKeys]]); from here on
+    * the edges pin carries the keys its folds add, for [[edgeEndsSince]]. */
   private[graft] def carriedEdges: (Int, DataFrame) = synchronized {
-    val e = edgesMerged
+    val keys = edgeKeys
+    val e = pins(edgesDir)
     if (e.carry.isEmpty) pins(edgesDir) = e.copy(carry = Some(Carry(e.id, Map.empty)))
-    (e.id, e.df)
+    keys
   }
 
   /** The current edges snapshot id and the non-null endpoints of each key
@@ -225,7 +238,7 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
   def graphSnapshot(): (DataFrame, DataFrame) =
     KgQueries.graphSnapshotOf(nodes, edges, degree())
   def reachableFrom(seed: String, maxHops: Int, maxNodes: Int = Int.MaxValue): DataFrame =
-    KgQueries.reachableFrom(directory, edges, seed, maxHops, maxNodes)
+    KgQueries.reachableFrom(directory, edgeKeys._2, seed, maxHops, maxNodes)
 
   // --------------------------------------------------------- mutation side
   /** S13 manual edge creation: an O(1)-row DELTA commit (never a table

@@ -5,21 +5,37 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
   InMemoryFileIndex, LogicalRelation, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-/** Column ⇄ Expression bridge for custom Catalyst expressions,
-  * `StructType.asNullable`, a parquet read of a given file list and a
-  * parquet write of rows held on the driver.
+/** Column ⇄ Expression bridge for custom Catalyst expressions, a column's
+  * value on the driver, `StructType.asNullable`, a parquet read of a given
+  * file list and a parquet write of rows held on the driver.
   * `ExpressionUtils` is `private[sql]` in Spark 4, so this lives in the
   * spark.sql package tree — the standard extension-library pattern. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The value of `c`, a column over literals, as a `Row` holds it: resolved
+    * as `spark`'s analyzer resolves it (its functions, its session time
+    * zone) and evaluated on the driver, with no optimizer or physical plan. */
+  def eval(spark: SparkSession, c: Column): Any = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.withActive {
+      val e = ReplaceExpressions(session.sessionState.analyzer.execute(
+        Project(Seq(Alias(ColumnNodeToExpressionConverter(c.node), "v")()), OneRowRelation())))
+        .expressions.head
+      CatalystTypeConverters.convertToScala(e.eval(), e.dataType)
+    }
+  }
+
   /** `s` with every field, nested ones included, nullable: the schema a
     * file-source read reports (`asNullable` is `private[spark]`). */
   def asNullable(s: StructType): StructType = s.asNullable

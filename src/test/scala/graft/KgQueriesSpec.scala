@@ -107,6 +107,49 @@ class KgQueriesSpec extends SparkSuite {
     assert(over == ("fixture edge", 2L))
   }
 
+  test("addEdge's row, built on the driver, equals the projection it replaced, in each session time zone") {
+    import graft.tables.TableIO
+    import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+    import org.apache.spark.sql.types.{DataType, StructType}
+    /** The manual edge row as a one-row frame's projection: the oracle. */
+    def projected(s: SparkSession, provType: DataType, src: Long, dst: Long, pred: String): DataFrame =
+      s.createDataFrame(java.util.List.of(Row(pred)), new StructType().add("pred", "string"))
+        .select(lit(src).as("src_id"), lit(dst).as("dst_id"), col("pred"),
+          Materialize.normPred(col("pred")).as("pred_norm"), lit(1.0).as("strength"),
+          lit(1L).as("n_obs"), lit(s"${KgQueries.ManualDescriptionPrefix}$pred").as("description"),
+          array().cast(provType).as("provenance"), Materialize.CreatedAt.as("created_at"))
+    def sorted(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+    val preds = Seq("Hand  Made", " two   spaces ", "UPPER Case", "Ärger ÜBER straße",
+      "İstanbul ΟΔΟΣ", "中文 关系", "")
+    for (tz <- Seq("UTC", "America/Los_Angeles")) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.session.timeZone", tz)
+      val dir = tmpDir("addEdgeRow")
+      TableIO.commitSnapshot(edges, dir, "edges")
+      val schema = TableIO.currentSchema(dir)
+      val oracle = preds.zipWithIndex.map { case (p, i) =>
+        projected(s, schema("provenance").dataType, 9L, i.toLong, p)
+      }.reduce(_ unionByName _).select(schema.fieldNames.toSeq.map(col): _*)
+      val ids = preds.indices.map(i => KgQueries.addEdgeDelta(s, dir, 9L, i.toLong, preds(i)))
+      assert(sorted(TableIO.readSnapshots(s, dir, ids)) == sorted(oracle), tz)
+      val framed = preds.zipWithIndex.map { case (p, i) =>
+        KgQueries.addEdge(s.createDataFrame(java.util.List.of[Row](), schema), 9L, i.toLong, p)
+      }.reduce(_ unionByName _)
+      assert(sorted(framed) == sorted(oracle), tz)
+    }
+    // the time zone is the session's: midnight in Los Angeles is 08:00 UTC
+    val stamps = Seq("UTC", "America/Los_Angeles").map { tz =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.session.timeZone", tz)
+      val dir = tmpDir("addEdgeTz")
+      TableIO.commitSnapshot(edges, dir, "edges")
+      KgQueries.addEdgeDelta(s, dir, 9L, 8L, "Hand Made")
+      TableIO.readCurrent(s, dir).filter(col("src_id") === 9L)
+        .select("created_at").head().getTimestamp(0).getTime
+    }
+    assert(stamps(1) - stamps(0) == 8 * 3600 * 1000L)
+  }
+
   test("cleanup drops empty-pred edges and orphan nodes") {
     val dirtyE = edges.select("src_id", "dst_id", "pred")
       .union(Seq((7L, 8L, " ")).toDF("src_id", "dst_id", "pred"))

@@ -152,6 +152,13 @@ class KgSessionPinSpec extends SparkSuite {
     assert(topJobs == 0, s"mostConnected(5) after a carried re-add ran $topJobs jobs")
     assert(top == KgQueries.mostConnected(kg.nodes, merged, 5).collect().toSeq)
     assert(kg.statistics() == ((5L, merged.count())))
+    // reachableFrom reads the pinned keys and the tick's, not merged rows:
+    // its hops only; b is one hop from a over the tick's key alone
+    val seed = kg.nodes.filter(col("node_id") === a).select("name").as[String].head()
+    val (reach, reachJobs) = withJobCount(kg.reachableFrom(seed, 2).collect().toSeq)
+    assert(reachJobs <= 2, s"reachableFrom(_, 2) after known writes ran $reachJobs jobs")
+    assert(reach == KgQueries.reachableFrom(kg.nodes, merged, seed, 2).collect().toSeq)
+    assert(reach.exists(r => r.getLong(0) == b && r.getInt(2) == 1))
     // the next read of rows merges the tick and the re-add in one job
     val (edges, edgesJobs) = withJobCount(kg.edges)
     assert(edgesJobs == 1, s"kg.edges after known writes ran $edgesJobs jobs")

@@ -1,6 +1,9 @@
 package graft
 
 import graft.graph.{KgQueries, KgSession}
+import graft.run.{Enricher, Pipeline}
+import graft.tables.TableIO
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -32,16 +35,36 @@ class ReachableFromSpec extends SparkSuite {
   }
 
   test("reachableFrom over a pinned session runs one job per hop") {
-    val kg = KgSession.open(spark, GraphFixture.commit(spark, tmpDir("bfsjobs")).workDir)
+    val c = GraphFixture.commit(spark, tmpDir("bfsjobs"))
+    val edgesDir = Pipeline.edgesDir(c)
+    val kg = KgSession.open(spark, c.workDir)
+    def perHop(when: String): Unit = {
+      val (nodes, edges) = (kg.nodes, KgQueries.mergedEdges(TableIO.readCurrent(spark, edgesDir)))
+      for (h <- Seq(2, 3); seed <- GraphFixture.Names) {
+        val (got, jobs) = withJobCount(kg.reachableFrom(seed, h).collect().toSeq)
+        assert(jobs <= h, s"$when: $seed, maxHops $h: $jobs jobs")
+        assert(got == KgQueries.reachableFrom(nodes, edges, seed, h).collect().toSeq, s"$when: $seed")
+      }
+    }
     kg.search("") // pins the nodes and collects their directory
     kg.edges
-    for (h <- Seq(2, 3); seed <- Seq("Machine Learning", "Deep Learning")) {
-      val jobs = jobsOf(kg.reachableFrom(seed, h).collect())
-      assert(jobs <= h, s"$seed, maxHops $h: $jobs jobs")
-    }
+    perHop("merged edges")
     assert(kg.reachableFrom("Deep Learning", 3).select("name", "hops").as[(String, Int)]
       .collect().toSeq == Seq("Deep Learning" -> 0, "Machine Learning" -> 1,
         "Neural Network" -> 1, "Gradient Descent" -> 2))
+
+    // a tick and a carried re-add, with no read of rows after them: the
+    // hops read the pinned keys and the tick's, and merge nothing
+    val mentions = GraphFixture.Names.combinations(2).zipWithIndex.flatMap { case (Seq(a, b), d) =>
+      Seq((s"doc$d", a), (s"doc$d", b))
+    }.toSeq.toDF("doc_id", "canonical")
+    assert(new Enricher(kg, mentions, Enricher.Conf(minDocs = 1, batch = 2)).runOnce() == 2L)
+    kg.statistics() // folds the tick's known keys, so the re-add below is carried
+    val (a, b, p) = TableIO.readCurrent(spark, edgesDir).filter(col("pred") === "CoOccursWith")
+      .select("src_id", "dst_id", "pred").as[(Long, Long, String)].head()
+    kg.addEdge(a, b, p)
+    perHop("known writes pending")
+    assert(jobsOf(kg.edges) == 1, "the pending deltas are merged on the first read of rows")
   }
 }
 

@@ -14,7 +14,11 @@ does that), so build both before timing-sensitive work if that matters.
 Prints, per metric: both sides' medians, the change against the parent in
 per cent, the parent's quartiles and their distance (IQR), and in how many
 pairs the change read better, in the direction BENCHMARK.json gives the
-metric (ties count for neither side). For a workload whose runs print
+metric (ties count for neither side), and the claim rule's verdict: a
+gain may be claimed only when the change wins at least nine tenths of the
+pairs and its median is better than the parent's by more than the parent's
+IQR; `win≥9/10` and `gap>IQR` say whether each half holds, `claim` whether
+both do over at least ten pairs. For a workload whose runs print
 perfbench's per-operation line (`[perfbench] ops=... ms wall/cpu: ...` on
 standard error, as kg_ops does), it also prints, per side, each operation
 type's Java-thread CPU: the median over runs of the run's median, which
@@ -123,7 +127,7 @@ def main():
     print(f"\n{a.workload}, {a.pairs} pairs, seeds {a.seed0}-{a.seed0 + a.pairs - 1}, "
           f"{seconds}s runs, trace {a.trace}; values are parent/change")
     print(f"{'metric':<36} {'parent':>10} {'change':>10} {'delta':>8}  "
-          f"{'parent q1-q3 (IQR)':>28}  wins")
+          f"{'parent q1-q3 (IQR)':>28}  {'wins':>5}  win≥9/10  gap>IQR  claim")
     for name in sorted(better):
         p = [r["metrics"][name]["value"] for r in results["parent"] if name in r["metrics"]]
         c = [r["metrics"][name]["value"] for r in results["change"] if name in r["metrics"]]
@@ -135,8 +139,11 @@ def main():
         sign = 1 if better[name] == "higher" else -1
         wins = sum(1 for x, y in zip(p, c) if sign * (y - x) > 0)
         delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
+        won, gap = 10 * wins >= 9 * a.pairs, sign * (cm - pm) > q3 - q1
+        yes = {True: "yes", False: "no"}
         print(f"{name:<36} {pm:>10.4g} {cm:>10.4g} {delta:>8}  "
-              f"{q1:>9.4g}-{q3:<9.4g} ({q3 - q1:.3g})  {wins}/{a.pairs}")
+              f"{q1:>9.4g}-{q3:<9.4g} ({q3 - q1:.3g})  {f'{wins}/{a.pairs}':>5}  "
+              f"{yes[won]:<8}  {yes[gap]:<7}  {'gain' if won and gap and a.pairs >= 10 else 'none'}")
     kinds = sorted({k for side in ops.values() for run in side for k in run})
     if kinds:
         print("\nJava-thread CPU per operation, ms: the median over runs of each run's median")

@@ -154,12 +154,14 @@ final class KgSession(val spark: SparkSession, val workDir: String) {
 
   /** The current edges' snapshot id and (src_id, dst_id, pred) keys, one row
     * each, with no merge: the pin's ∪ its pending snapshots' known keys. A
-    * known tick's picks are new, distinct keys and a known add adds none. */
+    * known tick's picks are new, distinct keys and a known add adds none.
+    * The union keeps the pin's partitions: the local relation adds no task. */
   private def edgeKeys: (Int, DataFrame) = synchronized {
     val p = edgesPin
     val keys = p.df.select("src_id", "dst_id", "pred")
     p.id -> (if (p.pendingKeys.isEmpty) keys
-      else keys.unionByName(spark.createDataFrame(java.util.List.of(p.pendingKeys: _*), keys.schema)))
+      else keys.unionByName(spark.createDataFrame(java.util.List.of(p.pendingKeys: _*), keys.schema))
+        .coalesce(math.max(1, p.parts)))
   }
 
   def nodes: DataFrame = nodesPin.df

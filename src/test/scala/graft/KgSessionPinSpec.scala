@@ -138,6 +138,7 @@ class KgSessionPinSpec extends SparkSuite {
     }.toSeq.toDF("doc_id", "canonical")
     val enricher = new Enricher(kg, mentions, Enricher.Conf(minDocs = 1, batch = 1))
     def merged = KgQueries.mergedEdges(TableIO.readCurrent(spark, edgesDir))
+    val parts = kg.edges.rdd.getNumPartitions
     kg.mostConnected(5).collect() // pins the degree frame; the edges pin carries keys
     assert(enricher.runOnce() == 1L)
     val (stats, statJobs) = withJobCount(kg.statistics())
@@ -159,6 +160,10 @@ class KgSessionPinSpec extends SparkSuite {
     assert(reachJobs <= 2, s"reachableFrom(_, 2) after known writes ran $reachJobs jobs")
     assert(reach == KgQueries.reachableFrom(kg.nodes, merged, seed, 2).collect().toSeq)
     assert(reach.exists(r => r.getLong(0) == b && r.getInt(2) == 1))
+    // each hop scans the pin's partitions: the tick's keys add no task
+    val reachTasks = withTaskCount(kg.reachableFrom(seed, 2).collect())._2
+    assert(reachTasks == reachJobs * parts,
+      s"reachableFrom's $reachJobs hops ran $reachTasks tasks over a $parts-partition pin")
     // the next read of rows merges the tick and the re-add in one job
     val (edges, edgesJobs) = withJobCount(kg.edges)
     assert(edgesJobs == 1, s"kg.edges after known writes ran $edgesJobs jobs")

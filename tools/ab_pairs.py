@@ -18,7 +18,10 @@ metric (ties count for neither side), and the claim rule's verdict: a
 gain may be claimed only when the change wins at least nine tenths of the
 pairs and its median is better than the parent's by more than the parent's
 IQR; `win≥9/10` and `gap>IQR` say whether each half holds, `claim` whether
-both do over at least ten pairs. For a workload whose runs print
+both do over at least ten pairs. For a metric with a `bound` it also prints
+the change's IQR and `steady`: whether each side's IQR is within the bound
+times the parent's median, the spread the benchmark's check allows before
+it cannot tell the two sides apart. For a workload whose runs print
 perfbench's per-operation line (`[perfbench] ops=... ms wall/cpu: ...` on
 standard error, as kg_ops does), it also prints, per side, each operation
 type's Java-thread CPU: the median over runs of the run's median, which
@@ -75,10 +78,12 @@ def run_once(checkout, workload, seed, seconds, trace, log):
 
 
 def benchmark(checkout, trace):
-    """BENCHMARK.json's run length and, per metric, which way is better."""
+    """BENCHMARK.json's run length and, per metric, which way is better and
+    its bound (None for a metric without one)."""
     spec = json.loads((Path(checkout) / "BENCHMARK.json").read_text())
-    return spec["run_seconds"], {m["name"]: m["better"]
-                                 for m in spec["per_layer" if trace else "end_to_end"]}
+    metrics = spec["per_layer" if trace else "end_to_end"]
+    return (spec["run_seconds"], {m["name"]: m["better"] for m in metrics},
+            {m["name"]: m.get("bound") for m in metrics})
 
 
 def quartiles(xs):
@@ -100,7 +105,7 @@ def main():
     ap.add_argument("--log", help="file for the runs' standard error (default: discarded)")
     a = ap.parse_args()
 
-    seconds, better = benchmark(a.change, a.trace)
+    seconds, better, bound = benchmark(a.change, a.trace)
     sides = {"parent": a.parent, "change": a.change}
     results = {"parent": [], "change": []}
     ops = {"parent": [], "change": []}
@@ -127,7 +132,8 @@ def main():
     print(f"\n{a.workload}, {a.pairs} pairs, seeds {a.seed0}-{a.seed0 + a.pairs - 1}, "
           f"{seconds}s runs, trace {a.trace}; values are parent/change")
     print(f"{'metric':<36} {'parent':>10} {'change':>10} {'delta':>8}  "
-          f"{'parent q1-q3 (IQR)':>28}  {'wins':>5}  win≥9/10  gap>IQR  claim")
+          f"{'parent q1-q3 (IQR)':>28}  {'wins':>5}  win≥9/10  gap>IQR  claim  "
+          f"{'change IQR':>10}  steady")
     for name in sorted(better):
         p = [r["metrics"][name]["value"] for r in results["parent"] if name in r["metrics"]]
         c = [r["metrics"][name]["value"] for r in results["change"] if name in r["metrics"]]
@@ -141,9 +147,13 @@ def main():
         delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
         won, gap = 10 * wins >= 9 * a.pairs, sign * (cm - pm) > q3 - q1
         yes = {True: "yes", False: "no"}
+        c1, c3 = quartiles(c)
+        steady = "n/a" if bound[name] is None else \
+            yes[max(q3 - q1, c3 - c1) <= bound[name] * abs(pm)]
         print(f"{name:<36} {pm:>10.4g} {cm:>10.4g} {delta:>8}  "
               f"{q1:>9.4g}-{q3:<9.4g} ({q3 - q1:.3g})  {f'{wins}/{a.pairs}':>5}  "
-              f"{yes[won]:<8}  {yes[gap]:<7}  {'gain' if won and gap and a.pairs >= 10 else 'none'}")
+              f"{yes[won]:<8}  {yes[gap]:<7}  {'gain' if won and gap and a.pairs >= 10 else 'none':<5}  "
+              f"{c3 - c1:>10.3g}  {steady}")
     kinds = sorted({k for side in ops.values() for run in side for k in run})
     if kinds:
         print("\nJava-thread CPU per operation, ms: the median over runs of each run's median")
